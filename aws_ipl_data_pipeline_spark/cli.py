@@ -90,8 +90,10 @@ def cmd_silver(args) -> None:
             # delete all of X but rewrite only innings 1. Validate by
             # resolving the predicate against a match-only schema —
             # any other column reference fails analysis.
+            from aws_ipl_data_pipeline_spark.sources.readers import local_frame
+
             try:
-                spark.createDataFrame([], "match string").where(args.replace_where)
+                local_frame(spark, "match string").where(args.replace_where)
             except Exception:
                 sys.exit(
                     "--replace-where on the parquet branch must be match-grain"
@@ -131,8 +133,6 @@ def cmd_silver(args) -> None:
 
 
 def cmd_gold(args) -> None:
-    from pyspark.sql import functions as F
-
     from aws_ipl_data_pipeline_spark.schemas import SILVER_DELIVERIES
     from aws_ipl_data_pipeline_spark.sources.readers import read_table
     from aws_ipl_data_pipeline_spark.sources.writers import HAVE_DELTA, delete_path
@@ -144,101 +144,23 @@ def cmd_gold(args) -> None:
     spark = _spark("gold")
     tfmt = "delta" if HAVE_DELTA else "parquet"
 
-    # same-format read-back as cmd_silver's write (ADVICE r7, high);
-    # schema pin guards partition-value inference on parquet. LAZY
-    # (r9): constructing the file-source relation lists every silver
-    # partition dir eagerly — O(#matches) listing the scoped
-    # incremental path never needs (it reads the affected match dirs
-    # directly); only bootstrap and full mode pay it.
-    _silver_memo: dict = {}
-
-    def full_silver():
-        if "df" not in _silver_memo:
-            _silver_memo["df"] = read_table(
-                spark, args.silver, fmt=tfmt, schema=SILVER_DELIVERIES
-            )
-        return _silver_memo["df"]
-
     if getattr(args, "gold_mode", "full") == "incremental":
-        # Incremental maintenance (VERDICT r7 #8): same partials layout,
-        # bootstrap and tombstone semantics as the streaming ST4 branch
-        # (streaming/pipeline.py), so CLI and stream runs can alternate
+        # Incremental maintenance (VERDICT r7 #8): the streaming ST4
+        # branch's own routine, so CLI and stream runs can alternate
         # over one gold directory. --affected-matches scopes the
         # partials rewrite to a rescrape's matches; without it every
         # match in silver is (re)built — a bootstrap-equivalent refresh.
         from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-            GOLD_FROM_PARTIALS,
-            PARTIAL_BUILDERS,
-            with_match_tombstones,
-            write_partials,
-        )
-        from aws_ipl_data_pipeline_spark.sources.readers import table_exists
-
-        exists = {
-            pname: table_exists(
-                spark,
-                f"{args.out_dir}/_partials_{pname}",
-                fmt=tfmt,
-                unmarked_data="absent",
-            )
-            for pname in PARTIAL_BUILDERS
-        }
-        affected = (
-            [m.strip() for m in args.affected_matches.split(",") if m.strip()]
-            if args.affected_matches
-            else None
-        )
-        if affected and any(exists.values()):
-            # direct-dir read of just the affected matches' silver
-            # partitions (r9): `.where(match.isin(...))` on the full
-            # table still LISTS every partition dir before pruning —
-            # measured ~7 s pure listing at 4000 matches for a 1-match
-            # batch vs 0.16 s reading the dirs directly
-            from aws_ipl_data_pipeline_spark.sources.readers import (
-                read_partition_dirs,
-            )
-
-            scoped = read_partition_dirs(
-                spark, args.silver, "match", affected,
-                fmt=tfmt, schema=SILVER_DELIVERIES,
-            ).localCheckpoint(eager=True)
-            affected_df = spark.createDataFrame([(m,) for m in affected], "match string")
-        from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-            StalePartialsLayout,
+            refresh_incremental_gold,
         )
 
-        for pname, pbuilder in PARTIAL_BUILDERS.items():
-            ppath = f"{args.out_dir}/_partials_{pname}"
-            if affected and exists[pname]:
-                pdf = with_match_tombstones(pbuilder(scoped), affected_df)
-                try:
-                    write_partials(
-                        pdf, ppath, scoped=True, fmt=tfmt,
-                        affected_matches=affected_df,
-                    )
-                except StalePartialsLayout:
-                    # pre-r9 per-match layout on disk: the authoritative
-                    # full refresh migrates it to bucketed partitions
-                    write_partials(
-                        pbuilder(full_silver()), ppath, scoped=False, fmt=tfmt
-                    )
-            else:
-                # bootstrap / full refresh: (re)build partials for every
-                # match in silver (a missing table must never be merged
-                # from a scoped rewrite — it would truncate gold);
-                # write_partials makes this write STATIC — the refresh
-                # is authoritative, and a dynamic overwrite would keep
-                # the bucket of any match retracted from silver
-                # since the last run (r8 self-review)
-                write_partials(pbuilder(full_silver()), ppath, scoped=False, fmt=tfmt)
-        partials = {
-            pname: read_table(spark, f"{args.out_dir}/_partials_{pname}", fmt=tfmt)
-            for pname in PARTIAL_BUILDERS
-        }
-        gold_frames = {
-            name: finisher(partials[pname])
-            for name, (pname, finisher) in GOLD_FROM_PARTIALS.items()
-        }
+        affected = [
+            m.strip() for m in (args.affected_matches or "").split(",") if m.strip()
+        ]
+        gold_frames = refresh_incremental_gold(
+            spark, args.silver, args.out_dir, affected,
+            fmt=tfmt, schema=SILVER_DELIVERIES,
+        )
     else:
         from aws_ipl_data_pipeline_spark.plans.gold import (
             batsman_stats,
@@ -250,11 +172,14 @@ def cmd_gold(args) -> None:
             PARTIAL_BUILDERS as _PB,
         )
 
+        # same-format read-back as cmd_silver's write (ADVICE r7, high);
+        # schema pin guards partition-value inference on parquet
+        silver = read_table(spark, args.silver, fmt=tfmt, schema=SILVER_DELIVERIES)
         gold_frames = {
-            "gold_batsman_stats": batsman_stats(full_silver()),
-            "gold_bowler_stats": bowler_stats(full_silver()),
-            "gold_team_stats": team_stats(full_silver()),
-            "gold_tournament_standings": tournament_standings(full_silver()),
+            "gold_batsman_stats": batsman_stats(silver),
+            "gold_bowler_stats": bowler_stats(silver),
+            "gold_team_stats": team_stats(silver),
+            "gold_tournament_standings": tournament_standings(silver),
         }
         # full mode does not maintain partials — invalidate any left by
         # a previous incremental run so a later switch back re-bootstraps

@@ -48,6 +48,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aws_ipl_data_pipeline_spark.sources.readers import local_frame
+
 
 def normalized_text(col: Column | str = "text") -> Column:
     """lower + collapse whitespace + trim — canonical text form."""
@@ -351,23 +353,6 @@ def _band_bucket_sql(bands: int, rows_per_band: int) -> str:
         + ",".join(f"_h{b * rows_per_band + r}" for r in range(rows_per_band))
         + ")"
         for b in range(bands)
-    )
-
-
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 64, seed: int = 42
-) -> DataFrame:
-    """MinHash signature per document from a (_id, shingle) frame.
-
-    Hash family: xxhash64(seed+i, shingle) for i in 0..k-1 — xxhash64 is
-    variadic, so the family index is a second hashed column rather than
-    a per-row string concat (k concat allocations/row saved).
-    Deterministic, JVM-side, no Python. Returns (_id, sig array<long>[k])."""
-    agg = sh.groupBy("_id").agg(
-        *_min_hash_exprs(num_hashes, seed, col="shingle")
-    )
-    return agg.select(
-        "_id", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig")
     )
 
 
@@ -1325,7 +1310,7 @@ def semantic_decontamination(
             "for corpus-vs-corpus scoring use the IVF-celled pair path"
         )
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, out_schema)
     bmat = np.stack([np.asarray(r["vec"], dtype=np.int64) for r in rows])
     sbb = (bmat * bmat).sum(axis=1).astype(np.float64)
     disc = threshold - _COSINE_DISCOVERY_EPS

@@ -70,7 +70,15 @@ def quality_scores(
     ``keep_cols`` carries extra source columns through the projection
     (r13, guide §2.4): composite pipelines previously re-scanned the
     table and joined the scores back on ``id_col`` — a second scan plus
-    a join exchange for columns that were sitting in the same row."""
+    a join exchange for columns that were sitting in the same row.
+    ``keep_cols`` must not repeat a name or collide with ``id_col`` or
+    an output column (a duplicate would make the column ambiguous);
+    ``text_col`` may be kept."""
+    taken = {id_col, "n_tokens", "punct_ratio", "stopword_ratio", "quality_pass"}
+    if len(set(keep_cols)) != len(keep_cols) or taken & set(keep_cols):
+        raise ValueError(
+            f"keep_cols {keep_cols!r} repeats a name or overlaps {sorted(taken)}"
+        )
     t = tokens(text_col)
     n_tok = F.size(t)
     punct = F.length(F.regexp_replace(text_col, r"[^.!?,;:]", ""))

@@ -37,6 +37,8 @@ multi-batch incremental stream).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -202,12 +204,25 @@ def with_match_tombstones(pdf: DataFrame, matches: DataFrame) -> DataFrame:
     return pdf.unionByName(matches.select(*cols))
 
 
+def affected_buckets(affected_matches: DataFrame) -> list[int]:
+    """The partials buckets of the affected matches: a bounded driver
+    collect, one int per affected match (the same sanctioned class as
+    the affected-match-id collects upstream)."""
+    return [
+        r[0]
+        for r in affected_matches.select(match_bucket_col().alias("b"))
+        .distinct()
+        .collect()
+    ]
+
+
 def write_partials(
     pdf: DataFrame,
     ppath: str,
     scoped: bool,
     fmt: str,
     affected_matches: DataFrame | None = None,
+    buckets: list[int] | None = None,
 ) -> None:
     """The ONE write policy for a partials table, shared by the
     streaming branch and the CLI so the two cannot drift (r8). Layout
@@ -223,7 +238,10 @@ def write_partials(
       retires their previous tombstones), then a dynamic partition
       overwrite. Buckets outside the affected set stay untouched
       byte-for-byte; sibling rows inside them are rewritten with
-      identical content.
+      identical content. ``buckets`` is ``affected_buckets(
+      affected_matches)``: ``refresh_incremental_gold`` computes it
+      ONCE per batch for all three tables; it is collected here when
+      omitted.
     - full bootstrap/refresh: STATIC overwrite — the rebuild is
       authoritative, and a dynamic write would resurrect the bucket
       of any match retracted from silver since the state being
@@ -248,21 +266,15 @@ def write_partials(
     if scoped:
         if affected_matches is None:
             raise ValueError("scoped write_partials requires affected_matches")
-        # bounded driver collect: one int per affected match (the same
-        # sanctioned class as the affected-match-id collects upstream);
-        # literal IN list so the bucket scan partition-prunes
-        buckets = [
-            r[0]
-            for r in affected_matches.select(match_bucket_col().alias("b"))
-            .distinct()
-            .collect()
-        ]
+        if buckets is None:
+            buckets = affected_buckets(affected_matches)
         old = read_table(spark, ppath, fmt=fmt)
         if "mbucket" not in old.columns:  # pre-r9 per-match layout on disk
             raise StalePartialsLayout(
                 f"{ppath} uses the pre-r9 per-match partials layout; "
                 "re-bootstrap (full refresh) to migrate to bucketed partitions"
             )
+        # literal IN list so the bucket scan partition-prunes
         siblings = (
             old.where(F.col("mbucket").isin(buckets))
             .join(affected_matches, "match", "left_anti")
@@ -361,3 +373,86 @@ GOLD_FROM_PARTIALS = {
     "gold_team_stats": ("team", team_stats_from_partials),
     "gold_tournament_standings": ("team", tournament_standings_from_partials),
 }
+
+
+def refresh_incremental_gold(
+    spark,
+    silver_path: str,
+    gold_dir: str,
+    affected: list[str] | None,
+    fmt: str,
+    schema,
+) -> dict[str, DataFrame]:
+    """The ONE incremental gold refresh, shared by the stream's
+    micro-batch (streaming/pipeline.py) and ``cli gold --gold-mode
+    incremental`` so the two cannot drift: rewrite the partials tables
+    under ``{gold_dir}/_partials_*``, then return the gold frames merged
+    from them (name → frame; the caller writes them).
+
+    ``affected`` scopes the rewrite to a rescrape's matches; ``None``
+    (or empty) rebuilds every partials table from full silver. Guards:
+
+    - BOOTSTRAP — a partials table that is missing (first incremental
+      run, a switch from full mode, crash debris: ``table_exists`` with
+      ``unmarked_data="absent"``) or stored in the pre-r9 per-match
+      layout (``StalePartialsLayout``) is rebuilt ONCE from full stored
+      silver; a scoped rewrite of a missing table would truncate gold.
+    - TOMBSTONES — every affected match's bucket is rewritten even when
+      the rescrape yields zero partial rows for a builder
+      (``with_match_tombstones``), so retracted rows cannot survive.
+    - SCOPED READ — silver is read back from the affected matches'
+      partition dirs only (``read_partition_dirs``: no O(#matches)
+      listing), materialized once for the three builders.
+
+    The hot path crosses into Python nowhere: the affected-match frame
+    is a JVM ``LocalRelation`` (``local_frame``) evaluated by the
+    bucket collect, the tombstone unions and the sibling anti-joins,
+    and the affected buckets are collected once for all three tables.
+    ``schema`` pins silver's column types on the parquet read."""
+    from aws_ipl_data_pipeline_spark.sources.readers import (
+        local_frame,
+        read_partition_dirs,
+        read_table,
+        table_exists,
+    )
+
+    ppaths = {p: f"{gold_dir}/_partials_{p}" for p in PARTIAL_BUILDERS}
+    exists = {
+        p: table_exists(spark, path, fmt=fmt, unmarked_data="absent")
+        for p, path in ppaths.items()
+    }
+    # full silver read-back, bootstrap-only and built at most once (its
+    # relation construction lists every silver partition dir)
+    @functools.cache
+    def full_silver() -> DataFrame:
+        return read_table(spark, silver_path, fmt=fmt, schema=schema)
+
+    scoped = bool(affected) and any(exists.values())
+    if scoped:
+        # one materialized scan feeds all three builders (team alone
+        # consumes it 3×)
+        affected_silver = read_partition_dirs(
+            spark, silver_path, "match", affected, fmt=fmt, schema=schema
+        ).localCheckpoint(eager=True)
+        affected_df = local_frame(spark, "match string", [(m,) for m in affected])
+        buckets = affected_buckets(affected_df)
+    for pname, pbuilder in PARTIAL_BUILDERS.items():
+        if scoped and exists[pname]:
+            pdf = with_match_tombstones(pbuilder(affected_silver), affected_df)
+            try:
+                write_partials(
+                    pdf, ppaths[pname], scoped=True, fmt=fmt,
+                    affected_matches=affected_df, buckets=buckets,
+                )
+                continue
+            except StalePartialsLayout:
+                pass  # the full refresh below migrates the layout
+        # write_partials makes this write STATIC: the refresh is
+        # authoritative, and a dynamic overwrite would keep the bucket
+        # of any match retracted from silver since the last run
+        write_partials(pbuilder(full_silver()), ppaths[pname], scoped=False, fmt=fmt)
+    partials = {p: read_table(spark, path, fmt=fmt) for p, path in ppaths.items()}
+    return {
+        name: finisher(partials[pname])
+        for name, (pname, finisher) in GOLD_FROM_PARTIALS.items()
+    }

@@ -180,7 +180,7 @@ def read_partition_dirs(
     ]
     if not paths:
         if schema is not None:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, schema)
         # no schema and nothing on disk: fall back to the (empty)
         # filter form so the caller still gets the table's columns
         return read_table(spark, path, fmt=fmt).where(F.col(col).isin(values))
@@ -188,6 +188,49 @@ def read_partition_dirs(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(*paths)
+
+
+# column types whose values py4j hands the JVM as the boxed type
+# Spark's row converter expects (a Python int arrives as Integer, so a
+# bigint column would fail at evaluation)
+_PY4J_TYPES = (T.StringType, T.IntegerType, T.DoubleType, T.BooleanType)
+
+
+def local_frame(
+    spark: SparkSession, schema: T.StructType | str, rows=()
+) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` built in the JVM, as a
+    ``LocalRelation``.
+
+    In classic PySpark, ``createDataFrame`` over a Python list (empty or
+    not) parallelizes the rows into a Python RDD: the frame's leaf is a
+    ``LogicalRDD``, and EVERY evaluation of it (each collect, join or
+    union it feeds) starts one Python worker task per core — measured
+    ~1 s of worker CPU and ~0.5 s of wall per evaluation of a 2-row
+    frame on 4 vCPUs (local[4]). A ``LocalRelation`` is evaluated in
+    the JVM: projections over it are folded at planning time, and a
+    bare one is collected without a job.
+
+    ``rows`` are tuples of str, int, float, bool or None, converted by
+    py4j; non-empty rows therefore need string, int, double or boolean
+    columns. An empty frame takes any schema, nullability included."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    rows = list(rows)
+    if rows and not all(isinstance(f.dataType, _PY4J_TYPES) for f in schema.fields):
+        raise TypeError(
+            f"local_frame rows need string/int/double/boolean columns: {schema}"
+        )
+    jvm = spark._jvm
+    jrows = jvm.java.util.ArrayList()
+    for row in rows:
+        jrows.add(
+            jvm.org.apache.spark.sql.Row.fromSeq(
+                jvm.org.apache.spark.api.python.PythonUtils.toSeq(list(row))
+            )
+        )
+    jschema = jvm.org.apache.spark.sql.types.DataType.fromJson(schema.json())
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

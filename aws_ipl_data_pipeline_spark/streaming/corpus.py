@@ -27,6 +27,7 @@ from aws_ipl_data_pipeline_spark.operators.dedup import (
     incremental_dedup,
     prefix_fingerprint,
 )
+from aws_ipl_data_pipeline_spark.sources.readers import local_frame
 
 
 def run_corpus_ingest(
@@ -57,7 +58,7 @@ def run_corpus_ingest(
         except AnalysisException as e:
             if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
                 raise
-            seen = spark.createDataFrame([], "text_hash string")
+            seen = local_frame(spark, "text_hash string")
         novel_ids = incremental_dedup(ok, seen)
         admitted = ok.join(novel_ids.select("doc_id"), "doc_id")
         # cut lineage so the digest write below can't observe a half-
@@ -121,7 +122,7 @@ def run_segment_dedup_ingest(
         except AnalysisException as e:
             if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
                 raise
-            seen = spark.createDataFrame([], "_h string, _seen boolean")
+            seen = local_frame(spark, "_h string, _seen boolean")
         w = Window.partitionBy("_h").orderBy("doc_id", "chunk_id")
         # plain left join on the digest (AQE broadcasts while it fits;
         # at corpus scale the digest outgrows broadcast and this becomes
@@ -246,9 +247,7 @@ def run_near_dedup_ingest(
         except AnalysisException as e:
             if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
                 raise
-            state = spark.createDataFrame(
-                [], new_state.schema
-            )
+            state = local_frame(spark, new_state.schema)
         hits = near_dup_pairs_vs_state(new_state, state, threshold=threshold)
         # pin the tiny REJECT set once: both writes below derive from
         # it, and without this the state scan + collision joins would

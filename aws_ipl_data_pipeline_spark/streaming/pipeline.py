@@ -12,7 +12,10 @@ ex_match_bs.py:459-492) — becomes ONE Spark app:
           overwrite ≈ Delta replaceWhere per match — the reference's
           late-data policy is overwrite-the-partition, not watermarks)
         → gold full recompute over silver (the reference always fully
-          recomputes gold)
+          recomputes gold), or with gold_mode="incremental" a rewrite
+          of the affected matches' partials buckets plus a merge of the
+          skinny partials tables (plans/gold_incremental.py
+          ``refresh_incremental_gold``, shared with ``cli gold``)
 
 The per-batch transform is the BATCH plan applied to the micro-batch's
 matches, which is what makes stream ≡ batch-backfill provable
@@ -24,6 +27,14 @@ Scale notes: the file source tracks processed files in the checkpoint
 each micro-batch shuffles only the matches it saw; gold recompute reads
 silver back from storage, pruned to nothing extra because gold is
 aggregated over the whole table by definition.
+
+Fixed cost per event (one rescrape is the paper's unit of work): the
+micro-batch is scanned once for its affected match ids, which double as
+the emptiness probe; the incremental branch collects the affected
+partials buckets once per batch for all three partials tables; and the
+hot path builds no Python-backed frames — the affected-match frame is a
+JVM ``LocalRelation`` (``sources.readers.local_frame``), so evaluating it
+starts no Python worker tasks.
 """
 
 from __future__ import annotations
@@ -96,7 +107,11 @@ def run_incremental_pipeline(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        # the affected match ids double as the emptiness probe: the
+        # micro-batch is scanned once here, not once more by isEmpty()
+        # (bounded collect, O(#matches per batch))
+        affected = [r[0] for r in batch_df.select("match").distinct().collect()]
+        if not affected:
             return
         # ST2: accumulate raw deliveries per match (scrape files overlap;
         # the reference appends + dedupes bronze JSONL before rebuilding,
@@ -116,8 +131,7 @@ def run_incremental_pipeline(
             schema=RAW_DELIVERIES,
         )
         # the silver rebuild reads back ONLY the affected partitions
-        # (partition-pruned scan; the collect is O(#matches per batch))
-        affected = [r[0] for r in batch_df.select("match").distinct().collect()]
+        # (partition-pruned scan)
         acc = read_table(spark, bronze_path, fmt=tfmt, schema=RAW_DELIVERIES).where(
             F.col("match").isin(affected)
         )
@@ -189,128 +203,22 @@ def run_incremental_pipeline(
                 delete_path(spark, f"{gold_dir}/_partials_{pname}")
         else:
             # incremental: rewrite ONLY the affected matches' partial
-            # partitions (dynamic partition overwrite — per-match
-            # REPLACE), then merge the skinny partials tables instead
-            # of rescanning silver. Three correctness guards (r7
-            # self-review):
-            #  * BOOTSTRAP — a missing partials table (first
-            #    incremental batch, or a deployment switching from
-            #    gold_mode="full" / attaching to pre-existing silver)
-            #    is built ONCE from full stored silver; otherwise the
-            #    merge would see only matches processed since the
-            #    switch and silently truncate gold.
-            #  * TOMBSTONES — every affected match's partition is
-            #    rewritten even when a rescrape yields zero partial
-            #    rows for a builder (with_match_tombstones), so stale
-            #    rows from the retracted scrape cannot survive.
-            #  * READ-BACK — partials read the just-written silver
-            #    partitions back (partition-pruned scan) instead of
-            #    re-executing the bronze→silver plan per builder.
+            # buckets and merge the skinny partials tables instead of
+            # rescanning silver — the routine `cli gold --gold-mode
+            # incremental --affected-matches` runs too (bootstrap,
+            # tombstone and stale-layout guards live there). Same
+            # format as the silver write above (a parquet read of a
+            # Delta table would double-count superseded files).
             from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-                GOLD_FROM_PARTIALS,
-                PARTIAL_BUILDERS,
-                with_match_tombstones,
-                write_partials,
-            )
-            from aws_ipl_data_pipeline_spark.sources.readers import table_exists
-
-            # probe/write/read the partials in ONE format: with
-            # delta-spark on the classpath write_partitioned writes
-            # delta, which has no _SUCCESS marker — a parquet-format
-            # probe would re-bootstrap every batch and a parquet read
-            # of a delta dir would double-count superseded files
-            # (r7 third review)
-            pfmt = tfmt
-            # probe all three tables BEFORE materializing anything: the
-            # affected-partition checkpoint is only consumed on the
-            # incremental path, and bootstrap batches (all tables
-            # missing) should not pay for it
-            # unmarked_data="absent": partials are DERIVED state — the
-            # bootstrap path rebuilds over any crashed-write debris, so
-            # the ambiguous case routes to re-bootstrap, not an error
-            exists = {
-                pname: table_exists(
-                    spark,
-                    f"{gold_dir}/_partials_{pname}",
-                    fmt=pfmt,
-                    unmarked_data="absent",
-                )
-                for pname in PARTIAL_BUILDERS
-            }
-            # scoped silver read-back: direct partition dirs (r9) —
-            # the `.where(match.isin(...))` form lists every silver
-            # partition dir before pruning, O(#matches) per batch;
-            # the direct read lists only the affected matches' dirs.
-            # Same format contract as the full branch (a parquet read
-            # of a Delta silver would double-count superseded files);
-            # schema pin guards parquet partition-value inference.
-            from aws_ipl_data_pipeline_spark.sources.readers import (
-                read_partition_dirs,
+                refresh_incremental_gold,
             )
 
-            affected_silver = read_partition_dirs(
-                spark, silver_path, "match", affected,
+            gold = refresh_incremental_gold(
+                spark, silver_path, gold_dir, affected,
                 fmt=tfmt, schema=silver.schema,
             )
-            if any(exists.values()):
-                # one materialized scan feeds all three partial
-                # builders (team alone consumes it 3×)
-                affected_silver = affected_silver.localCheckpoint(eager=True)
-            affected_df = spark.createDataFrame(
-                [(m,) for m in affected], "match string"
-            )
-            # full silver read-back, bootstrap-only and built at most
-            # once (its relation construction lists every silver dir)
-            _stored: dict = {}
-
-            def stored_silver():
-                if "df" not in _stored:
-                    _stored["df"] = read_table(
-                        spark, silver_path, fmt=tfmt, schema=silver.schema
-                    )
-                return _stored["df"]
-
-            for pname, pbuilder in PARTIAL_BUILDERS.items():
-                ppath = f"{gold_dir}/_partials_{pname}"
-                # table_exists (not a bare dir probe): a crashed
-                # bootstrap write leaves the dir without a _SUCCESS
-                # marker — the retry must re-bootstrap, not trust it.
-                # write_partials (shared with the CLI, r8): scoped →
-                # dynamic bucket REPLACE carrying sibling matches
-                # through (r9 bucketed layout); bootstrap → STATIC
-                # overwrite, so crash debris for since-retracted
-                # matches cannot survive the rebuild.
-                if exists[pname]:
-                    from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-                        StalePartialsLayout,
-                    )
-
-                    pdf = with_match_tombstones(pbuilder(affected_silver), affected_df)
-                    try:
-                        write_partials(
-                            pdf, ppath, scoped=True, fmt=pfmt,
-                            affected_matches=affected_df,
-                        )
-                    except StalePartialsLayout:
-                        # pre-r9 per-match layout on disk: the
-                        # authoritative full refresh migrates it
-                        write_partials(
-                            pbuilder(stored_silver()), ppath, scoped=False, fmt=pfmt
-                        )
-                else:
-                    # one-time full bootstrap (first incremental batch,
-                    # or arriving from full mode / pre-existing silver)
-                    write_partials(
-                        pbuilder(stored_silver()), ppath, scoped=False, fmt=pfmt
-                    )
-            partials = {
-                pname: read_table(spark, f"{gold_dir}/_partials_{pname}", fmt=pfmt)
-                for pname in PARTIAL_BUILDERS
-            }
-            for name, (pname, finisher) in GOLD_FROM_PARTIALS.items():
-                finisher(partials[pname]).write.mode("overwrite").parquet(
-                    f"{gold_dir}/{name}"
-                )
+            for name, frame in gold.items():
+                frame.write.mode("overwrite").parquet(f"{gold_dir}/{name}")
 
     writer = (
         raw_stream.writeStream.foreachBatch(process_batch)

@@ -382,11 +382,14 @@ GOLD_TABLES = [
 
 
 @pytest.mark.slow
-def test_cli_gold_incremental_equals_full(spark, tmp_path_factory):
+def test_cli_gold_incremental_equals_full(
+    spark, tmp_path_factory, forbid_python_rows
+):
     """VERDICT r7 #8: `gold --gold-mode incremental` end-to-end —
     bootstrap, scoped rescrape (--affected-matches), and a full-match
     retraction (tombstone path) each produce gold identical to a full
-    recompute over the same silver."""
+    recompute over the same silver. Every gold run builds no
+    Python-row frames (the retraction's empty scoped read included)."""
     from pyspark.sql import functions as F
 
     from aws_ipl_data_pipeline_spark.sources.writers import overwrite_table
@@ -396,6 +399,7 @@ def test_cli_gold_incremental_equals_full(spark, tmp_path_factory):
         to_bronze(raw_deliveries(spark)), match_meta(spark), players(spark)
     )
     m0 = silver.select("match").distinct().orderBy("match").first()[0]
+    forbid_python_rows()
 
     def _write_silver(df):
         overwrite_table(

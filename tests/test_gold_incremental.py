@@ -21,8 +21,10 @@ from aws_ipl_data_pipeline_spark.plans.gold import (
 from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
     GOLD_FROM_PARTIALS,
     PARTIAL_BUILDERS,
+    match_bucket_col,
 )
 from aws_ipl_data_pipeline_spark.schemas import RAW_DELIVERIES
+from aws_ipl_data_pipeline_spark.sources.readers import local_frame
 from aws_ipl_data_pipeline_spark.streaming import run_incremental_pipeline
 from tests.fixtures_ipl import RAW_ROWS, match_meta, players, raw_deliveries
 
@@ -72,12 +74,16 @@ def test_partials_merge_equals_batch_builders(spark):
 
 
 @pytest.mark.slow
-def test_incremental_stream_gold_equals_batch(spark, tmp_path_factory):
+def test_incremental_stream_gold_equals_batch(
+    spark, tmp_path_factory, forbid_python_rows
+):
     """Multi-batch incremental stream (gold_mode='incremental') with an
-    overlapping match-1 rescrape: the final gold tables must equal the
-    batch builders over the accumulated silver — including the stale-
-    partial case (the rescrape's per-match REPLACE must not leave old
-    partial rows behind)."""
+    overlapping rescrape of two matches in different partials buckets:
+    the final gold tables must equal the batch builders over the
+    accumulated silver — including the stale-partial case (the
+    rescrape's bucket REPLACE must not leave old partial rows behind).
+    No micro-batch builds a Python-row frame."""
+
     base = str(tmp_path_factory.mktemp("goldinc"))
     raw_dir = f"{base}/raw"
     by_match: dict[str, list] = {}
@@ -88,26 +94,39 @@ def test_incremental_stream_gold_equals_batch(spark, tmp_path_factory):
     for m, rows in by_match.items():
         for i in range(0, len(rows), 2):
             _write_csv(f"{raw_dir}/{m}/{m}-{i:03d}.csv", rows[i : i + 2])
-    # rescrape: first 5 balls of match 1 again (dup content, new file)
-    _write_csv(f"{raw_dir}/01_AAvsBB/01_AAvsBB-re.csv", by_match["01_AAvsBB"][:5])
+    # rescrape: the first balls of match 1 and of a match in another
+    # bucket again (dup content, new files), newest so that they land
+    # together in the last micro-batch
+    bucket = dict(
+        local_frame(spark, "match string", [(m,) for m in by_match])
+        .select("match", match_bucket_col())
+        .collect()
+    )
+    other = next(m for m in by_match if bucket[m] != bucket["01_AAvsBB"])
+    for m in ("01_AAvsBB", other):
+        _write_csv(f"{raw_dir}/{m}/{m}-re.csv", by_match[m][:5])
+        os.utime(f"{raw_dir}/{m}/{m}-re.csv", (2e9, 2e9))
 
+    batch_silver = to_silver(
+        to_bronze(raw_deliveries(spark)), match_meta(spark), players(spark)
+    )
+    meta_df, players_df = match_meta(spark), players(spark)
+    forbid_python_rows()
     q = run_incremental_pipeline(
         spark,
         raw_dir=f"{raw_dir}/*/",
         silver_path=f"{base}/silver",
         gold_dir=f"{base}/gold",
-        meta_df=match_meta(spark),
-        players_df=players(spark),
+        meta_df=meta_df,
+        players_df=players_df,
         checkpoint_dir=f"{base}/ckpt",
         bronze_path=f"{base}/bronze",
         available_now=True,
         gold_mode="incremental",
     )
     assert q.awaitTermination(300), "incremental stream did not drain in 300s"
+    assert q.exception() is None, q.exception()
 
-    batch_silver = to_silver(
-        to_bronze(raw_deliveries(spark)), match_meta(spark), players(spark)
-    )
     for name, builder in BATCH_BUILDERS.items():
         got = _canon(spark.read.parquet(f"{base}/gold/{name}"))
         want = _canon(builder(batch_silver))

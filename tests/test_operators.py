@@ -969,6 +969,22 @@ def test_batch_topk_single_corpus_scan(spark):
     assert plan.count("Scan parquet") <= 2, plan
 
 
+def test_quality_scores_keep_cols_guard(spark):
+    """keep_cols may not repeat a name or collide with id_col or an
+    output column (an ambiguous duplicate); text_col may be kept."""
+    from aws_ipl_data_pipeline_spark.operators.text import quality_scores
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat", "web")], "doc_id int, text string, source string"
+    )
+    for bad in (("source", "source"), ("doc_id",), ("n_tokens",),
+                ("punct_ratio",), ("stopword_ratio",), ("quality_pass",)):
+        with pytest.raises(ValueError):
+            quality_scores(docs, keep_cols=bad)
+    out = quality_scores(docs, keep_cols=("source", "text"))
+    assert out.columns[:3] == ["doc_id", "source", "text"]
+
+
 def test_quality_classifier_monotone_in_stopwords(spark):
     """More stopword mass (w=+2.0) must raise the score, holding the
     other features roughly fixed; score stays in (0,1)."""
