@@ -19,6 +19,13 @@ same operational surface as subcommands over a shared SparkSession:
 Inputs: raw is the reference's per-match CSV layout (a glob like
 ``raw/*/``); meta and players are JSON/JSONL as produced by the
 reference scrapers (schemas.MATCH_META / schemas.PLAYERS).
+
+The write policies are shared with the stream (streaming/pipeline.py),
+whose micro-batch runs these same routines over one batch's matches:
+every managed table is written in ``sources.writers.TABLE_FORMAT``;
+``silver --replace-where`` on parquet replaces whole matches through
+``sources.writers.replace_matches``; and ``gold`` in both modes is
+``plans.gold_incremental.refresh_gold``.
 """
 
 from __future__ import annotations
@@ -51,73 +58,34 @@ def cmd_silver(args) -> None:
     from aws_ipl_data_pipeline_spark.plans import to_silver
     from aws_ipl_data_pipeline_spark.schemas import BRONZE_DELIVERIES, MATCH_META, PLAYERS
     from aws_ipl_data_pipeline_spark.sources.readers import (
+        local_frame,
         path_exists,
         read_json_object,
         read_jsonl,
         read_table,
     )
     from aws_ipl_data_pipeline_spark.sources.writers import (
-        HAVE_DELTA,
-        delete_path,
+        TABLE_FORMAT,
         overwrite_table,
-        partition_dir,
+        replace_matches,
         write_partitioned,
     )
 
     spark = _spark("silver")
-    tfmt = "delta" if HAVE_DELTA else "parquet"
     # same-format read-back as cmd_bronze's write (ADVICE r7: reading a
     # Delta table as raw parquet double-counts superseded files);
     # schema pin guards partition-value inference on parquet
-    bronze = read_table(spark, args.bronze, fmt=tfmt, schema=BRONZE_DELIVERIES)
+    bronze = read_table(spark, args.bronze, fmt=TABLE_FORMAT, schema=BRONZE_DELIVERIES)
     meta = read_json_object(spark, args.meta, MATCH_META)
     players = read_jsonl(spark, args.players, PLAYERS) if args.players else None
     silver = to_silver(bronze, meta, players)
-    # Match-level replace semantics on the (match, innings) layout
-    # (r7 review; same reasoning as streaming/pipeline.py ST3): under
-    # parquet dynamic overwrite the replace unit is the partition key,
-    # so a rebuild that shrinks a match's innings set would leak the
-    # vanished innings dir. With a predicate: pre-delete the affected
-    # match dirs (the delta branch instead does a real logged
-    # replaceWhere inside write_partitioned). Without: a full rebuild
-    # replaces the whole table (the reference's no-predicate
-    # write_deltalake mode="overwrite" is a full-table overwrite).
-    if args.replace_where:
-        if not HAVE_DELTA:
-            # The parquet replace unit is the whole match directory, so
-            # the predicate MUST be match-grain (ADVICE r7, medium): a
-            # sub-match predicate like "match='X' AND innings=1" would
-            # delete all of X but rewrite only innings 1. Validate by
-            # resolving the predicate against a match-only schema —
-            # any other column reference fails analysis.
-            from aws_ipl_data_pipeline_spark.sources.readers import local_frame
-
-            try:
-                local_frame(spark, "match string").where(args.replace_where)
-            except Exception:
-                sys.exit(
-                    "--replace-where on the parquet branch must be match-grain"
-                    " (reference only the `match` column, e.g. \"match = 'X'\");"
-                    " sub-partition predicates need delta-spark's replaceWhere"
-                )
-            # Affected matches come from the PREDICATE evaluated over
-            # stored ∪ new match ids — not from the new silver alone: a
-            # retraction predicate whose match is absent from the new
-            # frame must still delete that match's directory (Delta
-            # replaceWhere parity).
-            cand = silver.select("match")
-            if path_exists(spark, args.out):
-                cand = cand.unionByName(
-                    read_table(
-                        spark, args.out, fmt=tfmt, schema=silver.schema
-                    ).select("match")
-                )
-            affected = [
-                r[0]
-                for r in cand.distinct().where(args.replace_where).collect()
-            ]
-            for m in affected:
-                delete_path(spark, f"{args.out}/{partition_dir(spark, 'match', m)}")
+    if not args.replace_where:
+        # full rebuild: one atomic versioned commit on Delta, Spark's
+        # own static overwrite on parquet (the reference's no-predicate
+        # write_deltalake mode="overwrite" is a full-table overwrite)
+        overwrite_table(silver, args.out, partition_by=["match", "innings"])
+    elif TABLE_FORMAT == "delta":
+        # a real logged replaceWhere with the user's own predicate
         write_partitioned(
             silver,
             args.out,
@@ -125,80 +93,64 @@ def cmd_silver(args) -> None:
             replace_where=args.replace_where,
         )
     else:
-        # full rebuild: one atomic versioned commit on Delta, Spark's
-        # own static overwrite on parquet (ADVICE r7 — the manual
-        # delete-then-write discarded Delta history and a crash between
-        # the two left no table at all)
-        overwrite_table(silver, args.out, partition_by=["match", "innings"], fmt=tfmt)
+        # The parquet replace unit is the whole match (replace_matches),
+        # so the predicate MUST be match-grain (ADVICE r7, medium): a
+        # sub-match predicate like "match='X' AND innings=1" would
+        # delete all of X but rewrite only innings 1. Validate by
+        # resolving the predicate against a match-only schema — any
+        # other column reference fails analysis.
+        try:
+            local_frame(spark, "match string").where(args.replace_where)
+        except Exception:
+            sys.exit(
+                "--replace-where on the parquet branch must be match-grain"
+                " (reference only the `match` column, e.g. \"match = 'X'\");"
+                " sub-partition predicates need delta-spark's replaceWhere"
+            )
+        # Affected matches come from the PREDICATE evaluated over
+        # stored ∪ new match ids — not from the new silver alone: a
+        # retraction predicate whose match is absent from the new frame
+        # must still delete that match's directory (Delta replaceWhere
+        # parity).
+        cand = silver.select("match")
+        if path_exists(spark, args.out):
+            cand = cand.unionByName(
+                read_table(
+                    spark, args.out, fmt=TABLE_FORMAT, schema=silver.schema
+                ).select("match")
+            )
+        affected = [
+            r[0] for r in cand.distinct().where(args.replace_where).collect()
+        ]
+        replace_matches(
+            spark, silver.where(args.replace_where), args.out, affected
+        )
 
 
 def cmd_gold(args) -> None:
+    from aws_ipl_data_pipeline_spark.plans.gold_incremental import refresh_gold
     from aws_ipl_data_pipeline_spark.schemas import SILVER_DELIVERIES
-    from aws_ipl_data_pipeline_spark.sources.readers import read_table
-    from aws_ipl_data_pipeline_spark.sources.writers import HAVE_DELTA, delete_path
 
-    if getattr(args, "affected_matches", None) and args.gold_mode != "incremental":
+    if args.affected_matches and args.gold_mode != "incremental":
         # a scope flag silently ignored under full mode would read as
         # "only these matches were recomputed" when everything was
         sys.exit("--affected-matches requires --gold-mode incremental")
-    spark = _spark("gold")
-    tfmt = "delta" if HAVE_DELTA else "parquet"
-
-    if getattr(args, "gold_mode", "full") == "incremental":
-        # Incremental maintenance (VERDICT r7 #8): the streaming ST4
-        # branch's own routine, so CLI and stream runs can alternate
-        # over one gold directory. --affected-matches scopes the
-        # partials rewrite to a rescrape's matches; without it every
-        # match in silver is (re)built — a bootstrap-equivalent refresh.
-        from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-            refresh_incremental_gold,
-        )
-
-        affected = [
-            m.strip() for m in (args.affected_matches or "").split(",") if m.strip()
-        ]
-        gold_frames = refresh_incremental_gold(
-            spark, args.silver, args.out_dir, affected,
-            fmt=tfmt, schema=SILVER_DELIVERIES,
-        )
-    else:
-        from aws_ipl_data_pipeline_spark.plans.gold import (
-            batsman_stats,
-            bowler_stats,
-            team_stats,
-            tournament_standings,
-        )
-        from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-            PARTIAL_BUILDERS as _PB,
-        )
-
-        # same-format read-back as cmd_silver's write (ADVICE r7, high);
-        # schema pin guards partition-value inference on parquet
-        silver = read_table(spark, args.silver, fmt=tfmt, schema=SILVER_DELIVERIES)
-        gold_frames = {
-            "gold_batsman_stats": batsman_stats(silver),
-            "gold_bowler_stats": bowler_stats(silver),
-            "gold_team_stats": team_stats(silver),
-            "gold_tournament_standings": tournament_standings(silver),
-        }
-        # full mode does not maintain partials — invalidate any left by
-        # a previous incremental run so a later switch back re-bootstraps
-        # (same guard as the streaming full branch)
-        for pname in _PB:
-            delete_path(spark, f"{args.out_dir}/_partials_{pname}")
-    for name, frame in gold_frames.items():
-        out = f"{args.out_dir}/{name}"
-        if getattr(args, "versioned", False):
-            # snapshot-isolated full overwrite (the Delta-table property
-            # of the reference's gold layer) with native time travel
-            from aws_ipl_data_pipeline_spark.sources.versioned import (
-                write_snapshot,
-            )
-
-            v = write_snapshot(frame, out)
-            print(f"{name}: snapshot v{v}")
-        else:
-            frame.write.mode("overwrite").parquet(out)
+    # --affected-matches scopes the incremental partials rewrite to a
+    # rescrape's matches; without it every match in silver is (re)built
+    affected = [
+        m.strip() for m in (args.affected_matches or "").split(",") if m.strip()
+    ]
+    versions = refresh_gold(
+        _spark("gold"),
+        args.silver,
+        args.out_dir,
+        mode=args.gold_mode,
+        affected=affected,
+        schema=SILVER_DELIVERIES,
+        versioned=args.versioned,
+    )
+    for name, v in versions.items():
+        print(f"{name}: snapshot v{v}")
 
 
 def cmd_stream(args) -> None:
@@ -520,8 +472,8 @@ def build_parser() -> argparse.ArgumentParser:
         default="full",
         help=(
             "full: recompute every gold table from all of silver;"
-            " incremental: maintain per-match partial aggregates under"
-            " OUT_DIR/_partials_* and merge those instead"
+            " incremental: maintain per-match partial aggregates next to"
+            " the gold tables in OUT_DIR and merge those instead"
         ),
     )
     g.add_argument(

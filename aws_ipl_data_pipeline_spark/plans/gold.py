@@ -313,3 +313,12 @@ def _finish_standings(
         "runs_against",
         "overs_against",
     )
+
+
+# the four gold tables in publish order: table name → one-pass builder
+GOLD_BUILDERS = {
+    "gold_batsman_stats": batsman_stats,
+    "gold_bowler_stats": bowler_stats,
+    "gold_team_stats": team_stats,
+    "gold_tournament_standings": tournament_standings,
+}

@@ -44,10 +44,25 @@ from pyspark.sql import functions as F
 
 from aws_ipl_data_pipeline_spark.functions.scalars import not_na
 from aws_ipl_data_pipeline_spark.plans.gold import (
+    GOLD_BUILDERS,
     _finish_batsman,
     _finish_bowler,
     _finish_standings,
     _finish_team,
+)
+from aws_ipl_data_pipeline_spark.sources.readers import (
+    local_frame,
+    read_partition_dirs,
+    read_table,
+    table_exists,
+)
+from aws_ipl_data_pipeline_spark.sources.versioned import write_snapshot
+from aws_ipl_data_pipeline_spark.sources.writers import (
+    TABLE_FORMAT,
+    delete_path,
+    mark_success,
+    overwrite_table,
+    write_partitioned,
 )
 
 # --------------------------------------------------------------------------
@@ -220,7 +235,6 @@ def write_partials(
     pdf: DataFrame,
     ppath: str,
     scoped: bool,
-    fmt: str,
     affected_matches: DataFrame | None = None,
     buckets: list[int] | None = None,
 ) -> None:
@@ -239,7 +253,7 @@ def write_partials(
       overwrite. Buckets outside the affected set stay untouched
       byte-for-byte; sibling rows inside them are rewritten with
       identical content. ``buckets`` is ``affected_buckets(
-      affected_matches)``: ``refresh_incremental_gold`` computes it
+      affected_matches)``: ``refresh_gold`` computes it
       ONCE per batch for all three tables; it is collected here when
       omitted.
     - full bootstrap/refresh: STATIC overwrite — the rebuild is
@@ -250,15 +264,9 @@ def write_partials(
       re-bootstrap over a half-written table whose matches may no
       longer all exist).
 
-    On parquet, stamps the commit marker the existence probe relies on
-    (partitioned writes leave no root _SUCCESS)."""
-    from aws_ipl_data_pipeline_spark.sources.readers import read_table
-    from aws_ipl_data_pipeline_spark.sources.writers import (
-        mark_success,
-        overwrite_table,
-        write_partitioned,
-    )
-
+    Written in ``TABLE_FORMAT``; on parquet, stamps the commit marker
+    the existence probe relies on (partitioned writes leave no root
+    _SUCCESS)."""
     spark = pdf.sparkSession
     if "mbucket" in pdf.columns:  # a builder column would be silently shadowed
         raise ValueError("partials builders must not emit a column named mbucket")
@@ -268,7 +276,7 @@ def write_partials(
             raise ValueError("scoped write_partials requires affected_matches")
         if buckets is None:
             buckets = affected_buckets(affected_matches)
-        old = read_table(spark, ppath, fmt=fmt)
+        old = read_table(spark, ppath, fmt=TABLE_FORMAT)
         if "mbucket" not in old.columns:  # pre-r9 per-match layout on disk
             raise StalePartialsLayout(
                 f"{ppath} uses the pre-r9 per-match partials layout; "
@@ -283,12 +291,10 @@ def write_partials(
         # write below replaces — without cutting lineage the overwrite
         # would consume its own output path
         pdf = pdf.unionByName(siblings).localCheckpoint(eager=True)
-        write_partitioned(
-            pdf, ppath, partition_by=["mbucket"], mode="overwrite", fmt=fmt
-        )
+        write_partitioned(pdf, ppath, partition_by=["mbucket"], mode="overwrite")
     else:
-        overwrite_table(pdf, ppath, partition_by=["mbucket"], fmt=fmt)
-    if fmt == "parquet":
+        overwrite_table(pdf, ppath, partition_by=["mbucket"])
+    if TABLE_FORMAT == "parquet":
         mark_success(spark, ppath)
 
 
@@ -375,22 +381,34 @@ GOLD_FROM_PARTIALS = {
 }
 
 
-def refresh_incremental_gold(
+def refresh_gold(
     spark,
     silver_path: str,
     gold_dir: str,
+    *,
+    mode: str,
     affected: list[str] | None,
-    fmt: str,
     schema,
-) -> dict[str, DataFrame]:
-    """The ONE incremental gold refresh, shared by the stream's
-    micro-batch (streaming/pipeline.py) and ``cli gold --gold-mode
-    incremental`` so the two cannot drift: rewrite the partials tables
-    under ``{gold_dir}/_partials_*``, then return the gold frames merged
-    from them (name → frame; the caller writes them).
+    versioned: bool,
+) -> dict[str, int]:
+    """The ONE gold refresh, shared by the stream's micro-batch
+    (streaming/pipeline.py) and ``cli gold`` so the two cannot drift.
+    Writes the four gold tables under ``gold_dir``: plain parquet
+    overwrites, or with ``versioned`` snapshot-isolated versions
+    (``write_snapshot``; returns name → new version). ``schema`` pins
+    silver's column types on the parquet read-back.
 
-    ``affected`` scopes the rewrite to a rescrape's matches; ``None``
-    (or empty) rebuilds every partials table from full silver. Guards:
+    ``mode="full"`` recomputes every table from full silver with the
+    one-pass builders (the reference's gold job, ex_match_sg.py:323-347).
+    Full mode maintains no partials, so it first deletes any
+    ``_partials_*`` left by an incremental run: after even one full
+    refresh they would miss matches, and a later incremental run must
+    re-bootstrap instead of trusting them.
+
+    ``mode="incremental"`` rewrites the partials tables, then merges
+    gold from them. ``affected`` scopes the rewrite to a rescrape's
+    matches; ``None`` (or empty) rebuilds every partials table from full
+    silver. Guards:
 
     - BOOTSTRAP — a partials table that is missing (first incremental
       run, a switch from full mode, crash debris: ``table_exists`` with
@@ -407,32 +425,46 @@ def refresh_incremental_gold(
     The hot path crosses into Python nowhere: the affected-match frame
     is a JVM ``LocalRelation`` (``local_frame``) evaluated by the
     bucket collect, the tombstone unions and the sibling anti-joins,
-    and the affected buckets are collected once for all three tables.
-    ``schema`` pins silver's column types on the parquet read."""
-    from aws_ipl_data_pipeline_spark.sources.readers import (
-        local_frame,
-        read_partition_dirs,
-        read_table,
-        table_exists,
-    )
-
+    and the affected buckets are collected once for all three tables."""
     ppaths = {p: f"{gold_dir}/_partials_{p}" for p in PARTIAL_BUILDERS}
+    if mode == "full":
+        for path in ppaths.values():
+            delete_path(spark, path)
+        silver = read_table(spark, silver_path, fmt=TABLE_FORMAT, schema=schema)
+        gold = {name: build(silver) for name, build in GOLD_BUILDERS.items()}
+    else:
+        gold = _refresh_partials(spark, silver_path, ppaths, affected, schema)
+    versions = {}
+    for name, frame in gold.items():
+        out = f"{gold_dir}/{name}"
+        if versioned:
+            versions[name] = write_snapshot(frame, out)
+        else:
+            frame.write.mode("overwrite").parquet(out)
+    return versions
+
+
+def _refresh_partials(
+    spark, silver_path: str, ppaths: dict[str, str], affected, schema
+) -> dict[str, DataFrame]:
+    """``refresh_gold``'s incremental branch: rewrite the partials
+    tables at ``ppaths``, then return the gold frames merged from them."""
     exists = {
-        p: table_exists(spark, path, fmt=fmt, unmarked_data="absent")
+        p: table_exists(spark, path, fmt=TABLE_FORMAT, unmarked_data="absent")
         for p, path in ppaths.items()
     }
     # full silver read-back, bootstrap-only and built at most once (its
     # relation construction lists every silver partition dir)
     @functools.cache
     def full_silver() -> DataFrame:
-        return read_table(spark, silver_path, fmt=fmt, schema=schema)
+        return read_table(spark, silver_path, fmt=TABLE_FORMAT, schema=schema)
 
     scoped = bool(affected) and any(exists.values())
     if scoped:
         # one materialized scan feeds all three builders (team alone
         # consumes it 3×)
         affected_silver = read_partition_dirs(
-            spark, silver_path, "match", affected, fmt=fmt, schema=schema
+            spark, silver_path, "match", affected, fmt=TABLE_FORMAT, schema=schema
         ).localCheckpoint(eager=True)
         affected_df = local_frame(spark, "match string", [(m,) for m in affected])
         buckets = affected_buckets(affected_df)
@@ -441,7 +473,7 @@ def refresh_incremental_gold(
             pdf = with_match_tombstones(pbuilder(affected_silver), affected_df)
             try:
                 write_partials(
-                    pdf, ppaths[pname], scoped=True, fmt=fmt,
+                    pdf, ppaths[pname], scoped=True,
                     affected_matches=affected_df, buckets=buckets,
                 )
                 continue
@@ -450,8 +482,10 @@ def refresh_incremental_gold(
         # write_partials makes this write STATIC: the refresh is
         # authoritative, and a dynamic overwrite would keep the bucket
         # of any match retracted from silver since the last run
-        write_partials(pbuilder(full_silver()), ppaths[pname], scoped=False, fmt=fmt)
-    partials = {p: read_table(spark, path, fmt=fmt) for p, path in ppaths.items()}
+        write_partials(pbuilder(full_silver()), ppaths[pname], scoped=False)
+    partials = {
+        p: read_table(spark, path, fmt=TABLE_FORMAT) for p, path in ppaths.items()
+    }
     return {
         name: finisher(partials[pname])
         for name, (pname, finisher) in GOLD_FROM_PARTIALS.items()

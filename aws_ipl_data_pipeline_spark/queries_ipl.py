@@ -10,6 +10,8 @@ rendered into both sides, so only the computations differ.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -875,12 +877,7 @@ def ipl_gold_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicated silver — batsman/bowler/team grain for the player
     tables, the bat∪bowl team universe for standings — so the four
     summary rows hash-match instead of a rows-only check."""
-    from aws_ipl_data_pipeline_spark.plans.gold import (
-        batsman_stats,
-        bowler_stats,
-        team_stats,
-        tournament_standings,
-    )
+    from aws_ipl_data_pipeline_spark.plans.gold import GOLD_BUILDERS
 
     tune_session(spark)
 
@@ -908,27 +905,12 @@ def ipl_gold_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench iterations after the first skip fixture synthesis entirely
     silver = _session_fixture(spark, "gold_e2e_3000", _build)
     summaries = [
-        batsman_stats(silver).agg(
-            F.lit("gold_batsman_stats").alias("table"),
-            F.count("*").cast("long").alias("n_rows"),
-        ),
-        bowler_stats(silver).agg(
-            F.lit("gold_bowler_stats").alias("table"),
-            F.count("*").cast("long").alias("n_rows"),
-        ),
-        team_stats(silver).agg(
-            F.lit("gold_team_stats").alias("table"),
-            F.count("*").cast("long").alias("n_rows"),
-        ),
-        tournament_standings(silver).agg(
-            F.lit("gold_tournament_standings").alias("table"),
-            F.count("*").cast("long").alias("n_rows"),
-        ),
+        builder(silver).agg(
+            F.lit(name).alias("table"), F.count("*").cast("long").alias("n_rows")
+        )
+        for name, builder in GOLD_BUILDERS.items()
     ]
-    out = summaries[0]
-    for s in summaries[1:]:
-        out = out.unionByName(s)
-    return out
+    return functools.reduce(lambda a, b: a.unionByName(b), summaries)
 
 
 @register(

@@ -24,6 +24,11 @@ try:  # delta-spark is optional; everything works on parquet without it
 except Exception:  # pragma: no cover
     HAVE_DELTA = False
 
+# the format of every table the medallion manages (bronze accumulator,
+# silver, gold partials); every read-back must use it too, because a
+# parquet read of a Delta table sees logically removed files
+TABLE_FORMAT = "delta" if HAVE_DELTA else "parquet"
+
 
 def write_partitioned(
     df: DataFrame,
@@ -41,7 +46,7 @@ def write_partitioned(
     the two are equivalent for its predicates, which are partition
     filters like ``match = 'X'``).
     """
-    fmt = fmt or ("delta" if HAVE_DELTA else "parquet")
+    fmt = fmt or TABLE_FORMAT
     if replace_where is not None:
         # filter on BOTH branches: parquet keeps the predicate as a
         # guard on the written rows; Delta REQUIRES written data ⊆
@@ -79,7 +84,7 @@ def overwrite_table(
     own delete-then-write of the whole path — same crash window as the
     manual delete (unavoidable without a log), but it drops vanished
     partitions, which dynamic overwrite cannot."""
-    fmt = fmt or ("delta" if HAVE_DELTA else "parquet")
+    fmt = fmt or TABLE_FORMAT
     (
         df.write.format(fmt)
         .partitionBy(*partition_by)
@@ -142,7 +147,7 @@ def upsert_by_key(
     else:
         new_df = new_df.dropDuplicates(keys)
 
-    fmt = fmt or ("delta" if HAVE_DELTA else "parquet")
+    fmt = fmt or TABLE_FORMAT
     if fmt == "delta" and HAVE_DELTA:
         if DeltaTable.isDeltaTable(spark, path):
             tgt = DeltaTable.forPath(spark, path)
@@ -227,6 +232,38 @@ def partition_dir(spark, col: str, value) -> str:
     the escaping table."""
     esc = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     return f"{esc.escapePathName(col)}={esc.escapePathName(str(value))}"
+
+
+def matches_predicate(matches: list[str]) -> str:
+    """SQL predicate ``match IN (...)`` selecting exactly ``matches``.
+    Backslash and quote are both escaped: Spark string literals treat
+    ``\\`` as an escape character, so an id like ``a\\b`` would
+    otherwise select nothing."""
+    quoted = (
+        "'" + m.replace("\\", "\\\\").replace("'", "\\'") + "'" for m in matches
+    )
+    return f"match IN ({', '.join(quoted)})"
+
+
+def replace_matches(spark, df: DataFrame, path: str, matches: list[str]) -> None:
+    """Replace whole matches of a ``["match", "innings"]`` table with
+    ``df`` — the reference's ``replaceWhere("match = ...")`` per
+    rescrape (ex_match_bs.py:461-471). The replace unit is the match,
+    not the partition: parquet dynamic overwrite only replaces the
+    partitions present in ``df``, so a rescrape that loses an innings
+    would leak the stale innings directory. Delta gets a logged
+    ``replaceWhere`` over the match set; parquet deletes each match
+    directory first (an FS delete under a Delta log would corrupt the
+    table). A crash between delete and write is healed by rerunning
+    the same replace."""
+    if TABLE_FORMAT == "delta":
+        write_partitioned(
+            df, path, ["match", "innings"], replace_where=matches_predicate(matches)
+        )
+        return
+    for m in matches:
+        delete_path(spark, f"{path}/{partition_dir(spark, 'match', m)}")
+    write_partitioned(df, path, ["match", "innings"], mode="overwrite")
 
 
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -11,13 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from aws_ipl_data_pipeline_spark.plans.gold import (
-    batsman_stats,
-    bowler_stats,
-    team_stats,
-    tournament_standings,
-)
-from aws_ipl_data_pipeline_spark.sources.writers import HAVE_DELTA
+from aws_ipl_data_pipeline_spark.plans.gold import GOLD_BUILDERS
+from aws_ipl_data_pipeline_spark.sources.writers import TABLE_FORMAT
 
 # verbatim from reference README.md:156-168
 ATHENA_POINTS_TABLE_SQL = """
@@ -49,14 +44,6 @@ ORDER BY total_runs DESC
 LIMIT 10
 """
 
-GOLD_BUILDERS = {
-    "gold_batsman_stats": batsman_stats,
-    "gold_bowler_stats": bowler_stats,
-    "gold_team_stats": team_stats,
-    "gold_tournament_standings": tournament_standings,
-}
-
-
 def materialize_gold(
     spark: SparkSession,
     silver: DataFrame,
@@ -68,10 +55,11 @@ def materialize_gold(
     loc = f" LOCATION '{location}'" if location else ""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}{loc}")
     out = {}
-    fmt = "delta" if HAVE_DELTA else "parquet"
     for name, builder in GOLD_BUILDERS.items():
         df = builder(silver)
-        df.write.format(fmt).mode("overwrite").saveAsTable(f"{database}.{name}")
+        df.write.format(TABLE_FORMAT).mode("overwrite").saveAsTable(
+            f"{database}.{name}"
+        )
         out[name] = df
     return out
 

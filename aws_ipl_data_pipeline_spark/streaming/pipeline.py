@@ -3,38 +3,33 @@
 The reference's event chain — S3 ObjectCreated → Lambda (bronze JSONL
 append+dedupe) → Glue silver (per-match partition overwrite) → Glue gold
 (full recompute) (reference ex_match_rb.py:156-236,
-ex_match_bs.py:459-492) — becomes ONE Spark app:
+ex_match_bs.py:459-492) — becomes ONE Spark app: a file-source
+readStream over the raw CSV drop directory whose ``foreachBatch`` runs
+the CLI's own layer routines over the micro-batch's matches:
 
-  file-source readStream over the raw CSV drop directory
-    → foreachBatch:
-        parse to bronze (same plan as batch, plans/bronze.py)
-        → silver for ONLY the affected matches (dynamic partition
-          overwrite ≈ Delta replaceWhere per match — the reference's
-          late-data policy is overwrite-the-partition, not watermarks)
-        → gold full recompute over silver (the reference always fully
-          recomputes gold), or with gold_mode="incremental" a rewrite
-          of the affected matches' partials buckets plus a merge of the
-          skinny partials tables (plans/gold_incremental.py
-          ``refresh_incremental_gold``, shared with ``cli gold``)
+  upsert the batch into the bronze accumulator (``upsert_by_key``)
+    → bronze + silver plans over ONLY the affected matches
+      (plans/bronze.py, plans/silver.py)
+    → ``sources.writers.replace_matches``: the match-grain silver
+      replace ``cli silver --replace-where`` runs (the reference's
+      late-data policy is overwrite-the-match, not watermarks)
+    → ``plans.gold_incremental.refresh_gold``: the gold refresh ``cli
+      gold`` runs — a full recompute over silver (the reference's
+      behavior), or with gold_mode="incremental" a rewrite of the
+      affected matches' partials buckets plus a merge of the skinny
+      partials tables
 
-The per-batch transform is the BATCH plan applied to the micro-batch's
-matches, which is what makes stream ≡ batch-backfill provable
+Each write policy therefore lives in one function both callers use,
+which is what makes stream ≡ batch-backfill provable
 (tests/test_streaming.py). `Trigger.AvailableNow` drains a backlog and
 stops — the Lambda-less backfill story.
 
 Scale notes: the file source tracks processed files in the checkpoint
 (exactly-once per file, like the reference's per-object Lambda invoke);
-each micro-batch shuffles only the matches it saw; gold recompute reads
-silver back from storage, pruned to nothing extra because gold is
-aggregated over the whole table by definition.
-
-Fixed cost per event (one rescrape is the paper's unit of work): the
-micro-batch is scanned once for its affected match ids, which double as
-the emptiness probe; the incremental branch collects the affected
-partials buckets once per batch for all three partials tables; and the
-hot path builds no Python-backed frames — the affected-match frame is a
-JVM ``LocalRelation`` (``sources.readers.local_frame``), so evaluating it
-starts no Python worker tasks.
+each micro-batch shuffles only the matches it saw; the micro-batch is
+scanned once for its affected match ids, which double as the emptiness
+probe; and the hot path builds no Python-backed frames (see
+``refresh_gold``).
 """
 
 from __future__ import annotations
@@ -43,21 +38,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_ipl_data_pipeline_spark.plans.bronze import to_bronze
-from aws_ipl_data_pipeline_spark.plans.gold import (
-    batsman_stats,
-    bowler_stats,
-    team_stats,
-    tournament_standings,
-)
+from aws_ipl_data_pipeline_spark.plans.gold_incremental import refresh_gold
 from aws_ipl_data_pipeline_spark.plans.silver import to_silver
 from aws_ipl_data_pipeline_spark.schemas import RAW_DELIVERIES
 from aws_ipl_data_pipeline_spark.sources.readers import read_table
 from aws_ipl_data_pipeline_spark.sources.writers import (
-    HAVE_DELTA,
-    delete_path,
-    partition_dir,
+    TABLE_FORMAT,
+    replace_matches,
     upsert_by_key,
-    write_partitioned,
 )
 
 
@@ -92,13 +80,6 @@ def run_incremental_pipeline(
     if gold_mode not in ("full", "incremental"):
         raise ValueError(f"gold_mode must be 'full' or 'incremental': {gold_mode!r}")
     bronze_path = bronze_path or f"{silver_path.rstrip('/')}_bronze_acc"
-    # Every managed table here (bronze accumulator, silver, gold
-    # partials) is written via write_partitioned/upsert_by_key, which
-    # pick delta when delta-spark is on the classpath — so every
-    # read-back MUST use the same format (ADVICE r7, high: a raw
-    # parquet read of a Delta table sees logically-removed files and
-    # double-counts every rescraped delivery).
-    tfmt = "delta" if HAVE_DELTA else "parquet"
     raw_stream = (
         spark.readStream.schema(RAW_DELIVERIES)
         .option("header", True)
@@ -131,94 +112,29 @@ def run_incremental_pipeline(
             schema=RAW_DELIVERIES,
         )
         # the silver rebuild reads back ONLY the affected partitions
-        # (partition-pruned scan)
-        acc = read_table(spark, bronze_path, fmt=tfmt, schema=RAW_DELIVERIES).where(
-            F.col("match").isin(affected)
+        # (partition-pruned scan), in the format every managed table is
+        # written in (TABLE_FORMAT)
+        acc = read_table(
+            spark, bronze_path, fmt=TABLE_FORMAT, schema=RAW_DELIVERIES
+        ).where(F.col("match").isin(affected))
+
+        # ST3: rebuild the affected matches end-to-end from accumulated
+        # raw; latest scrape wins for the whole match (the match-grain
+        # replace the CLI's --replace-where runs too)
+        silver = to_silver(to_bronze(acc), meta_df, players_df)
+        replace_matches(spark, silver, silver_path, affected)
+        # ST4: the gold refresh `cli gold` runs (schema pinned on the
+        # parquet read-back so both modes see identical partition-column
+        # types; inference could retype an all-numeric match id)
+        refresh_gold(
+            spark,
+            silver_path,
+            gold_dir,
+            mode=gold_mode,
+            affected=affected,
+            schema=silver.schema,
+            versioned=False,
         )
-
-        # ST3: rebuild the affected matches end-to-end from accumulated raw
-        bronze = to_bronze(acc)
-        silver = to_silver(bronze, meta_df, players_df)
-        # idempotent per-match partition rewrite (ST3): latest scrape
-        # wins for the whole match, like replaceWhere("match = ...").
-        # The layout stays the reference's ["match", "innings"]
-        # (ex_match_bs.py:467), but the REPLACE UNIT is the match (the
-        # reference's predicate is match='X'): parquet dynamic
-        # overwrite only replaces partitions present in the new frame,
-        # so a rescrape that changes a match's innings set would leak
-        # the vanished innings partition (r7 reviews). Delta gets a
-        # real logged replaceWhere on the match set; parquet deletes
-        # the affected match directories first (an FS delete under a
-        # Delta log would corrupt the table — never mix the two). A
-        # crash between delete and write is healed by the micro-batch
-        # retry, which rebuilds the same matches from accumulated
-        # bronze.
-        if HAVE_DELTA:
-            in_list = ", ".join("'" + m.replace("'", "''") + "'" for m in affected)
-            write_partitioned(
-                silver,
-                silver_path,
-                partition_by=["match", "innings"],
-                replace_where=f"match IN ({in_list})",
-            )
-        else:
-            for m in affected:
-                delete_path(
-                    spark, f"{silver_path}/{partition_dir(spark, 'match', m)}"
-                )
-            write_partitioned(
-                silver,
-                silver_path,
-                partition_by=["match", "innings"],
-                mode="overwrite",
-            )
-        if gold_mode == "full":
-            # gold: full recompute over silver (ST4, reference
-            # ex_match_sg.py:323-347 — reference-parity default).
-            # Same-format read-back (tfmt); schema pinned on the
-            # parquet branch so both modes see identical partition-
-            # column types (inference could retype an all-numeric
-            # match id; r7 third review)
-            full_silver = read_table(spark, silver_path, fmt=tfmt, schema=silver.schema)
-            for name, builder in (
-                ("gold_batsman_stats", batsman_stats),
-                ("gold_bowler_stats", bowler_stats),
-                ("gold_team_stats", team_stats),
-                ("gold_tournament_standings", tournament_standings),
-            ):
-                builder(full_silver).write.mode("overwrite").parquet(
-                    f"{gold_dir}/{name}"
-                )
-            # invalidate any partials left by a previous incremental
-            # deployment: full mode does not maintain them, so after
-            # even one full-mode batch they miss matches — a later
-            # switch back to incremental must re-bootstrap, not trust
-            # them (r7 second review: incremental→full→incremental
-            # silently dropped the full-interval matches from gold)
-            from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-                PARTIAL_BUILDERS as _PB,
-            )
-
-            for pname in _PB:
-                delete_path(spark, f"{gold_dir}/_partials_{pname}")
-        else:
-            # incremental: rewrite ONLY the affected matches' partial
-            # buckets and merge the skinny partials tables instead of
-            # rescanning silver — the routine `cli gold --gold-mode
-            # incremental --affected-matches` runs too (bootstrap,
-            # tombstone and stale-layout guards live there). Same
-            # format as the silver write above (a parquet read of a
-            # Delta table would double-count superseded files).
-            from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-                refresh_incremental_gold,
-            )
-
-            gold = refresh_incremental_gold(
-                spark, silver_path, gold_dir, affected,
-                fmt=tfmt, schema=silver.schema,
-            )
-            for name, frame in gold.items():
-                frame.write.mode("overwrite").parquet(f"{gold_dir}/{name}")
 
     writer = (
         raw_stream.writeStream.foreachBatch(process_batch)

@@ -512,12 +512,8 @@ def test_half_applied_scoped_batch_heals_on_replay(spark, tmp_path_factory):
         with_match_tombstones,
         write_partials,
     )
-    from aws_ipl_data_pipeline_spark.sources.writers import (
-        HAVE_DELTA,
-        overwrite_table,
-    )
+    from aws_ipl_data_pipeline_spark.sources.writers import overwrite_table
 
-    tfmt = "delta" if HAVE_DELTA else "parquet"
     base = str(tmp_path_factory.mktemp("halfbatch"))
     gold = f"{base}/gold"
     silver = to_silver(
@@ -542,7 +538,7 @@ def test_half_applied_scoped_batch_heals_on_replay(spark, tmp_path_factory):
         PARTIAL_BUILDERS[first](scoped_silver), affected_df
     )
     write_partials(
-        pdf, f"{gold}/_partials_{first}", scoped=True, fmt=tfmt,
+        pdf, f"{gold}/_partials_{first}", scoped=True,
         affected_matches=affected_df,
     )
 

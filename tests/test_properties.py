@@ -1006,7 +1006,7 @@ def test_bucketed_partials_model_equivalence(spark, start, ops):
     try:
         ppath = f"{work}/_partials_bowler"
         write_partials(
-            bowler_match_partials(silver_df(state)), ppath, scoped=False, fmt=fmt
+            bowler_match_partials(silver_df(state)), ppath, scoped=False
         )
         for idx, version in ops:
             m = pool[idx]
@@ -1018,7 +1018,7 @@ def test_bucketed_partials_model_equivalence(spark, start, ops):
             batch = spark.createDataFrame(silver_rows(m, version) or [], schema)
             pdf = with_match_tombstones(bowler_match_partials(batch), affected_df)
             write_partials(
-                pdf, ppath, scoped=True, fmt=fmt, affected_matches=affected_df
+                pdf, ppath, scoped=True, affected_matches=affected_df
             )
         got = sorted(
             tuple(r)

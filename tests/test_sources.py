@@ -829,3 +829,75 @@ def test_compact_two_level_partition_layout(spark, tmp_path_factory):
         .collect()
     )
     assert after == before
+
+
+def _dir_digests(root: str) -> dict[str, str]:
+    import hashlib
+
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(dirpath, fn)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_replace_matches_replaces_whole_matches(spark, tmp_path):
+    """replace_matches is the match-grain replace on the (match,
+    innings) layout: replacing match A with innings-1 rows only leaves
+    no stale innings=2 directory under A (dynamic overwrite alone would
+    keep it), match B's files stay byte-identical, and ids that are
+    escaped in directory names are replaced exactly."""
+    from aws_ipl_data_pipeline_spark.sources.readers import local_frame
+    from aws_ipl_data_pipeline_spark.sources.writers import (
+        TABLE_FORMAT,
+        partition_dir,
+        replace_matches,
+    )
+
+    if TABLE_FORMAT != "parquet":
+        pytest.skip("the directory layout is the parquet branch's")
+    path = str(tmp_path / "t")
+    schema = "match string, innings int, score int"
+    odd = ["it's", "k=v", "a/b", "50%", "Mumbaï–Pune"]
+    rows = [(m, i, 10 * i) for m in ["A", "B", *odd] for i in (1, 2)]
+    write_partitioned(local_frame(spark, schema, rows), path, ["match", "innings"])
+
+    def match_dir(m):
+        return os.path.join(path, partition_dir(spark, "match", m))
+
+    b_before = _dir_digests(match_dir("B"))
+    replace_matches(spark, local_frame(spark, schema, [("A", 1, 99)]), path, ["A"])
+    assert sorted(os.listdir(match_dir("A"))) == ["innings=1"]
+    assert _dir_digests(match_dir("B")) == b_before
+
+    new = [(m, 1, 7) for m in odd]
+    replace_matches(spark, local_frame(spark, schema, new), path, odd)
+    got = sorted(
+        tuple(r)
+        for r in spark.read.schema(schema)
+        .parquet(path)
+        .select("match", "innings", "score")
+        .collect()
+    )
+    assert got == sorted([("A", 1, 99), ("B", 1, 10), ("B", 2, 20), *new])
+    assert _dir_digests(match_dir("B")) == b_before
+
+
+def test_matches_predicate_selects_exactly_its_ids(spark):
+    """The Delta replaceWhere predicate of replace_matches, evaluated
+    without Delta: for ids with a backslash, quotes, '%' or non-ASCII
+    characters, each single-id predicate selects exactly its own row,
+    and the multi-id predicate selects exactly the listed ids."""
+    from aws_ipl_data_pipeline_spark.sources.readers import local_frame
+    from aws_ipl_data_pipeline_spark.sources.writers import matches_predicate
+
+    ids = ["a\\b", "\\", "a\\'b", "it's", "''", "50%", "Mumbaï–Pune", "plain"]
+    df = local_frame(spark, "match string", [(m,) for m in ids])
+    for m in ids:
+        got = [r[0] for r in df.where(matches_predicate([m])).collect()]
+        assert got == [m], (m, matches_predicate([m]))
+    some = ids[:4]
+    got = sorted(r[0] for r in df.where(matches_predicate(some)).collect())
+    assert got == sorted(some)
