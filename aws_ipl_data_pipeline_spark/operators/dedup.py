@@ -1150,7 +1150,7 @@ def embedding_cosine_pairs_blocked(
     )
     mates = spark.range(n_blocks).select(F.col("id").cast("int").alias("h"))
     rep = (
-        v.join(F.broadcast(mates))  # G tiny rows: broadcast replicate
+        v.join(mates)  # G tiny rows: broadcast replicate
         .select(
             "id",
             "vec",
@@ -1446,6 +1446,7 @@ def near_dup_pairs_vs_state(
         F.posexplode("buckets").alias("band", "bucket"),
     )
     cand = (
+        # without the hint dedup_incremental_minhash's sf0.1 build side flips
         cb.join(F.broadcast(nb), ["band", "bucket"])
         .select("new_id", "corpus_id")
         .dropDuplicates()
@@ -1461,7 +1462,7 @@ def near_dup_pairs_vs_state(
         F.col("shingle_set").alias("_sb"),
     )
     return (
-        cand.join(F.broadcast(va), "new_id")
+        cand.join(va, "new_id")
         .join(vb, "corpus_id")
         .withColumn("_common", F.size(F.array_intersect("_sa", "_sb")))
         .withColumn(

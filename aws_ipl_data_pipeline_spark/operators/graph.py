@@ -130,6 +130,7 @@ def pagerank_fixed_int(
     )
     teleport_mass = RANK_SCALE - (RANK_SCALE * damp_num) // damp_den
     if seeds is None:
+        # unhinted, pagerank_covisit's sf0.1 final plan moved in 3/3 runs (0/4 hinted)
         nn = F.broadcast(nodes.agg(F.count(F.lit(1)).alias("_nn")))
         based = nodes.crossJoin(nn).select(
             "v", F.expr(f"{teleport_mass} div _nn").cast("long").alias("_base")
@@ -139,7 +140,7 @@ def pagerank_fixed_int(
         )
     else:
         seeds = seeds.select("v").distinct()
-        nns = F.broadcast(seeds.agg(F.count(F.lit(1)).alias("_ns")))
+        nns = seeds.agg(F.count(F.lit(1)).alias("_ns"))
         is_seed = F.col("_s").isNotNull()
         marked = nodes.join(
             seeds.select(F.col("v"), F.lit(1).alias("_s")), "v", "left"

@@ -65,7 +65,7 @@ def copurchase_pairs(
     common = pair_common_counts(items, "_id", "_k")
     scored = (
         common.where(F.col("_common") >= int(min_pair_support))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .where(F.col("_n") * F.col("_common") > F.col("_na") * F.col("_nb"))
     )
     return scored.select(

@@ -196,7 +196,7 @@ def pq_topk_rerank(
         codes_df, codebooks, query_vec, k=k * overfetch,
         id_col=id_col, exclude_id=exclude_id,
     ).select(id_col)
-    exact = cosine_to_query(emb.join(F.broadcast(cands), id_col), query_vec, vec_col)
+    exact = cosine_to_query(emb.join(cands, id_col), query_vec, vec_col)
     # round BEFORE ranking (brute_force_topk's convention): stable
     # across float summation orders and tie-broken by id, so the output
     # is hash-comparable to a SQL oracle when the candidate set covers
@@ -355,13 +355,14 @@ def ivfpq_topk_rerank(
     )
     cands = (
         codes_df.where(F.col("cell").isin([int(c) for c in probes]))
+        # without the hint the sf0.1 build side of this join flips
         .join(F.broadcast(luts), "cell")
         .select(id_col, F.round(dist, 4).alias("pq_dist2"))
     )
     if exclude_id is not None:
         cands = cands.where(F.col(id_col) != exclude_id)
     cands = cands.orderBy("pq_dist2", id_col).limit(k * overfetch).select(id_col)
-    exact = cosine_to_query(emb.join(F.broadcast(cands), id_col), query_vec, vec_col)
+    exact = cosine_to_query(emb.join(cands, id_col), query_vec, vec_col)
     # round BEFORE ranking — same rationale as pq_topk_rerank
     return (
         exact.select(

@@ -91,7 +91,7 @@ def robust_outlier_stats(
         F.percentile(F.col(value_col).cast("double"), F.lit(0.5)).alias("_med")
     )
     dev = (
-        df.join(F.broadcast(med), group_col)
+        df.join(med, group_col)
         .groupBy(group_col)
         .agg(
             F.percentile(
@@ -102,6 +102,7 @@ def robust_outlier_stats(
     )
     thresh = F.lit(k * 1.4826) * F.col("_mad")
     return (
+        # without the hint the sf0.1 build side flips (6 -> 4 hash Exchanges)
         df.join(F.broadcast(dev), group_col)
         .groupBy(group_col)
         .agg(
@@ -175,7 +176,7 @@ def psi_drift(
         for i in range(len(qs)):
             idx = idx + (F.col(value_col) > F.element_at("bs", i + 1)).cast("int")
         return (
-            df.crossJoin(F.broadcast(bps))
+            df.crossJoin(bps)
             .select(idx.alias("bucket"))
             .groupBy("bucket")
             .agg(F.count("*").alias("n"))
@@ -201,7 +202,7 @@ def psi_drift(
         ).alias("psi"),
         F.count("*").cast("long").alias("n_buckets_used"),
     ).crossJoin(
-        F.broadcast(old.agg(F.count("*").cast("long").alias("n_old")))
+        old.agg(F.count("*").cast("long").alias("n_old"))
     ).crossJoin(
-        F.broadcast(new.agg(F.count("*").cast("long").alias("n_new")))
+        new.agg(F.count("*").cast("long").alias("n_new"))
     )

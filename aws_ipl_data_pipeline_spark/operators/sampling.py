@@ -77,7 +77,7 @@ def token_budget_mix(
     denom = totals.agg(
         F.sum(F.pow(F.col("_t_s").cast("double"), F.lit(alpha))).alias("_z")
     )
-    targets = totals.crossJoin(F.broadcast(denom)).select(
+    targets = totals.crossJoin(denom).select(
         F.col(source_col).alias("_src_key"),
         (
             F.lit(float(budget_tokens))
@@ -85,6 +85,7 @@ def token_budget_mix(
             / F.col("_z")
         ).alias("target_tokens"),
     )
+    # without the hint the sf0.1 build side of this join flips
     ranked = df.join(
         F.broadcast(targets), F.col(source_col).eqNullSafe(F.col("_src_key"))
     ).drop("_src_key")
@@ -124,7 +125,7 @@ def domain_cap(
     """
     counts = df.groupBy(domain_col).agg(F.count("*").alias("_n_d"))
     sized = df.join(
-        F.broadcast(counts), df[domain_col].eqNullSafe(counts[domain_col]), "left"
+        counts, df[domain_col].eqNullSafe(counts[domain_col]), "left"
     ).drop(counts[domain_col])
     small = sized.where(F.col("_n_d") <= cap).drop("_n_d")
     w = Window.partitionBy(domain_col).orderBy(
@@ -159,7 +160,7 @@ def temperature_mix(
     downstream mixture audits don't recompute shares."""
     counts = df.groupBy(source_col).agg(F.count("*").alias("_n_s"))
     n_min = counts.agg(F.min("_n_s").alias("_n_min"))
-    rates = counts.crossJoin(F.broadcast(n_min)).select(
+    rates = counts.crossJoin(n_min).select(
         F.col(source_col).alias("_src_key"),
         F.pow(
             F.col("_n_s").cast("double") / F.col("_n_min"), F.lit(alpha - 1.0)
@@ -167,7 +168,8 @@ def temperature_mix(
     )
     # eqNullSafe: a NULL source is a legitimate stratum (groupBy produced
     # a NULL-keyed rate row); a plain equality join would silently drop
-    # every NULL-stratum row from the output
+    # every NULL-stratum row from the output. Without the broadcast hint
+    # the sf0.1 build side of this join flips.
     joined = df.join(
         F.broadcast(rates), F.col(source_col).eqNullSafe(F.col("_src_key"))
     ).drop("_src_key")
@@ -212,7 +214,7 @@ def curriculum_order(
         .when(F.col("n_tokens") <= F.col("_t75"), 2)
         .otherwise(3)
     )
-    t = d.crossJoin(F.broadcast(q)).select(
+    t = d.crossJoin(q).select(
         id_col,
         "n_tokens",
         tier.alias("tier"),

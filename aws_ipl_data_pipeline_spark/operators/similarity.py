@@ -549,6 +549,7 @@ def batch_topk(
 
     v = _as_double_vec(vec_col)
     qv = F.col(query_vec_col)
+    # without the hint the sf0.1 plan broadcasts the corpus side instead
     paired = emb.join(F.broadcast(queries))
     if pair_predicate is not None:
         # per-(corpus row, query) predicate — e.g. hard-negative
@@ -676,6 +677,7 @@ def batch_ivf_topk(
         F.desc("_cdot"), F.asc("cell")
     )
     probes = (
+        # without the hint the sf0.1 build side of this cross join flips
         queries.crossJoin(F.broadcast(cent_df))
         .withColumn("_cdot", idot)
         .withColumn("_pr", F.row_number().over(probe_w))
@@ -683,6 +685,7 @@ def batch_ivf_topk(
         .select(query_id_col, query_vec_col, "cell")
     )
     v = _as_double_vec(vec_col)
+    # without the hint the sf0.1 build side flips (4 -> 2 hash Exchanges)
     scored = celled.join(F.broadcast(probes), "cell").withColumn(
         "cos_sim", F.round(_dot(v, qv) / (_norm(v) * _norm(qv)), 4)
     )

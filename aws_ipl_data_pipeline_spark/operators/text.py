@@ -414,7 +414,7 @@ def bm25_score(
             for i in range(len(query_terms))
         ],
     )
-    scored = base.crossJoin(F.broadcast(stats))
+    scored = base.crossJoin(stats)
     avgdl = F.col("_sumdl") / F.col("_N")
     norm = F.lit(k1) * (F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / avgdl)
     score = F.lit(0.0)
@@ -498,7 +498,7 @@ def pmi_collocations(
     joined = (
         pc.join(uc.select(F.col("w").alias("w1"), F.col("w_count").alias("w1_count")), "w1")
         .join(uc.select(F.col("w").alias("w2"), F.col("w_count").alias("w2_count")), "w2")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
     )
     lhs = (
         F.lit(lift_den).cast(dec)

@@ -174,7 +174,7 @@ def top_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         order_rev.join(o, order_rev.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_custkey", "c_name")
         .agg(F.round(F.sum("_rev"), 2).alias("revenue"))
         .select(F.col("c_custkey").cast("long"), "c_name", "revenue")
@@ -283,7 +283,7 @@ def winner_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = t(spark, sf_dir, "nation")
     w = Window.partitionBy("n_name").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select(
@@ -316,7 +316,7 @@ def standings_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
     s = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(
             F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0))
@@ -487,8 +487,8 @@ def renamed_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = t(spark, sf_dir, "nation").withColumnRenamed("n_regionkey", "r_regionkey")
     r = t(spark, sf_dir, "region")
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), "r_regionkey")
+        c.join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, "r_regionkey")
         .groupBy("r_name")
         .agg(F.count("*").alias("n_customers"))
     )
@@ -512,6 +512,7 @@ def broadcast_dim_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = t(spark, sf_dir, "nation")
     dim = s.join(n, s.s_nationkey == n.n_nationkey).select("s_suppkey", "n_name")
     return (
+        # the hint is the point of this query; without it the sf0.1 build side flips
         li.join(F.broadcast(dim), li.l_suppkey == dim.s_suppkey)
         .groupBy("n_name")
         .agg(
@@ -2265,9 +2266,7 @@ def ann_lsh_radius_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_nc", F.count("*").over(cw)
     )
     per_radius = (
-        ranked.join(
-            F.broadcast(gt.withColumn("_hit", F.lit(1))), "vec_id", "left"
-        )
+        ranked.join(gt.withColumn("_hit", F.lit(1)), "vec_id", "left")
         .groupBy("radius")
         .agg(
             F.max("_nc").alias("n_candidates"),
@@ -2495,9 +2494,7 @@ def fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         raw.join(
-            F.broadcast(
-                c.select(F.col("c_name"), F.col("c_mktsegment").alias("_seg"))
-            ),
+            c.select(F.col("c_name"), F.col("c_mktsegment").alias("_seg")),
             F.col("_seg") == F.col("c_mktsegment"),
         )
         .withColumn(
@@ -4162,8 +4159,8 @@ def regional_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
             F.round(
@@ -4290,7 +4287,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("doc_id").cast("long").alias("df")
     )
     n_docs = docs.count()
-    scored = tf.join(F.broadcast(df_), "term").select(
+    scored = tf.join(df_, "term").select(
         "doc_id",
         "term",
         F.round(
@@ -4717,7 +4714,7 @@ def theta_sketch_exact_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         per.join(merged, "l_returnflag")
-        .crossJoin(F.broadcast(ask))
+        .crossJoin(ask)
         .select(
             "l_returnflag",
             F.theta_sketch_estimate("sk").cast("long").alias("theta_distinct"),
@@ -4934,7 +4931,7 @@ def stats_aggregates_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole group where F.median kept it with a NULL median.
     # Unreachable on TPC-H data (l_quantity is non-null) — this pins
     # the aggregate's declared shape, not a live result change.
-    return decl.join(F.broadcast(med), "l_returnflag", "left").select(
+    return decl.join(med, "l_returnflag", "left").select(
         "l_returnflag",
         "n_rows",
         "corr_qty_price",
@@ -5286,7 +5283,7 @@ def ann_dim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = F.lit(0).cast("long")
     return (
         levels.join(agg, "dim", "left")
-        .crossJoin(F.broadcast(gt.agg(F.count("*").alias("ngt"))))
+        .crossJoin(gt.agg(F.count("*").alias("ngt")))
         .select(
             F.col("dim").cast("long"),
             F.coalesce("n_found", zero).cast("long").alias("n_found"),
@@ -5833,7 +5830,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
             F.round(
@@ -5890,13 +5887,10 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (s.s_suppkey == li.l_suppkey) & (s.s_nationkey == c.c_nationkey),
-        )
-        .join(F.broadcast(n), n.n_nationkey == s.s_nationkey)
-        .join(F.broadcast(r), r.r_regionkey == n.n_regionkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, (s.s_suppkey == li.l_suppkey) & (s.s_nationkey == c.c_nationkey))
+        .join(n, n.n_nationkey == s.s_nationkey)
+        .join(r, r.r_regionkey == n.n_regionkey)
         .groupBy("n_name")
         .agg(
             F.round(
@@ -6014,10 +6008,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     rpair = (F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), s.s_nationkey == F.col("n1_key"))
-        .join(F.broadcast(n2), c.c_nationkey == F.col("n2_key"))
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n1, s.s_nationkey == F.col("n1_key"))
+        .join(n2, c.c_nationkey == F.col("n2_key"))
         .where(pair | rpair)
         .groupBy(
             "supp_nation",
@@ -6082,12 +6076,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(n1), s.s_nationkey == F.col("n1_key"))
-        .join(F.broadcast(n2), c.c_nationkey == F.col("n2_key"))
-        .join(F.broadcast(r), F.col("n2_region") == r.r_regionkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .join(n1, s.s_nationkey == F.col("n1_key"))
+        .join(n2, c.c_nationkey == F.col("n2_key"))
+        .join(r, F.col("n2_region") == r.r_regionkey)
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
             F.round(
@@ -6132,8 +6126,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = t(spark, sf_dir, "nation")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name")
         .agg(
             F.round(
@@ -6173,7 +6167,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = t(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             F.round(
                 F.lit(100.0)
@@ -6223,7 +6217,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         o.join(big, o.o_orderkey == F.col("l_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == c.c_custkey)
+        .join(c, F.col("o_custkey") == c.c_custkey)
         .select(
             "c_name",
             F.col("c_custkey").cast("long"),
@@ -6259,7 +6253,7 @@ def q19_disjunctive_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     join evaluates the exact disjunction."""
     li = t(spark, sf_dir, "lineitem")
     p = t(spark, sf_dir, "part")
-    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    j = li.join(p, li.l_partkey == p.p_partkey)
     arm1 = (
         (F.col("p_brand") == "Brand#12")
         & F.col("p_size").between(1, 5)
@@ -6313,7 +6307,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.where(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal").alias("a"))
     )
     return (
-        c.crossJoin(F.broadcast(avg_bal))
+        c.crossJoin(avg_bal)
         .where(F.col("c_acctbal") > F.col("a"))
         .join(o, F.col("c_custkey") == o.o_custkey, "left_anti")
         .groupBy("c_nationkey")
@@ -6969,9 +6963,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = rev.agg(F.max("total_rev").alias("_mx"))
     return (
-        rev.crossJoin(F.broadcast(mx))
+        rev.crossJoin(mx)
         .where(F.col("total_rev") == F.col("_mx"))
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
+        .join(s, F.col("l_suppkey") == s.s_suppkey)
         .select(F.col("s_suppkey").cast("long"), "s_name", "total_rev")
         .orderBy("s_suppkey")
     )
@@ -7001,13 +6995,13 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = t(spark, sf_dir, "part").where(F.col("p_brand") == "Brand#23")
     # average only the parts that can survive the brand filter
     li_branded = li.join(
-        F.broadcast(p.select("p_partkey")), li.l_partkey == F.col("p_partkey"), "left_semi"
+        p.select("p_partkey"), li.l_partkey == F.col("p_partkey"), "left_semi"
     )
     part_avg = li_branded.groupBy(F.col("l_partkey").alias("_pk")).agg(
         (F.lit(0.5) * F.avg("l_quantity")).alias("_thresh")
     )
     return (
-        li_branded.join(F.broadcast(part_avg), li.l_partkey == F.col("_pk"))
+        li_branded.join(part_avg, li.l_partkey == F.col("_pk"))
         .where(F.col("l_quantity") < F.col("_thresh"))
         .agg(
             F.round(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"),
@@ -7208,7 +7202,7 @@ def q21_sole_blame_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        base.join(F.broadcast(s), F.col("l1.l_suppkey") == s.s_suppkey)
+        base.join(s, F.col("l1.l_suppkey") == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count("*").cast("long").alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))
@@ -7305,8 +7299,8 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ps = li.select("l_partkey", "l_suppkey").distinct()
     return (
-        ps.join(F.broadcast(bad), ps.l_suppkey == F.col("s_suppkey"), "left_anti")
-        .join(F.broadcast(p), ps.l_partkey == p.p_partkey)
+        ps.join(bad, ps.l_suppkey == F.col("s_suppkey"), "left_anti")
+        .join(p, ps.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type", F.col("p_size").cast("long").alias("p_size"))
         .agg(F.countDistinct("l_suppkey").cast("long").alias("supplier_cnt"))
         .orderBy(
@@ -7623,14 +7617,15 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = t(spark, sf_dir, "nation")
     r = t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
     eu = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        s.join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     cand = (
         _ps_catalog(li)
+        # without the hint the sf0.1 build side of this join flips
         .join(F.broadcast(eu), F.col("ps_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(p), F.col("ps_partkey") == p.p_partkey)
+        .join(p, F.col("ps_partkey") == p.p_partkey)
         .withColumn(
             "min_cost",
             F.min("ps_supplycost").over(Window.partitionBy("p_partkey")),
@@ -7690,7 +7685,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     # prune the fact to the product family FIRST (broadcast semi), so
     # both the catalog agg and the join shuffle only family rows
-    lif = li.join(F.broadcast(p), li.l_partkey == p.p_partkey, "left_semi")
+    lif = li.join(p, li.l_partkey == p.p_partkey, "left_semi")
     ps = _ps_catalog(lif)
     return (
         lif.join(
@@ -7698,8 +7693,8 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (lif.l_partkey == ps.ps_partkey) & (lif.l_suppkey == ps.ps_suppkey),
         )
         .join(o, lif.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), lif.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(s, lif.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("long").alias("o_year"),
@@ -7761,10 +7756,11 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = t(spark, sf_dir, "nation")
     r = t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     nsup = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        s.join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey")
     )
+    # without the hint sf0.1 plans 2 sort-merge joins (6 -> 12 hash Exchanges)
     lif = li.join(F.broadcast(nsup), li.l_suppkey == nsup.s_suppkey, "left_semi")
     # integer-exact gate (ADVICE r6): quantize 2dp money to cents
     # per-row (exact — l_extendedprice*100 is within fp noise of an
@@ -7783,7 +7779,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("nparts"),
     )
     return (
-        pv.crossJoin(F.broadcast(tot))
+        pv.crossJoin(tot)
         .where(
             2 * F.col("nparts") * F.col("part_value_cents")
             > 3 * F.col("total_cents")
@@ -7901,7 +7897,7 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
     r = t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    fam = li.join(F.broadcast(p), li.l_partkey == p.p_partkey, "left_semi")
+    fam = li.join(p, li.l_partkey == p.p_partkey, "left_semi")
     avail = fam.groupBy("l_partkey", "l_suppkey").agg(
         (F.count("*") * 5).alias("avail_qty")
     )
@@ -7926,8 +7922,8 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
     )
     return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        s.join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .join(surplus, s.s_suppkey == surplus.l_suppkey, "left_semi")
         .select("s_name", F.round("s_acctbal", 2).alias("s_acctbal"))
         .orderBy("s_name")
@@ -8832,7 +8828,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = tf.agg(
         F.sum("tf").alias("total"), F.count("*").alias("vocab")
     )
-    checkpoints = ranked.crossJoin(F.broadcast(tot)).where(
+    checkpoints = ranked.crossJoin(tot).where(
         F.col("rank").isin([1, 2, 4, 8, 16, 64, 256, 1024, 4096, 16384])
         & (F.col("rank") < F.col("vocab"))
     )
@@ -9833,7 +9829,8 @@ def curation_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # bounded: near-dup batch ids
     )
     # nd is a bounded id-set on a stats-less checkpoint scan — same
-    # explicit-broadcast rationale as curation_pipeline_e2e (r13)
+    # explicit-broadcast rationale as curation_pipeline_e2e (r13);
+    # without it sf0.1 plans a sort-merge join (2 -> 5 hash Exchanges)
     flags = pre.join(F.broadcast(nd), "doc_id", "left")
     f_nr = f_ex & F.col("_nd").isNull()
 
@@ -9955,12 +9952,7 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_nd", F.lit(1))
         .localCheckpoint(eager=True)  # bounded: near-dup ids only
     )
-    # nd/ctm are BOUNDED id-sets (dup/contamination mass) riding
-    # checkpoints, whose ExistingRDD scans carry no size stats — the
-    # static planner falls back to sort-merge joins on doc_id without
-    # the explicit broadcast (r13 plan dump: SMJ exchanges around every
-    # flag join; guide §3.1: hint when you know a side is small)
-    s3 = s2.join(F.broadcast(nd), "doc_id", "left_anti")
+    s3 = s2.join(nd, "doc_id", "left_anti")
     ctm = (
         decontaminate(s3, bench, n=5, min_overlap=3)
         .select(F.col("train_doc_id").cast("long").alias("doc_id"))
@@ -9968,6 +9960,12 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_ct", F.lit(1))
         .localCheckpoint(eager=True)  # bounded: contaminated ids only
     )
+    # nd/ctm are BOUNDED id-sets (dup/contamination mass) riding
+    # checkpoints, whose ExistingRDD scans carry no size stats — the
+    # static planner falls back to sort-merge joins on doc_id without
+    # the explicit broadcast (guide §3.1: hint when you know a side is
+    # small). Without one of the two hints sf0.1 plans 3 sort-merge
+    # joins (8 -> 17 hash Exchanges without nd's, 8 -> 22 without ctm's).
     pre = sk.join(F.broadcast(nd), "doc_id", "left").join(
         F.broadcast(ctm), "doc_id", "left"
     )
@@ -9976,14 +9974,13 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # temperature_mix's rate table over stage-4 survivors (k rows)
     counts = pre.where(f_dc).groupBy("lang").agg(F.count("*").alias("_n_s"))
-    rates = counts.crossJoin(
-        F.broadcast(counts.agg(F.min("_n_s").alias("_n_min")))
-    ).select(
+    rates = counts.crossJoin(counts.agg(F.min("_n_s").alias("_n_min"))).select(
         F.col("lang").alias("_lang_key"),
         F.pow(F.col("_n_s").cast("double") / F.col("_n_min"), F.lit(-0.5)).alias(
             "keep_prob"
         ),
     )
+    # without the hint sf0.1 plans a sort-merge join (8 -> 11 hash Exchanges)
     flags = pre.join(
         F.broadcast(rates), F.col("lang").eqNullSafe(F.col("_lang_key")), "left"
     )
@@ -10608,7 +10605,7 @@ def decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("_tus"),
     )
     ref = ev.agg(F.max("_tus").alias("_tmax"))
-    aged = ev.crossJoin(F.broadcast(ref)).select(
+    aged = ev.crossJoin(ref).select(
         "user_id",
         F.expr("(_tmax - _tus) div 86400000000").alias("_age"),
     )
@@ -10678,7 +10675,7 @@ def chi2_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_o",
         F.sum("_o").over(ws).alias("_rt"),
         F.sum("_o").over(wl).alias("_ct"),
-    ).crossJoin(F.broadcast(tot))
+    ).crossJoin(tot)
     dd = (
         F.col("_o") * F.col("_n") - F.col("_rt") * F.col("_ct")
     ).cast("double")
@@ -10762,7 +10759,7 @@ def cusum_drift_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .agg(F.round(F.avg("value") * 10000, 0).cast("long").alias("_t"))
     )
-    d = ev.crossJoin(F.broadcast(tgt)).select(
+    d = ev.crossJoin(tgt).select(
         "user_id",
         "event_id",
         "tus",
@@ -10859,7 +10856,7 @@ def embedding_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         d.join(n, "label")
-        .crossJoin(F.broadcast(bb))
+        .crossJoin(bb)
         .select(
             F.col("label").cast("int").alias("label"),
             "n_vecs",
@@ -11215,6 +11212,7 @@ def ann_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pw = Window.partitionBy("query_id").orderBy(F.desc("_cdot"), F.asc("cell"))
     probe_ranks = (
+        # without the hint the sf0.1 build side of this cross join flips
         queries.crossJoin(F.broadcast(cent_df))
         .withColumn("_cdot", idot)
         .withColumn("_pr", F.row_number().over(pw))
@@ -11227,6 +11225,7 @@ def ann_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _adv("embedding")
     qv = F.col("query_vec")
     scored = (
+        # without the hint the sf0.1 build side flips (17 -> 14 hash Exchanges)
         celled.join(F.broadcast(probe_ranks), "cell")
         .where(F.col("vec_id") != F.col("query_id"))
         .withColumn(
@@ -11264,7 +11263,7 @@ def ann_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = F.lit(0).cast("long")
     return (
         levels.join(agg, "n_probe", "left")
-        .crossJoin(F.broadcast(gt.agg(F.count("*").alias("ngt"))))
+        .crossJoin(gt.agg(F.count("*").alias("ngt")))
         .select(
             F.col("n_probe").cast("long"),
             F.coalesce("n_found", zero).cast("long").alias("n_found"),
@@ -11346,11 +11345,6 @@ def media_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frames = frame_fingerprints(media, frame_bytes=64)
     return frame_overlap_pairs(frames, min_containment_pct=50)
-
-
-# register the IPL-medallion VALUES-fixture queries (bottom import: the
-# module needs `register`, defined above, at its import time)
-from aws_ipl_data_pipeline_spark import queries_ipl  # noqa: E402,F401
 
 
 # --------------------------------------------------------------------------
@@ -11487,4 +11481,8 @@ def _reorder_registry() -> None:
     REGISTRY.update(ordered)
 
 
-_reorder_registry()
+# register the IPL-medallion VALUES-fixture queries (bottom import: the
+# module needs `register` and `_reorder_registry`, defined above, at its
+# import time). queries_ipl registers last, so IT calls _reorder_registry:
+# importing either module first then gives the same registry order.
+from aws_ipl_data_pipeline_spark import queries_ipl  # noqa: E402,F401

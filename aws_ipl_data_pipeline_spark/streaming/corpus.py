@@ -19,7 +19,6 @@ posture as the reference's bronze layer (ex_match_rb.py:201-213).
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,7 +26,7 @@ from aws_ipl_data_pipeline_spark.operators.dedup import (
     incremental_dedup,
     prefix_fingerprint,
 )
-from aws_ipl_data_pipeline_spark.sources.readers import local_frame
+from aws_ipl_data_pipeline_spark.sources.readers import local_frame, path_exists
 
 
 def run_corpus_ingest(
@@ -53,11 +52,9 @@ def run_corpus_ingest(
         if batch_df.isEmpty():
             return
         ok = batch_df.where(F.length(F.trim("text")) >= min_chars)
-        try:
+        if path_exists(spark, digest_path):
             seen = spark.read.parquet(digest_path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
+        else:
             seen = local_frame(spark, "text_hash string")
         novel_ids = incremental_dedup(ok, seen)
         admitted = ok.join(novel_ids.select("doc_id"), "doc_id")
@@ -115,13 +112,11 @@ def run_segment_dedup_ingest(
         segs = chunk_documents(
             batch_df, chunk_tokens=seg_tokens, overlap=0
         ).withColumn("_h", F.md5("chunk_text"))
-        try:
+        if path_exists(spark, seg_digest_path):
             seen = spark.read.parquet(seg_digest_path).select(
                 F.col("seg_hash").alias("_h"), F.lit(True).alias("_seen")
             )
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
+        else:
             seen = local_frame(spark, "_h string, _seen boolean")
         w = Window.partitionBy("_h").orderBy("doc_id", "chunk_id")
         # plain left join on the digest (AQE broadcasts while it fits;
@@ -242,11 +237,9 @@ def run_near_dedup_ingest(
         survivors = batch_df.join(batch_rejects, "doc_id", "left_anti")
         new_state = minhash_state(survivors, **mh_args).localCheckpoint(eager=True)
         # (a) vs the admitted-signature state
-        try:
+        if path_exists(spark, sig_path):
             state = spark.read.parquet(sig_path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
+        else:
             state = local_frame(spark, new_state.schema)
         hits = near_dup_pairs_vs_state(new_state, state, threshold=threshold)
         # pin the tiny REJECT set once: both writes below derive from

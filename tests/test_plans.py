@@ -468,9 +468,21 @@ def test_exists_shapes_compile_to_semi_anti_joins(spark):
 
 
 def test_classic_join_shapes_all_dims_broadcast(spark):
-    """Q7/Q8/Q10: every dimension side broadcasts; at most one
-    shuffle join (lineitem⋈orders) survives."""
-    for q in ("q7_volume_shipping", "q8_market_share", "q10_returned_items"):
+    """Q3/Q5/Q7/Q8/Q10/Q15-Q18/Q21: every dimension side broadcasts; at
+    most one shuffle join (lineitem⋈orders) survives. None of these
+    queries hints a broadcast: the planner must choose them itself."""
+    for q in (
+        "q3_shipping_priority",
+        "q5_local_supplier_volume",
+        "q7_volume_shipping",
+        "q8_market_share",
+        "q10_returned_items",
+        "q15_top_supplier",
+        "q16_supplier_part_counts",
+        "q17_small_quantity_revenue",
+        "q18_large_volume_customer",
+        "q21_sole_blame_supplier",
+    ):
         p = formatted_plan(spark, q)
         assert _nodes(p, "SortMergeJoin") <= 1, q
         assert "CartesianProduct" not in p, q

@@ -56,3 +56,26 @@ def test_driver_window_ordering_invariants():
     assert len(names) == len(set(names))
     # the window head must follow _DRIVER_FIRST exactly
     assert names[: len(_DRIVER_FIRST)] == _DRIVER_FIRST
+
+
+@pytest.mark.parametrize("first", ["queries", "queries_ipl"])
+def test_registry_order_independent_of_import_order(first):
+    """Either query module can be imported first (no JVM is started), and
+    both import orders give the same registry order, _DRIVER_FIRST head
+    included."""
+    import json
+    import subprocess
+    import sys
+
+    code = (
+        "import importlib, json\n"
+        f"importlib.import_module('aws_ipl_data_pipeline_spark.{first}')\n"
+        "from aws_ipl_data_pipeline_spark.queries import REGISTRY\n"
+        "print(json.dumps(list(REGISTRY)))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.splitlines()[-1]) == list(REGISTRY)

@@ -1,7 +1,8 @@
 """Per-query optimization harness (optimization round r12): time named
 registry queries against the noop sink (guide §1.4) in ONE JVM with
-best/median over N iters, and optionally dump `.explain("formatted")`
-to plans/<tag>/<name>_<suffix>.txt so plan claims are reproducible.
+best/median over N iters, and optionally run each once and dump the
+final (executed) `.explain("formatted")` to plans/<tag>/<name>_<suffix>.txt
+so plan claims are reproducible.
 
 Usage:
   python tools/time_query.py name1,name2 [--iters 6] [--sf-dir DIR]
@@ -54,6 +55,9 @@ def main() -> int:
 
             os.makedirs(args.explain, exist_ok=True)
             df = fn(spark, args.sf_dir)
+            # run it once first, so the dump is AQE's final plan (the
+            # one that ran), not the isFinalPlan=false initial plan
+            df._jdf.queryExecution().toRdd().count()
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
