@@ -50,6 +50,14 @@ def cmd_bronze(args) -> None:
 
     spark = _spark("bronze")
     raw = read_csv(spark, args.raw_dir, RAW_DELIVERIES)
+    # a driver-side listing, no job: the raw layout is one directory per
+    # match, so a --raw-dir without the */ glob lists no CSV file
+    if not raw.inputFiles():
+        sys.exit(
+            f"bronze: no input files under --raw-dir {args.raw_dir!r}; the raw"
+            " layout is one CSV directory per match, so pass a glob like"
+            " 'raw/*/'"
+        )
     bronze = to_bronze(raw)
     write_partitioned(bronze, args.out, partition_by=["match"])
 
@@ -179,10 +187,21 @@ def cmd_stream(args) -> None:
 
 
 def cmd_sql(args) -> None:
+    from aws_ipl_data_pipeline_spark.sources.versioned import (
+        current_version,
+        read_snapshot,
+    )
+
     spark = _spark("sql")
     for spec in args.table or []:
         name, _, path = spec.partition("=")
-        spark.read.parquet(path).createOrReplaceTempView(name)
+        # a versioned table (gold --versioned) is read at its committed
+        # snapshot; a plain parquet read would union every v=N directory
+        if current_version(spark, path) is None:
+            df = spark.read.parquet(path)
+        else:
+            df = read_snapshot(spark, path)
+        df.createOrReplaceTempView(name)
     spark.sql(args.query).show(args.rows, truncate=False)
 
 

@@ -3,11 +3,24 @@
 Re-expresses reference pipeline_2026/ex_match_sg.py as pure DataFrame
 aggregations — the per-team Python loops (:234-291) become conditional
 aggregation + joins; the rank-after-sort (:293-294) becomes a window
-``row_number``. Every join's small side (per-team / per-match summaries)
-broadcasts; the only shuffles are the keyed groupBys, which Spark
-partial-aggregates map-side.
+``row_number``.
 
-Parity quirks preserved on purpose (see tests/test_gold.py):
+Each table is built in two steps, and both gold modes run the same two:
+
+* ``*_parts(silver)`` — the per-(match, key) integer sums and counts.
+  This is the only code in the package that aggregates silver for gold.
+* ``*_from_parts(...)`` — merges the parts per key and derives the
+  ratio, win/loss and rank columns. A key's match count is its number
+  of part rows, the highest score is the max over per-match runs, and
+  the nullable Powerplay sums stay null-skipping (null iff the key has
+  no Powerplay ball in any match).
+
+The public builders (``batsman_stats`` …, ``GOLD_BUILDERS``) are
+``*_from_parts(*_parts(silver))``, the full recompute.
+plans/gold_incremental.py stores the parts per match and merges gold
+from the stored rows with the same ``*_from_parts``.
+
+Parity quirks preserved on purpose (see tests/test_medallion.py):
 
 * safe_div replicates ``.replace(0, 1)`` — divide by 1, not null, when a
   denominator is 0 (:144-146,167-170,195,203).
@@ -33,90 +46,96 @@ from aws_ipl_data_pipeline_spark.functions.scalars import (
 )
 
 
-def batsman_stats(silver: DataFrame) -> DataFrame:
-    """gold_batsman_stats (reference ex_match_sg.py:121-148)."""
-    df_bat = silver.where(not_na("batsman"))
+def _pct(part: str, whole: str):
+    return F.round(safe_div(F.col(part) * 100.0, F.col(whole)), 2)
 
-    # two-level max-of-sum: per (batsman, match) runs → per batsman max
-    highest = (
-        df_bat.groupBy("batsman", "match")
-        .agg(F.sum("runs").alias("_match_runs"))
-        .groupBy("batsman")
-        .agg(F.max("_match_runs").alias("highest_score"))
+
+def _per_over(runs: str, balls: str):
+    return F.round(safe_div(F.col(runs), F.col(balls) / 6.0), 2)
+
+
+def batsman_parts(silver: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(match, batsman) batting sums, and (match, batsman) out counts
+    over the FULL table, not the batsman-filtered one (the times_out
+    quirk, reference ex_match_sg.py:137-140)."""
+    bat = (
+        silver.where(not_na("batsman"))
+        .groupBy("match", "batsman")
+        .agg(
+            F.sum("runs").alias("match_runs"),
+            F.sum("is_legal_delivery").alias("legal_balls"),
+            F.sum("is_four").alias("fours"),
+            F.sum("is_six").alias("sixes"),
+            F.sum("is_dot_ball").alias("dot_balls"),
+        )
     )
-
-    stats = df_bat.groupBy("batsman").agg(
-        F.countDistinct("match").alias("matches"),
-        F.sum("runs").alias("total_runs"),
-        F.sum("is_legal_delivery").alias("legal_balls"),
-        F.sum("is_four").alias("fours"),
-        F.sum("is_six").alias("sixes"),
-        F.sum("is_dot_ball").alias("dot_balls"),
-    )
-
-    # times_out counts over the FULL table, not the batsman-filtered one
     outs = (
         silver.where(not_na("out_batsman"))
-        .groupBy(F.col("out_batsman").alias("batsman"))
+        .groupBy("match", F.col("out_batsman").alias("batsman"))
         .agg(F.count("*").alias("times_out"))
     )
+    return bat, outs
 
-    return _finish_batsman(stats, highest, outs)
 
-
-def _finish_batsman(
-    stats: DataFrame, highest: DataFrame, outs: DataFrame
-) -> DataFrame:
-    """Shared batsman finisher (batch builder above; incremental
-    partial-merge path in plans/gold_incremental.py): join the three
-    keyed frames and derive the ratio columns. Input content equal ⇒
-    output equal, which is what pins batch ≡ incremental."""
-    out = (
-        stats.join(highest, "batsman", "left")
-        .join(outs, "batsman", "left")
-        .withColumn("times_out", F.coalesce("times_out", F.lit(0)).cast("int"))
+def batsman_from_parts(bat: DataFrame, outs: DataFrame) -> DataFrame:
+    """gold_batsman_stats (reference ex_match_sg.py:121-148)."""
+    stats = bat.groupBy("batsman").agg(
+        F.count("*").alias("matches"),
+        F.sum("match_runs").alias("total_runs"),
+        F.sum("legal_balls").alias("legal_balls"),
+        F.sum("fours").alias("fours"),
+        F.sum("sixes").alias("sixes"),
+        F.sum("dot_balls").alias("dot_balls"),
+        F.max("match_runs").alias("highest_score"),
     )
+    outs = outs.groupBy("batsman").agg(F.sum("times_out").alias("times_out"))
     return (
-        out.withColumn(
-            "strike_rate",
-            F.round(safe_div(F.col("total_runs") * 100.0, F.col("legal_balls")), 2),
-        )
+        stats.join(outs, "batsman", "left")
+        .withColumn("times_out", F.coalesce("times_out", F.lit(0)).cast("int"))
+        .withColumn("strike_rate", _pct("total_runs", "legal_balls"))
         .withColumn(
             "batting_avg", F.round(safe_div(F.col("total_runs"), F.col("times_out")), 2)
         )
-        .withColumn(
-            "dot_ball_pct",
-            F.round(safe_div(F.col("dot_balls") * 100.0, F.col("legal_balls")), 2),
-        )
+        .withColumn("dot_ball_pct", _pct("dot_balls", "legal_balls"))
         .orderBy(F.desc("total_runs"))
     )
 
 
-def bowler_stats(silver: DataFrame) -> DataFrame:
-    """gold_bowler_stats (reference ex_match_sg.py:150-172)."""
-    df_bowl = silver.where(not_na("bowler"))
-    stats = df_bowl.groupBy("bowler").agg(
-        F.countDistinct("match").alias("matches"),
-        F.sum("total_runs").alias("total_runs_conceded"),
-        F.sum("is_legal_delivery").alias("legal_balls"),
-        F.sum("wicket").alias("wickets"),
-        F.sum("is_dot_ball").alias("dot_balls"),
-        F.sum("is_four").alias("fours_conceded"),
-        F.sum("is_six").alias("sixes_conceded"),
-    )
-    return _finish_bowler(stats)
+def batsman_stats(silver: DataFrame) -> DataFrame:
+    return batsman_from_parts(*batsman_parts(silver))
 
 
-def _finish_bowler(stats: DataFrame) -> DataFrame:
-    """Shared bowler finisher (batch + incremental paths)."""
+def bowler_parts(silver: DataFrame) -> DataFrame:
+    """(match, bowler) bowling sums."""
     return (
-        stats.withColumn("overs_bowled", overs_notation(F.col("legal_balls")))
-        .withColumn(
-            "economy_rate",
-            F.round(
-                safe_div(F.col("total_runs_conceded"), F.col("legal_balls") / 6.0), 2
-            ),
+        silver.where(not_na("bowler"))
+        .groupBy("match", "bowler")
+        .agg(
+            F.sum("total_runs").alias("total_runs_conceded"),
+            F.sum("is_legal_delivery").alias("legal_balls"),
+            F.sum("wicket").alias("wickets"),
+            F.sum("is_dot_ball").alias("dot_balls"),
+            F.sum("is_four").alias("fours_conceded"),
+            F.sum("is_six").alias("sixes_conceded"),
         )
+    )
+
+
+def bowler_from_parts(parts: DataFrame) -> DataFrame:
+    """gold_bowler_stats (reference ex_match_sg.py:150-172)."""
+    return (
+        parts.groupBy("bowler")
+        .agg(
+            F.count("*").alias("matches"),
+            F.sum("total_runs_conceded").alias("total_runs_conceded"),
+            F.sum("legal_balls").alias("legal_balls"),
+            F.sum("wickets").alias("wickets"),
+            F.sum("dot_balls").alias("dot_balls"),
+            F.sum("fours_conceded").alias("fours_conceded"),
+            F.sum("sixes_conceded").alias("sixes_conceded"),
+        )
+        .withColumn("overs_bowled", overs_notation(F.col("legal_balls")))
+        .withColumn("economy_rate", _per_over("total_runs_conceded", "legal_balls"))
         .withColumn(
             "bowling_avg",
             F.round(safe_div(F.col("total_runs_conceded"), F.col("wickets")), 2),
@@ -124,100 +143,86 @@ def _finish_bowler(stats: DataFrame) -> DataFrame:
         .withColumn(
             "strike_rate", F.round(safe_div(F.col("legal_balls"), F.col("wickets")), 2)
         )
-        .withColumn(
-            "dot_ball_pct",
-            F.round(safe_div(F.col("dot_balls") * 100.0, F.col("legal_balls")), 2),
-        )
+        .withColumn("dot_ball_pct", _pct("dot_balls", "legal_balls"))
         .orderBy(F.desc("wickets"), F.asc("economy_rate"))
     )
 
 
-def team_stats(silver: DataFrame) -> DataFrame:
-    """gold_team_stats (reference ex_match_sg.py:174-208).
-
-    The Powerplay breakdown is a conditional aggregation — no pre-filter
-    pass over the fact table (reference filters then re-groups, :199-203).
-    """
-    df_team = silver.where(not_na("batting_team"))
-    stats = df_team.groupBy(F.col("batting_team").alias("team")).agg(
-        F.countDistinct("match").alias("matches"),
-        F.sum("total_runs").alias("total_runs"),
-        F.sum("wicket").alias("total_wickets_lost"),
-        F.sum("is_legal_delivery").alias("legal_balls"),
-        F.sum("is_four").alias("fours"),
-        F.sum("is_six").alias("sixes"),
-        # powerplay sums in the same pass
-        F.sum(F.when(F.col("innings_phase") == "Powerplay", F.col("total_runs"))).alias(
-            "_pp_runs"
-        ),
-        F.sum(
-            F.when(F.col("innings_phase") == "Powerplay", F.col("is_legal_delivery"))
-        ).alias("_pp_balls"),
-    )
-    return _finish_team(stats)
+def bowler_stats(silver: DataFrame) -> DataFrame:
+    return bowler_from_parts(bowler_parts(silver))
 
 
-def _finish_team(stats: DataFrame) -> DataFrame:
-    """Shared team finisher (batch + incremental paths)."""
+def team_parts(silver: DataFrame) -> DataFrame:
+    """(match, team) batting sums. The Powerplay breakdown is a
+    conditional aggregation in the same pass — no pre-filter pass over
+    the fact table (reference filters then re-groups, :199-203)."""
+    powerplay = F.col("innings_phase") == "Powerplay"
     return (
-        stats.withColumn("overs_batted", overs_notation(F.col("legal_balls")))
-        .withColumn(
-            "overall_run_rate",
-            F.round(safe_div(F.col("total_runs"), F.col("legal_balls") / 6.0), 2),
+        silver.where(not_na("batting_team"))
+        .groupBy("match", F.col("batting_team").alias("team"))
+        .agg(
+            F.sum("total_runs").alias("total_runs"),
+            F.sum("wicket").alias("wickets_lost"),
+            F.sum("is_legal_delivery").alias("legal_balls"),
+            F.sum("is_four").alias("fours"),
+            F.sum("is_six").alias("sixes"),
+            F.sum(F.when(powerplay, F.col("total_runs"))).alias("pp_runs"),
+            F.sum(F.when(powerplay, F.col("is_legal_delivery"))).alias("pp_balls"),
         )
+    )
+
+
+def team_from_parts(parts: DataFrame) -> DataFrame:
+    """gold_team_stats (reference ex_match_sg.py:174-208)."""
+    return (
+        parts.groupBy("team")
+        .agg(
+            F.count("*").alias("matches"),
+            F.sum("total_runs").alias("total_runs"),
+            F.sum("wickets_lost").alias("total_wickets_lost"),
+            F.sum("legal_balls").alias("legal_balls"),
+            F.sum("fours").alias("fours"),
+            F.sum("sixes").alias("sixes"),
+            F.sum("pp_runs").alias("pp_runs"),
+            F.sum("pp_balls").alias("pp_balls"),
+        )
+        .withColumn("overs_batted", overs_notation(F.col("legal_balls")))
+        .withColumn("overall_run_rate", _per_over("total_runs", "legal_balls"))
         .withColumn(
             "pp_run_rate",
-            F.when(
-                F.col("_pp_runs").isNotNull(),
-                F.round(safe_div(F.col("_pp_runs"), F.col("_pp_balls") / 6.0), 2),
-            ),
+            F.when(F.col("pp_runs").isNotNull(), _per_over("pp_runs", "pp_balls")),
         )
-        .drop("_pp_runs", "_pp_balls")
+        .drop("pp_runs", "pp_balls")
         .orderBy(F.desc("total_runs"))
     )
 
 
-def tournament_standings(silver: DataFrame) -> DataFrame:
-    """gold_tournament_standings (reference ex_match_sg.py:210-297)."""
-    df_clean = silver.where(not_na("batting_team") & not_na("bowling_team"))
+def team_stats(silver: DataFrame) -> DataFrame:
+    return team_from_parts(team_parts(silver))
 
-    bat = (
-        df_clean.groupBy("match", F.col("batting_team").alias("team"))
-        .agg(
-            F.sum("total_runs").alias("runs_scored"),
-            F.sum("is_legal_delivery").alias("legal_balls_batted"),
-        )
+
+def standings_parts(silver: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(match, team) runs and legal balls of each batting side and of
+    each bowling side, over the deliveries whose two team labels are
+    both known."""
+    clean = silver.where(not_na("batting_team") & not_na("bowling_team"))
+    bat = clean.groupBy("match", F.col("batting_team").alias("team")).agg(
+        F.sum("total_runs").alias("runs_scored"),
+        F.sum("is_legal_delivery").alias("legal_balls_batted"),
     )
-    bowl = (
-        df_clean.groupBy("match", F.col("bowling_team").alias("team"))
-        .agg(
-            F.sum("total_runs").alias("runs_conceded"),
-            F.sum("is_legal_delivery").alias("legal_balls_bowled"),
-        )
+    bowl = clean.groupBy("match", F.col("bowling_team").alias("team")).agg(
+        F.sum("total_runs").alias("runs_conceded"),
+        F.sum("is_legal_delivery").alias("legal_balls_bowled"),
     )
-    all_teams = df_clean.select(F.col("batting_team").alias("team")).distinct()
-    return _finish_standings(bat, bowl, all_teams)
+    return bat, bowl
 
 
-def _finish_standings(
-    bat: DataFrame, bowl: DataFrame, all_teams: DataFrame
-) -> DataFrame:
-    """Shared standings finisher (batch + incremental paths): from the
-    per-(match, team) batting/bowling totals and the team universe,
-    derive winners, points, NRR and rank. ``bat`` must carry
-    (match, team, runs_scored, legal_balls_batted); ``bowl``
-    (match, team, runs_conceded, legal_balls_bowled)."""
-    match_stats = (
-        bat.join(bowl, ["match", "team"], "outer")
-        .na.fill(
-            0,
-            [
-                "runs_scored",
-                "legal_balls_batted",
-                "runs_conceded",
-                "legal_balls_bowled",
-            ],
-        )
+def standings_from_parts(bat: DataFrame, bowl: DataFrame) -> DataFrame:
+    """gold_tournament_standings (reference ex_match_sg.py:210-297): from
+    the per-(match, team) batting and bowling totals derive winners,
+    points, NRR and rank. The teams are the batting teams."""
+    match_stats = bat.join(bowl, ["match", "team"], "outer").na.fill(
+        0, ["runs_scored", "legal_balls_batted", "runs_conceded", "legal_balls_bowled"]
     )
 
     # winner/loser per match with exactly 2 batting teams (reference
@@ -230,15 +235,11 @@ def _finish_standings(
         F.max_by("team", "runs_scored").alias("_max_team"),
         F.min_by("team", "runs_scored").alias("_min_team"),
     )
+    decided = F.col("_max_runs") > F.col("_min_runs")
     winners = per_match.where(F.col("_n_teams") == 2).select(
         "match",
-        F.when(F.col("_max_runs") > F.col("_min_runs"), F.col("_max_team")).alias(
-            "winner"
-        ),
-        F.when(F.col("_max_runs") > F.col("_min_runs"), F.col("_min_team")).alias(
-            "loser"
-        ),
-        (F.col("_max_runs") == F.col("_min_runs")).alias("is_tie"),
+        F.when(decided, F.col("_max_team")).alias("winner"),
+        F.when(decided, F.col("_min_team")).alias("loser"),
     )
 
     # unpivot winners to per-team outcomes; tie rows have null winner and
@@ -262,7 +263,8 @@ def _finish_standings(
     )
 
     st = (
-        all_teams.join(outcomes, "team", "left")
+        bat.select("team").distinct()
+        .join(outcomes, "team", "left")
         .join(totals, "team", "left")
         .na.fill(0, ["won", "lost", "runs_for", "_balls_for", "runs_against", "_balls_against"])
         .withColumn("tied_nr", F.lit(0))
@@ -315,7 +317,11 @@ def _finish_standings(
     )
 
 
-# the four gold tables in publish order: table name → one-pass builder
+def tournament_standings(silver: DataFrame) -> DataFrame:
+    return standings_from_parts(*standings_parts(silver))
+
+
+# the four gold tables in publish order: table name → full-recompute builder
 GOLD_BUILDERS = {
     "gold_batsman_stats": batsman_stats,
     "gold_bowler_stats": bowler_stats,

@@ -1,17 +1,19 @@
-"""Incremental gold maintenance (ST4 at 100×, VERDICT r6 item 4).
+"""Incremental gold maintenance: the stored per-match parts.
 
 The reference recomputes all four gold tables from FULL silver on every
 trigger (ex_match_sg.py:323-347) — faithful, but a scale-killer when
-silver is 100 TB and one match changed. This module decomposes each
-gold table into per-(match, key) PARTIAL aggregates:
+silver is 100 TB and one match changed. plans/gold.py builds each gold
+table as per-(match, key) integer parts merged per key; this module
+stores those parts:
 
   silver (per-delivery, huge)
-    → match partials (one row per key per match — ~|players per match|
-      rows per match; stored hash-BUCKETED by match, 256 dirs at any
-      match count — see match_bucket_col for the r9 measurement that
-      retired the per-match layout)
-    → gold (merge partials per key + the shared finishers in
-      plans/gold.py)
+    → match partials (plans/gold.py's ``*_parts`` packed one row per
+      (match, key) — ~|players per match| rows per match; stored
+      hash-BUCKETED by match, 256 dirs at any match count — see
+      match_bucket_col for the r9 measurement that retired the
+      per-match layout)
+    → gold (the stored rows unpacked into plans/gold.py's
+      ``*_from_parts``)
 
 On a micro-batch only the affected matches' partials are recomputed
 (from the batch's silver rows, already in memory) and their BUCKETS
@@ -23,16 +25,13 @@ O(batch deliveries) + O(#keys × #matches), independent of total
 silver size — and the partials scan lists O(256) directories, not
 O(#matches).
 
-Exactness: every partial is an integer sum/count (silver flags and run
-columns are ints), so two-level aggregation is bit-identical to the
-one-pass batch builders; countDistinct(match) becomes a count of
-partial rows; max-of-sum becomes max over per-match sums; the nullable
-Powerplay conditional sums stay null-skipping through both levels
-(null iff no Powerplay rows at any level). All ratio math happens in
-the SHARED finishers (`_finish_*` in plans/gold.py), so batch and
-incremental cannot drift — pinned by tests/test_gold_incremental.py
-(builder ≡ partials-merge on the golden fixtures, and batch backfill ≡
-multi-batch incremental stream).
+Packing: a table with two parts (batsman: batting sums and out counts;
+standings: batting and bowling sides) stores them outer-joined on
+(match, key), with a boolean presence flag per part; team_stats and
+standings share one table. Unpacking re-selects each part's rows by
+its flag, so full and incremental gold run the same merge code —
+pinned by tests/test_gold_incremental.py against a DuckDB reference
+built from queries_ipl.py's SQL specs.
 """
 
 from __future__ import annotations
@@ -42,13 +41,16 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aws_ipl_data_pipeline_spark.functions.scalars import not_na
 from aws_ipl_data_pipeline_spark.plans.gold import (
     GOLD_BUILDERS,
-    _finish_batsman,
-    _finish_bowler,
-    _finish_standings,
-    _finish_team,
+    batsman_from_parts,
+    batsman_parts,
+    bowler_from_parts,
+    bowler_parts,
+    standings_from_parts,
+    standings_parts,
+    team_from_parts,
+    team_parts,
 )
 from aws_ipl_data_pipeline_spark.sources.readers import (
     local_frame,
@@ -66,47 +68,27 @@ from aws_ipl_data_pipeline_spark.sources.writers import (
 )
 
 # --------------------------------------------------------------------------
-# partials: one row per (match, key); integer partial aggregates only
+# packing: plans/gold.py's parts as one stored row per (match, key)
 # --------------------------------------------------------------------------
 
 
+def _outer_pack(
+    left: DataFrame, right: DataFrame, key: str, flags: list[str]
+) -> DataFrame:
+    """Outer-join two (match, ``key``) frames; each presence flag in
+    ``flags`` is False on the rows its part lacks."""
+    out = left.join(right, ["match", key], "outer")
+    for flag in flags:
+        out = out.withColumn(flag, F.coalesce(flag, F.lit(False)))
+    return out
+
+
 def batsman_match_partials(silver: DataFrame) -> DataFrame:
-    """(match, batsman) partials for gold_batsman_stats: the per-match
-    batting sums plus the out count from the UNFILTERED table (the
-    times_out quirk, reference ex_match_sg.py:137-140)."""
-    df_bat = silver.where(not_na("batsman"))
-    bat = df_bat.groupBy("match", "batsman").agg(
-        F.sum("runs").alias("match_runs"),
-        F.sum("is_legal_delivery").alias("legal_balls"),
-        F.sum("is_four").alias("fours"),
-        F.sum("is_six").alias("sixes"),
-        F.sum("is_dot_ball").alias("dot_balls"),
-    )
-    outs = (
-        silver.where(not_na("out_batsman"))
-        .groupBy("match", F.col("out_batsman").alias("batsman"))
-        .agg(F.count("*").alias("times_out"))
-    )
-    return (
-        bat.withColumn("batted", F.lit(True))
-        .join(outs, ["match", "batsman"], "outer")
-        .withColumn("batted", F.coalesce("batted", F.lit(False)))
-    )
-
-
-def bowler_match_partials(silver: DataFrame) -> DataFrame:
-    """(match, bowler) partials for gold_bowler_stats."""
-    return (
-        silver.where(not_na("bowler"))
-        .groupBy("match", "bowler")
-        .agg(
-            F.sum("total_runs").alias("total_runs_conceded"),
-            F.sum("is_legal_delivery").alias("legal_balls"),
-            F.sum("wicket").alias("wickets"),
-            F.sum("is_dot_ball").alias("dot_balls"),
-            F.sum("is_four").alias("fours_conceded"),
-            F.sum("is_six").alias("sixes_conceded"),
-        )
+    """(match, batsman) partials: ``batted`` marks the rows that carry
+    batting sums; ``times_out`` is null where the batsman was not out."""
+    bat, outs = batsman_parts(silver)
+    return _outer_pack(
+        bat.withColumn("batted", F.lit(True)), outs, "batsman", ["batted"]
     )
 
 
@@ -115,51 +97,25 @@ def standings_match_partials(silver: DataFrame) -> DataFrame:
     only needs the five standings columns (match, batting_team,
     bowling_team, total_runs, is_legal_delivery), so it also runs on
     the team-grain standings fixtures."""
-    df_clean = silver.where(not_na("batting_team") & not_na("bowling_team"))
-    cbat = df_clean.groupBy("match", F.col("batting_team").alias("team")).agg(
-        F.sum("total_runs").alias("runs_scored"),
-        F.sum("is_legal_delivery").alias("legal_balls_batted"),
-    )
-    cbowl = df_clean.groupBy("match", F.col("bowling_team").alias("team")).agg(
-        F.sum("total_runs").alias("runs_conceded"),
-        F.sum("is_legal_delivery").alias("legal_balls_bowled"),
-    )
-    return (
-        cbat.withColumn("has_clean_bat", F.lit(True))
-        .join(
-            cbowl.withColumn("has_clean_bowl", F.lit(True)), ["match", "team"], "outer"
-        )
-        .withColumn("has_clean_bat", F.coalesce("has_clean_bat", F.lit(False)))
-        .withColumn("has_clean_bowl", F.coalesce("has_clean_bowl", F.lit(False)))
+    bat, bowl = standings_parts(silver)
+    return _outer_pack(
+        bat.withColumn("has_clean_bat", F.lit(True)),
+        bowl.withColumn("has_clean_bowl", F.lit(True)),
+        "team",
+        ["has_clean_bat", "has_clean_bowl"],
     )
 
 
 def team_match_partials(silver: DataFrame) -> DataFrame:
     """(match, team) partials feeding BOTH gold_team_stats and
-    gold_tournament_standings. The two consumers filter differently
-    (team stats: not_na(batting_team); standings: not_na of both
-    teams), so each side's sums are kept separately with a presence
-    flag — the finishers re-select exactly their input population."""
-    df_team = silver.where(not_na("batting_team"))
-    tstat = df_team.groupBy(F.col("batting_team").alias("team"), "match").agg(
-        F.sum("total_runs").alias("total_runs"),
-        F.sum("wicket").alias("wickets_lost"),
-        F.sum("is_legal_delivery").alias("legal_balls"),
-        F.sum("is_four").alias("fours"),
-        F.sum("is_six").alias("sixes"),
-        F.sum(
-            F.when(F.col("innings_phase") == "Powerplay", F.col("total_runs"))
-        ).alias("pp_runs"),
-        F.sum(
-            F.when(F.col("innings_phase") == "Powerplay", F.col("is_legal_delivery"))
-        ).alias("pp_balls"),
-    )
-    return (
-        tstat.withColumn("has_bat", F.lit(True))
-        .join(standings_match_partials(silver), ["match", "team"], "outer")
-        .withColumn("has_bat", F.coalesce("has_bat", F.lit(False)))
-        .withColumn("has_clean_bat", F.coalesce("has_clean_bat", F.lit(False)))
-        .withColumn("has_clean_bowl", F.coalesce("has_clean_bowl", F.lit(False)))
+    gold_tournament_standings. The two filter differently (team stats:
+    not_na(batting_team); standings: not_na of both teams), so each
+    part keeps its own sums and presence flag."""
+    return _outer_pack(
+        team_parts(silver).withColumn("has_bat", F.lit(True)),
+        standings_match_partials(silver),
+        "team",
+        ["has_bat", "has_clean_bat", "has_clean_bowl"],
     )
 
 
@@ -202,8 +158,9 @@ def with_match_tombstones(pdf: DataFrame, matches: DataFrame) -> DataFrame:
     sentinel) would silently keep its stale rows. The tombstone
     guarantees every affected match's bucket partition is rewritten
     (possibly to just the tombstone plus its sibling matches' rows);
-    finishers ignore tombstones by construction: key columns are null
-    (batch keys pass not_na, never null) and presence flags are False.
+    the unpacking ignores tombstones by construction: key columns are
+    null (part keys pass not_na, never null) and presence flags are
+    False.
     Repeated rescrapes cannot accumulate tombstones: the sibling
     read-back in ``write_partials`` anti-joins the affected matches,
     which drops an affected match's previous tombstone before the new
@@ -299,77 +256,42 @@ def write_partials(
 
 
 # --------------------------------------------------------------------------
-# finishers: merge partials per key, then the SHARED ratio/rank stages
+# unpacking: the stored rows back into plans/gold.py's *_from_parts
 # --------------------------------------------------------------------------
 
 
 def batsman_stats_from_partials(p: DataFrame) -> DataFrame:
-    """gold_batsman_stats from (match, batsman) partials — equal to
-    plans.gold.batsman_stats(silver) by construction: integer sums of
-    sums, countDistinct(match) ≡ count of batted partial rows,
-    max-of-sum ≡ max over per-match sums; ratios in _finish_batsman."""
-    pb = p.where("batted")
-    highest = pb.groupBy("batsman").agg(F.max("match_runs").alias("highest_score"))
-    stats = pb.groupBy("batsman").agg(
-        F.count("*").alias("matches"),
-        F.sum("match_runs").alias("total_runs"),
-        F.sum("legal_balls").alias("legal_balls"),
-        F.sum("fours").alias("fours"),
-        F.sum("sixes").alias("sixes"),
-        F.sum("dot_balls").alias("dot_balls"),
+    return batsman_from_parts(
+        p.where("batted"), p.where(F.col("times_out").isNotNull())
     )
-    outs = (
-        p.where(F.col("times_out").isNotNull())
-        .groupBy("batsman")
-        .agg(F.sum("times_out").alias("times_out"))
-    )
-    return _finish_batsman(stats, highest, outs)
 
 
 def bowler_stats_from_partials(p: DataFrame) -> DataFrame:
-    # the isNotNull guard drops match tombstones (batch partials never
-    # carry a null bowler — not_na filters nulls upstream)
-    stats = p.where(F.col("bowler").isNotNull()).groupBy("bowler").agg(
-        F.count("*").alias("matches"),
-        F.sum("total_runs_conceded").alias("total_runs_conceded"),
-        F.sum("legal_balls").alias("legal_balls"),
-        F.sum("wickets").alias("wickets"),
-        F.sum("dot_balls").alias("dot_balls"),
-        F.sum("fours_conceded").alias("fours_conceded"),
-        F.sum("sixes_conceded").alias("sixes_conceded"),
-    )
-    return _finish_bowler(stats)
+    # the isNotNull guard drops match tombstones (parts never carry a
+    # null bowler — not_na filters nulls upstream)
+    return bowler_from_parts(p.where(F.col("bowler").isNotNull()))
 
 
 def team_stats_from_partials(p: DataFrame) -> DataFrame:
-    pb = p.where("has_bat")
-    stats = pb.groupBy("team").agg(
-        F.count("*").alias("matches"),
-        F.sum("total_runs").alias("total_runs"),
-        F.sum("wickets_lost").alias("total_wickets_lost"),
-        F.sum("legal_balls").alias("legal_balls"),
-        F.sum("fours").alias("fours"),
-        F.sum("sixes").alias("sixes"),
-        F.sum("pp_runs").alias("_pp_runs"),
-        F.sum("pp_balls").alias("_pp_balls"),
-    )
-    return _finish_team(stats)
+    return team_from_parts(p.where("has_bat"))
 
 
 def tournament_standings_from_partials(p: DataFrame) -> DataFrame:
-    bat = p.where("has_clean_bat").select(
-        "match", "team", "runs_scored", "legal_balls_batted"
+    # the two sides share the team_stats columns: select them apart
+    # before standings_from_parts joins them
+    return standings_from_parts(
+        p.where("has_clean_bat").select(
+            "match", "team", "runs_scored", "legal_balls_batted"
+        ),
+        p.where("has_clean_bowl").select(
+            "match", "team", "runs_conceded", "legal_balls_bowled"
+        ),
     )
-    bowl = p.where("has_clean_bowl").select(
-        "match", "team", "runs_conceded", "legal_balls_bowled"
-    )
-    all_teams = bat.select("team").distinct()
-    return _finish_standings(bat, bowl, all_teams)
 
 
 PARTIAL_BUILDERS = {
     "batsman": batsman_match_partials,
-    "bowler": bowler_match_partials,
+    "bowler": bowler_parts,
     "team": team_match_partials,
 }
 
@@ -398,8 +320,8 @@ def refresh_gold(
     (``write_snapshot``; returns name → new version). ``schema`` pins
     silver's column types on the parquet read-back.
 
-    ``mode="full"`` recomputes every table from full silver with the
-    one-pass builders (the reference's gold job, ex_match_sg.py:323-347).
+    ``mode="full"`` recomputes every table from full silver with
+    ``GOLD_BUILDERS`` (the reference's gold job, ex_match_sg.py:323-347).
     Full mode maintains no partials, so it first deletes any
     ``_partials_*`` left by an incremental run: after even one full
     refresh they would miss matches, and a later incremental run must
@@ -487,6 +409,6 @@ def _refresh_partials(
         p: read_table(spark, path, fmt=TABLE_FORMAT) for p, path in ppaths.items()
     }
     return {
-        name: finisher(partials[pname])
-        for name, (pname, finisher) in GOLD_FROM_PARTIALS.items()
+        name: unpack(partials[pname])
+        for name, (pname, unpack) in GOLD_FROM_PARTIALS.items()
     }

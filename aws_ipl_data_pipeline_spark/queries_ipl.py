@@ -18,9 +18,10 @@ from pyspark.sql import functions as F
 from aws_ipl_data_pipeline_spark.queries import REGISTRY, _reorder_registry, register
 from aws_ipl_data_pipeline_spark.schemas import RAW_DELIVERIES
 from aws_ipl_data_pipeline_spark.session import tune_session
+from aws_ipl_data_pipeline_spark.sources.readers import local_frame
 
 # ---------------------------------------------------------------------------
-# fixture literals (shared by Spark createDataFrame and SQL VALUES)
+# fixture literals (shared by Spark local_frame and SQL VALUES)
 # ---------------------------------------------------------------------------
 
 # (match, over, ball, bowler, batsman, ball_event, event_info, seq)
@@ -58,7 +59,7 @@ def _raw_df(spark: SparkSession) -> DataFrame:
         (m, "Apr 01", "7:30", "V", o, b, bw, bt, ev, info, f"t{seq:04d}")
         for (m, o, b, bw, bt, ev, info, seq) in RAW_BALLS
     ]
-    return spark.createDataFrame(rows, schema=RAW_DELIVERIES)
+    return local_frame(spark, RAW_DELIVERIES, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -207,10 +208,11 @@ def _silver_values_sql() -> str:
 
 
 def _silver_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        SILVER_ROWS,
+    return local_frame(
+        spark,
         "match string, batting_team string, bowling_team string, "
         "total_runs int, is_legal_delivery int",
+        SILVER_ROWS,
     )
 
 
@@ -267,6 +269,8 @@ _STANDINGS_SQL_BODY = """
              CASE WHEN t.balls_for > 0 THEN round(t.runs_for / (t.balls_for / 6.0), 2) ELSE 0.0 END AS avg_run_rate,
              CASE WHEN t.balls_against > 0 THEN round(t.runs_against / (t.balls_against / 6.0), 2) ELSE 0.0 END AS conceded_rr
       FROM totals t LEFT JOIN outcomes o ON o.team = t.team
+      -- the standings rank the batting teams; a bowl-only label has no row
+      WHERE t.team IN (SELECT team FROM bat)
     )
     SELECT CAST(row_number() OVER (ORDER BY points DESC,
                 round(avg_run_rate - conceded_rr, 3) DESC, avg_run_rate DESC, team ASC) AS BIGINT) AS rank,
@@ -385,14 +389,13 @@ def ipl_standings_big(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ipl_standings_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL gold path (plans/gold_incremental.py, VERDICT r6
     item 4) hash-proven through the driver at league volume: standings
-    derived from per-(match, team) partial aggregates —
-    tournament_standings_from_partials(standings_match_partials(silver))
-    — over the same 3001-replica fixture as ipl_standings_big, against
-    that query's direct-SQL oracle. A hash match here proves the
-    two-level decomposition (per-match integer partials → per-team
-    merge → shared finisher) is bit-identical to the one-pass batch
-    builder on ~60k team-match rows with replica-varying winners and
-    ties."""
+    through the stored-partials round trip —
+    tournament_standings_from_partials(standings_match_partials(silver)),
+    i.e. the parts packed into one flagged row per (match, team) and
+    unpacked by flag into standings_from_parts — over the same
+    3001-replica fixture as ipl_standings_big, against that query's
+    direct-SQL oracle, on ~60k team-match rows with replica-varying
+    winners and ties."""
     from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
         standings_match_partials,
         tournament_standings_from_partials,
@@ -416,7 +419,7 @@ def ipl_standings_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     silver = _session_fixture(spark, "standings_big_3001", _build)
-    # the partials frame feeds several consumers in the finisher
+    # the partials frame feeds several consumers in the merge
     # (bat/bowl splits, the team spine, winner derivation) -- pin the
     # skinny per-(match, key) frame once so the silver groupBys run a
     # single time (guide §3.3; r12)
@@ -476,11 +479,12 @@ def _player_values_sql() -> str:
 
 
 def _player_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        PLAYER_ROWS,
+    return local_frame(
+        spark,
         "match string, batsman string, bowler string, out_batsman string, "
         "runs int, total_runs int, is_legal_delivery int, is_four int, "
         "is_six int, is_dot_ball int, wicket int",
+        PLAYER_ROWS,
     )
 
 
@@ -626,10 +630,9 @@ def ipl_batsman_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans/gold_incremental.py) hash-proven through the driver at
     ~50k-delivery volume against ipl_batsman_stats_big's direct-SQL
     oracle — the partials twin of ipl_standings_incremental, covering
-    the trickier batsman decomposition: the unfiltered-table times_out
-    attribution rides the same (match, batsman) partial rows as the
-    batting sums, and matches/highest become partial-row count /
-    max-of-per-match-sums."""
+    the batsman packing: the unfiltered-table times_out part rides the
+    same (match, batsman) stored rows as the batting sums, and the
+    ``batted`` flag re-selects the batting part on unpacking."""
     from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
         batsman_match_partials,
         batsman_stats_from_partials,
@@ -764,6 +767,15 @@ def _team_values_sql() -> str:
     )
 
 
+def _team_df(spark: SparkSession) -> DataFrame:
+    return local_frame(
+        spark,
+        "match string, batting_team string, total_runs int, wicket int, "
+        "is_legal_delivery int, is_four int, is_six int, innings_phase string",
+        TEAM_ROWS,
+    )
+
+
 # the gold_team_stats SQL derivation, parameterized by a preceding
 # `silver` CTE (same one-spec discipline as _BATSMAN/_BOWLER_SQL_BODY)
 _TEAM_SQL_BODY = """
@@ -806,12 +818,7 @@ def ipl_team_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aws_ipl_data_pipeline_spark.plans.gold import team_stats
 
     tune_session(spark)
-    df = spark.createDataFrame(
-        TEAM_ROWS,
-        "match string, batting_team string, total_runs int, wicket int, "
-        "is_legal_delivery int, is_four int, is_six int, innings_phase string",
-    )
-    out = team_stats(df)
+    out = team_stats(_team_df(spark))
     return out.select(
         "team",
         F.col("matches").cast("long"),
@@ -869,13 +876,13 @@ def ipl_gold_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic matches via crossJoin(range) — zero driver-side data
     generation. Returns one summary row per gold table. The reference's
     implied budget is ≤45 s for silver+gold per match event; this runs
-    the full-league recompute in one pass.
+    the full-league recompute (GOLD_BUILDERS).
 
     Oracle-backed: the replication is SQL-expressible (range(0,3000)
     cross join + match renaming), and each gold table's output
     cardinality is an independent COUNT(DISTINCT grain-key) over that
     replicated silver — batsman/bowler/team grain for the player
-    tables, the bat∪bowl team universe for standings — so the four
+    tables, the batting teams for standings — so the four
     summary rows hash-match instead of a rows-only check."""
     from aws_ipl_data_pipeline_spark.plans.gold import GOLD_BUILDERS
 
@@ -928,20 +935,20 @@ def ipl_gold_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ipl_bowler_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bowler-grain incremental gold path (VERDICT r10 item 6) —
-    bowler_stats_from_partials(bowler_match_partials(silver)),
+    bowler_stats_from_partials(bowler_parts(silver)),
     plans/gold_incremental.py — hash-proven through the driver at
     ~50k-delivery volume over the SAME memoized 4999-replica fixture
     as ipl_batsman_incremental, against the replicated-volume form of
     the _BOWLER_SQL_BODY oracle (one spec shared with the
-    fixture-grain ipl_bowler_stats). Proves the two-level bowler
-    decomposition bit-identically: per-match integer partials →
-    per-bowler merge (matches = partial-row count ≡ COUNT DISTINCT
-    match), ratio math only in the shared _finish_bowler — including
-    the overs notation and divide-by-1-when-zero parity quirks —
-    and 5-prime-factor denominators (4999 replicas) that keep rounded
-    rates off the .xx5 cross-engine boundary."""
+    fixture-grain ipl_bowler_stats). Covers the stored bowler rows'
+    round trip: per-(match, bowler) parts, the tombstone filter on
+    unpacking, then bowler_from_parts (matches = part-row count ≡
+    COUNT DISTINCT match, the overs notation and the
+    divide-by-1-when-zero parity quirks), with 5-prime-factor
+    denominators (4999 replicas) that keep rounded rates off the .xx5
+    cross-engine boundary."""
+    from aws_ipl_data_pipeline_spark.plans.gold import bowler_parts
     from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-        bowler_match_partials,
         bowler_stats_from_partials,
     )
 
@@ -966,7 +973,7 @@ def ipl_bowler_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 (r12: the fixed ~0.3 s eager-planning cost of a
     # localCheckpoint outweighs the replays on this grain's volume;
     # the standings grain keeps its pin, measured 2.03 -> 1.58 s)
-    out = bowler_stats_from_partials(bowler_match_partials(silver))
+    out = bowler_stats_from_partials(bowler_parts(silver))
     return out.select(
         "bowler",
         F.col("matches").cast("long"),
@@ -1011,7 +1018,7 @@ def ipl_team_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the not_na(batting_team) population after the outer join
     with the standings-grain partials. team_match_partials requires a
     bowling_team column (it feeds standings too); the fixture derives
-    one (the opposing label) which the team finisher provably ignores
+    one (the opposing label) which team_from_parts provably ignores
     — it is absent from the oracle."""
     from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
         team_match_partials,
@@ -1022,13 +1029,9 @@ def ipl_team_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build() -> DataFrame:
         reps = spark.range(2003).select(F.col("id").alias("_rep"))
-        base = spark.createDataFrame(
-            TEAM_ROWS,
-            "match string, batting_team string, total_runs int, wicket int, "
-            "is_legal_delivery int, is_four int, is_six int, innings_phase string",
-        )
         return (
-            base.crossJoin(reps)
+            _team_df(spark)
+            .crossJoin(reps)
             .withColumn(
                 "match", F.concat_ws("_", "match", F.col("_rep").cast("string"))
             )

@@ -3,13 +3,15 @@ from aws_ipl_data_pipeline_spark.streaming.joins import (  # noqa: F401
     enrich_stream_with_dim,
 )
 from aws_ipl_data_pipeline_spark.streaming.pipeline import (  # noqa: F401
-    dedup_within_watermark,
     run_incremental_pipeline,
-    sessionized_event_rollup,
-    windowed_event_counts,
 )
 from aws_ipl_data_pipeline_spark.streaming.stateful import (  # noqa: F401
     cusum_monitor_stateful,
     running_totals_stateful,
     running_totals_tws,
+)
+from aws_ipl_data_pipeline_spark.streaming.windows import (  # noqa: F401
+    dedup_within_watermark,
+    sessionized_event_rollup,
+    windowed_event_counts,
 )

@@ -194,7 +194,7 @@ def test_cli_prep_kmeans(spark, tmp_path_factory):
 
 
 @pytest.mark.slow
-def test_cli_gold_versioned_snapshots(spark, tmp_path_factory):
+def test_cli_gold_versioned_snapshots(spark, tmp_path_factory, capsys):
     """gold --versioned writes snapshot-isolated tables: a second run
     creates v2 while v1 stays time-travel-readable."""
     from aws_ipl_data_pipeline_spark.plans import to_bronze, to_silver
@@ -219,6 +219,13 @@ def test_cli_gold_versioned_snapshots(spark, tmp_path_factory):
     v1 = read_snapshot(spark, tbl, version=1)
     v2 = read_snapshot(spark, tbl)
     assert sorted(map(tuple, v1.collect())) == sorted(map(tuple, v2.collect()))
+
+    # `cli sql` reads the committed snapshot, not every v=N directory
+    capsys.readouterr()
+    main(["sql", "SELECT count(*) AS n FROM st", "--table", f"st={tbl}"])
+    out = capsys.readouterr().out
+    cells = [ln.strip("|").strip() for ln in out.splitlines() if ln.startswith("|")]
+    assert cells == ["n", str(v2.count())]
 
 
 def test_cli_prep_pack(spark, tmp_path_factory):
@@ -544,6 +551,21 @@ def test_cli_silver_replace_where_guards(spark, tmp_path_factory):
     assert not os.path.isdir(f"{base}/silver/match={m1}")
     for m in matches[2:]:
         assert os.path.isdir(f"{base}/silver/match={m}")
+
+
+def test_cli_bronze_without_input_files_fails(spark, tmp_path_factory):
+    """A --raw-dir that lists no CSV file (the per-match directories
+    given without the */ glob) fails instead of writing an empty bronze."""
+    base = str(tmp_path_factory.mktemp("clibronze0"))
+    os.makedirs(f"{base}/raw/01_AAvsBB")
+    with open(f"{base}/raw/01_AAvsBB/01_AAvsBB-1.csv", "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(HEADER)
+        w.writerows(RAW_ROWS[:3])
+    with pytest.raises(SystemExit) as exc:
+        main(["bronze", "--raw-dir", f"{base}/raw", "--out", f"{base}/bronze"])
+    assert f"{base}/raw" in str(exc.value.code) and "*/" in str(exc.value.code)
+    assert not os.path.exists(f"{base}/bronze")
 
 
 def test_cli_gold_affected_requires_incremental(tmp_path_factory):

@@ -23,10 +23,11 @@ from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
     PARTIAL_BUILDERS,
     match_bucket_col,
 )
-from aws_ipl_data_pipeline_spark.schemas import RAW_DELIVERIES
+from aws_ipl_data_pipeline_spark.schemas import RAW_DELIVERIES, SILVER_DELIVERIES
 from aws_ipl_data_pipeline_spark.sources.readers import local_frame
 from aws_ipl_data_pipeline_spark.streaming import run_incremental_pipeline
 from tests.fixtures_ipl import RAW_ROWS, match_meta, players, raw_deliveries
+from tests.gold_reference import gold_reference, reference_mismatches
 
 HEADER = [f.name for f in RAW_DELIVERIES.fields]
 
@@ -62,15 +63,43 @@ def _write_csv(path: str, rows) -> None:
 def test_partials_merge_equals_batch_builders(spark):
     """finisher(partials(silver)) ≡ builder(silver) for all four gold
     tables on the golden fixtures — the static half of batch ≡
-    incremental."""
+    incremental — and both equal the DuckDB reference built from
+    queries_ipl.py's SQL specs."""
     silver = to_silver(
         to_bronze(raw_deliveries(spark)), match_meta(spark), players(spark)
     )
     partials = {n: b(silver) for n, b in PARTIAL_BUILDERS.items()}
+    reference = gold_reference(silver)
     for name, (pname, finisher) in GOLD_FROM_PARTIALS.items():
-        got = _canon(finisher(partials[pname]))
-        want = _canon(BATCH_BUILDERS[name](silver))
-        assert got == want, name
+        incremental = finisher(partials[pname])
+        full = BATCH_BUILDERS[name](silver)
+        assert _canon(incremental) == _canon(full), name
+        assert reference[name], name
+        for gold in (incremental, full):
+            assert not reference_mismatches(name, gold, reference[name])
+
+
+# the stored partials schemas: `_partials_*` tables already on disk must
+# stay readable by the unpacking code
+STORED_PARTIALS = {
+    "batsman": "struct<match:string,batsman:string,match_runs:bigint,"
+    "legal_balls:bigint,fours:bigint,sixes:bigint,dot_balls:bigint,"
+    "batted:boolean,times_out:bigint>",
+    "bowler": "struct<match:string,bowler:string,total_runs_conceded:bigint,"
+    "legal_balls:bigint,wickets:bigint,dot_balls:bigint,fours_conceded:bigint,"
+    "sixes_conceded:bigint>",
+    "team": "struct<match:string,team:string,total_runs:bigint,"
+    "wickets_lost:bigint,legal_balls:bigint,fours:bigint,sixes:bigint,"
+    "pp_runs:bigint,pp_balls:bigint,has_bat:boolean,runs_scored:bigint,"
+    "legal_balls_batted:bigint,has_clean_bat:boolean,runs_conceded:bigint,"
+    "legal_balls_bowled:bigint,has_clean_bowl:boolean>",
+}
+
+
+def test_stored_partials_schema_unchanged(spark):
+    silver = local_frame(spark, SILVER_DELIVERIES)
+    got = {p: b(silver).schema.simpleString() for p, b in PARTIAL_BUILDERS.items()}
+    assert got == STORED_PARTIALS
 
 
 @pytest.mark.slow
@@ -206,8 +235,8 @@ def test_tombstones_retract_stale_partials(spark, tmp_path):
     partition overwrite only touches partitions present in the written
     frame, so with_match_tombstones guarantees the rewrite (r7
     self-review finding)."""
+    from aws_ipl_data_pipeline_spark.plans.gold import bowler_parts
     from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-        bowler_match_partials,
         bowler_stats_from_partials,
         with_match_tombstones,
     )
@@ -223,13 +252,13 @@ def test_tombstones_retract_stale_partials(spark, tmp_path):
         schema,
     )
     write_partitioned(
-        bowler_match_partials(silver_v1), path, partition_by=["match"], mode="overwrite"
+        bowler_parts(silver_v1), path, partition_by=["match"], mode="overwrite"
     )
     # rescrape of M1: every bowler is now the N/A sentinel — zero
     # partial rows for the bowler builder
     silver_m1_v2 = spark.createDataFrame([("M1", "N/A", 4, 1, 0, 0, 1, 0)], schema)
     affected = spark.createDataFrame([("M1",)], "match string")
-    pdf = with_match_tombstones(bowler_match_partials(silver_m1_v2), affected)
+    pdf = with_match_tombstones(bowler_parts(silver_m1_v2), affected)
     write_partitioned(pdf, path, partition_by=["match"], mode="overwrite")
 
     final = bowler_stats_from_partials(spark.read.parquet(path))
@@ -239,9 +268,9 @@ def test_tombstones_retract_stale_partials(spark, tmp_path):
     # and WITHOUT the tombstone the stale row would have survived —
     # pin that the guard is actually what fixes it
     write_partitioned(
-        bowler_match_partials(silver_v1), path, partition_by=["match"], mode="overwrite"
+        bowler_parts(silver_v1), path, partition_by=["match"], mode="overwrite"
     )
-    bare = bowler_match_partials(silver_m1_v2)  # zero rows, no tombstone
+    bare = bowler_parts(silver_m1_v2)  # zero rows, no tombstone
     write_partitioned(bare, path, partition_by=["match"], mode="overwrite")
     stale = sorted(
         r["bowler"]

@@ -1,7 +1,8 @@
-"""Static guard (no Spark): the pipeline's runtime modules build no
-frames with ``createDataFrame`` over a literal list, tuple or
-comprehension. In classic PySpark such a frame is a Python-RDD leaf, and
-every evaluation of it starts Python worker tasks; build it with
+"""Static guard (no Spark): the pipeline's runtime modules and the IPL
+queries build no frames with ``createDataFrame`` over a literal list,
+tuple or comprehension, or over a name bound to one in the module. In
+classic PySpark such a frame is a Python-RDD leaf, and every evaluation
+of it starts Python worker tasks; build it with
 ``sources.readers.local_frame`` (a JVM ``LocalRelation``) instead."""
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ import ast
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "aws_ipl_data_pipeline_spark"
-SCANNED = ["streaming", "plans", "sources", "cli.py"]
+SCANNED = ["streaming", "plans", "sources", "cli.py", "queries_ipl.py"]
 LITERALS = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp, ast.SetComp)
 
 
@@ -21,15 +22,28 @@ def _files():
 
 
 def python_row_frames(source: str) -> list[int]:
-    """Line numbers of ``createDataFrame(<literal rows>, ...)`` calls."""
+    """Line numbers of ``createDataFrame(<literal rows>, ...)`` calls,
+    the rows given inline or as a name the module binds to literal
+    rows."""
+    tree = ast.parse(source)
+    bound = {
+        target.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign) and isinstance(node.value, LITERALS)
+        for target in node.targets
+        if isinstance(target, ast.Name)
+    }
     return [
         node.lineno
-        for node in ast.walk(ast.parse(source))
+        for node in ast.walk(tree)
         if isinstance(node, ast.Call)
         and isinstance(node.func, ast.Attribute)
         and node.func.attr == "createDataFrame"
         and node.args
-        and isinstance(node.args[0], LITERALS)
+        and (
+            isinstance(node.args[0], LITERALS)
+            or (isinstance(node.args[0], ast.Name) and node.args[0].id in bound)
+        )
     ]
 
 
@@ -41,6 +55,18 @@ def test_guard_flags_literal_rows():
         "d = spark.createDataFrame(pdf)\n"
     )
     assert python_row_frames(src) == [1, 2, 3]
+
+
+def test_guard_flags_names_bound_to_literal_rows():
+    src = (
+        "ROWS = [('M1', 1)]\n"
+        "def f(spark, pdf):\n"
+        "    rows = [(r,) for r in ROWS]\n"
+        "    a = spark.createDataFrame(ROWS, 'm string, n int')\n"
+        "    b = spark.createDataFrame(rows, 'm string')\n"
+        "    c = spark.createDataFrame(pdf)\n"
+    )
+    assert python_row_frames(src) == [4, 5]
 
 
 def test_runtime_modules_build_no_python_row_frames():

@@ -827,10 +827,12 @@ def silver_rows(draw):
 def test_gold_partials_merge_equals_builders_on_random_silver(rows):
     """finisher(partials(silver)) must be row-identical to
     builder(silver) for EVERY silver frame, not just the golden
-    fixture: the two-level integer decomposition (count-distinct ≡
-    partial-row count, max-of-sum, null-skipping Powerplay sums,
-    unfiltered times_out attribution, standings team universe) has to
-    survive N/A sentinels, nulls and degenerate matches."""
+    fixture, and both must equal the DuckDB reference built from
+    queries_ipl.py's SQL specs: the two-level integer decomposition
+    (count-distinct ≡ partial-row count, max-of-sum, null-skipping
+    Powerplay sums, unfiltered times_out attribution, standings team
+    universe) has to survive N/A sentinels, nulls and degenerate
+    matches."""
     from aws_ipl_data_pipeline_spark.plans.gold import (
         batsman_stats,
         bowler_stats,
@@ -841,6 +843,7 @@ def test_gold_partials_merge_equals_builders_on_random_silver(rows):
         GOLD_FROM_PARTIALS,
         PARTIAL_BUILDERS,
     )
+    from tests.gold_reference import gold_reference, reference_mismatches
 
     spark = _get_spark()
     silver = spark.createDataFrame(rows, _SILVER_COLS)
@@ -868,8 +871,13 @@ def test_gold_partials_merge_equals_builders_on_random_silver(rows):
             tuple(_key(v) for v in r) for r in df.select(*cols).collect()
         )
 
+    reference = gold_reference(silver)
     for name, (pname, finisher) in GOLD_FROM_PARTIALS.items():
-        assert canon(finisher(partials[pname])) == canon(builders[name](silver)), name
+        incremental = finisher(partials[pname])
+        full = builders[name](silver)
+        assert canon(incremental) == canon(full), name
+        for gold in (incremental, full):
+            assert not reference_mismatches(name, gold, reference[name])
 
 
 @given(
@@ -967,8 +975,8 @@ def test_bucketed_partials_model_equivalence(spark, start, ops):
     import shutil
     import tempfile
 
+    from aws_ipl_data_pipeline_spark.plans.gold import bowler_parts
     from aws_ipl_data_pipeline_spark.plans.gold_incremental import (
-        bowler_match_partials,
         bowler_stats_from_partials,
         with_match_tombstones,
         write_partials,
@@ -1006,7 +1014,7 @@ def test_bucketed_partials_model_equivalence(spark, start, ops):
     try:
         ppath = f"{work}/_partials_bowler"
         write_partials(
-            bowler_match_partials(silver_df(state)), ppath, scoped=False
+            bowler_parts(silver_df(state)), ppath, scoped=False
         )
         for idx, version in ops:
             m = pool[idx]
@@ -1016,7 +1024,7 @@ def test_bucketed_partials_model_equivalence(spark, start, ops):
                 state[m] = version
             affected_df = spark.createDataFrame([(m,)], "match string")
             batch = spark.createDataFrame(silver_rows(m, version) or [], schema)
-            pdf = with_match_tombstones(bowler_match_partials(batch), affected_df)
+            pdf = with_match_tombstones(bowler_parts(batch), affected_df)
             write_partials(
                 pdf, ppath, scoped=True, affected_matches=affected_df
             )
@@ -1029,7 +1037,7 @@ def test_bucketed_partials_model_equivalence(spark, start, ops):
         want = sorted(
             tuple(r)
             for r in bowler_stats_from_partials(
-                bowler_match_partials(silver_df(state))
+                bowler_parts(silver_df(state))
             ).collect()
         )
         assert got == want

@@ -7,7 +7,10 @@ routines instead of forking them:
 - ``sources.writers.replace_matches`` owns the match-grain silver
   replace (the Delta-or-parquet branch);
 - ``sources.writers.TABLE_FORMAT`` is the one table-format choice in the
-  package."""
+  package;
+- ``plans/gold.py``'s ``*_parts`` are the one gold aggregation of
+  silver: ``plans/gold_incremental.py`` only packs, stores and unpacks
+  them, and neither caller aggregates at all."""
 
 from __future__ import annotations
 
@@ -17,6 +20,7 @@ import pathlib
 PKG = pathlib.Path(__file__).resolve().parent.parent / "aws_ipl_data_pipeline_spark"
 CALLERS = ["cli.py", "streaming/pipeline.py"]
 GOLD_BUILDERS = {"batsman_stats", "bowler_stats", "team_stats", "tournament_standings"}
+NO_AGGREGATION = ["plans/gold_incremental.py", *CALLERS]
 HINT = (
     "use plans.gold_incremental.refresh_gold for gold, "
     "sources.writers.replace_matches for the silver match replace and "
@@ -40,7 +44,7 @@ def _docstrings(tree: ast.AST) -> set[int]:
 def forked_policy(source: str) -> list[str]:
     """What a caller module does that belongs to the shared routines:
     a ``_partials_`` string literal (docstrings aside), a reference to
-    ``HAVE_DELTA``, or an import of a one-pass gold builder."""
+    ``HAVE_DELTA``, or an import of a full-recompute gold builder."""
     tree = ast.parse(source)
     docs = _docstrings(tree)
     found = []
@@ -63,6 +67,17 @@ def forked_policy(source: str) -> list[str]:
                 elif alias.name.rsplit(".", 1)[-1] in GOLD_BUILDERS:
                     found.append((node.lineno, f"imports {alias.name}"))
     return [f"{line}: {what}" for line, what in sorted(found)]
+
+
+def aggregations(source: str) -> list[int]:
+    """Line numbers of ``.groupBy(`` and ``.agg(`` calls."""
+    return sorted(
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("groupBy", "agg")
+    )
 
 
 def format_choices(source: str) -> list[int]:
@@ -115,3 +130,26 @@ def test_one_table_format_choice():
         for line in format_choices(path.read_text())
     ]
     assert len(found) <= 1, f"table-format choice repeated ({HINT}): {found}"
+
+
+def test_guard_flags_aggregations():
+    src = (
+        "a = df.groupBy('match').agg(F.sum('runs'))\n"
+        "b = groupBy(df)\n"
+        "c = df.agg(F.max('runs'))\n"
+    )
+    assert aggregations(src) == [1, 1, 3]
+
+
+def test_gold_aggregates_silver_in_one_place():
+    found = [
+        f"{entry}:{line}"
+        for entry in NO_AGGREGATION
+        for line in aggregations((PKG / entry).read_text())
+    ]
+    assert not found, (
+        "a second copy of the gold aggregation: per-(match, key) sums belong "
+        "in plans/gold.py's *_parts (batsman_parts, bowler_parts, team_parts, "
+        "standings_parts) and their merge in its *_from_parts; "
+        f"plans/gold_incremental.py only packs and unpacks them: {found}"
+    )
