@@ -7,20 +7,26 @@ declarative plans optimized by Catalyst, window functions instead of
 stateful row loops, broadcast joins instead of dict lookups, and
 Structured Streaming instead of Lambda/Glue event chaining.
 
+Entry points: ``cli.main`` (one subcommand per reference layer job,
+plus ``stream``, ``sql``, ``query``, ``maintain``, ``prep`` and
+``corpus``), ``streaming.run_incremental_pipeline`` and the registered
+queries in ``queries.REGISTRY``.
+
 Layout:
   session    - SparkSession factory tuned for local[N] and cluster use
   schemas    - explicit StructType contracts per medallion layer
   functions/ - scalar/event-parse/fuzzy column expression builders
   plans/     - bronze/silver/gold medallion transform plans
-  operators/ - dedup, similarity search (LSH/IVF), as-of/range join,
+  operators/ - dedup, similarity search (LSH/IVF/PQ), as-of/range join,
                text analysis, multimodal plumbing, skew salting (the
                100 TB training-data toolkit)
-  sources/   - readers/writers (CSV/JSONL/Parquet/Delta-gated) with
-               partition-predicate overwrite semantics; bucketed tables
-               for exchange-free co-located joins
-  streaming/ - file-source incremental pipeline (foreachBatch medallion),
-               watermarked event-time windows, applyInPandasWithState
-               keyed running state
+  sources/   - schema-enforced CSV/JSON/Parquet readers, partition-
+               predicate overwrite and upsert writers (Delta when
+               delta-spark is present), versioned snapshots, table
+               maintenance
+  streaming/ - file-source incremental medallion pipeline (foreachBatch
+               over the CLI's layer routines) and the streaming corpus
+               ingest
 """
 
 __version__ = "0.1.0"

@@ -15,6 +15,14 @@ same operational surface as subcommands over a shared SparkSession:
         [--gold-mode incremental]
     python -m aws_ipl_data_pipeline_spark sql "SELECT ..." \
         --table deliveries=P2 [--table g=path ...]
+    python -m aws_ipl_data_pipeline_spark maintain compact|sort|zorder \
+        --path T [--by C ...]
+
+``sql`` is also the reference's Athena surface (reference
+README.md:151-183): its points-table and orange-cap queries run as
+written, minus the ``ipl_db.`` qualifier, with ``--table
+gold_tournament_standings=D2/gold_tournament_standings`` (and
+``gold_batsman_stats``) naming the gold outputs.
 
 Inputs: raw is the reference's per-match CSV layout (a glob like
 ``raw/*/``); meta and players are JSON/JSONL as produced by the
@@ -246,35 +254,6 @@ def cmd_maintain(args) -> None:
     if args.action == "compact":
         n = compact(spark, args.path, target_file_bytes=args.target_bytes)
         print(f"compacted {args.path} -> {n} files")
-    elif args.action == "compact-lsh":
-        from aws_ipl_data_pipeline_spark.operators.similarity import (
-            compact_lsh_index,
-        )
-
-        n = compact_lsh_index(
-            spark,
-            args.path,
-            id_col=args.id_col,
-            target_file_bytes=args.target_bytes,
-        )
-        print(f"compacted LSH index {args.path} -> {n} files (deduped at rest)")
-    elif args.action == "compact-ivf":
-        from aws_ipl_data_pipeline_spark.operators.similarity import (
-            compact_ivf_index,
-        )
-
-        n = compact_ivf_index(
-            spark,
-            args.path,
-            id_col=args.id_col,
-            stats_cols=args.by,  # --by names the stats columns, if any
-            target_file_bytes=args.target_bytes,
-        )
-        extra = " + stats refreshed" if args.by else ""
-        print(
-            f"compacted IVF index {args.path} -> {n} files "
-            f"(deduped at rest{extra})"
-        )
     elif args.action == "sort":
         if not args.by:
             sys.exit("sort requires --by")
@@ -532,22 +511,13 @@ def build_parser() -> argparse.ArgumentParser:
     m = sub.add_parser(
         "maintain",
         help=(
-            "compact small files (plain tables or materialized LSH/IVF"
-            " indexes, which also dedupe at-least-once retry rows at"
-            " rest) or rewrite sorted/z-ordered"
+            "compact a plain parquet table's small files or rewrite it"
+            " sorted/z-ordered"
         ),
     )
-    m.add_argument(
-        "action",
-        choices=["compact", "compact-lsh", "compact-ivf", "sort", "zorder"],
-    )
+    m.add_argument("action", choices=["compact", "sort", "zorder"])
     m.add_argument("--path", required=True)
-    m.add_argument(
-        "--by",
-        nargs="+",
-        help="sort/zorder columns; for compact-ivf: the stats columns",
-    )
-    m.add_argument("--id-col", default="vec_id")
+    m.add_argument("--by", nargs="+", help="sort/zorder columns")
     m.add_argument("--target-bytes", type=int, default=128 * 1024 * 1024)
     m.set_defaults(fn=cmd_maintain)
 

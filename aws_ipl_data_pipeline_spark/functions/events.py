@@ -49,8 +49,6 @@ EXTRAS_MAP: dict[str, int] = {
     "leg-byes": 0,
 }
 
-ILLEGAL_EXTRA_TYPES = ["wide", "no ball", "no-ball", "5 wides"]
-
 
 def _lit_map(d: dict[str, int]) -> Column:
     return F.create_map(*chain.from_iterable((F.lit(k), F.lit(v)) for k, v in d.items()))

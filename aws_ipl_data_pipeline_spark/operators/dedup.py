@@ -19,13 +19,12 @@ engine. Scale design notes per operator:
 * simhash_pairs — 64-bit SimHash, near-dup = small Hamming distance;
   banding on bit-blocks (pigeonhole: d ≤ k differing bits → at least
   one of k+1 blocks identical) turns Hamming search into equi-joins.
-* embedding_cosine_pairs — exact pairwise cosine above a threshold
-  (reference baseline; single CartesianProduct — kept only as the
-  oracle cross-check for the blocked variant). All cosine operators
+* embedding_cosine_pairs_blocked — exact pairwise cosine above a
+  threshold, the REGISTERED exact path (its single-CartesianProduct
+  baseline is a test oracle, tests/oracles.py). All cosine operators
   compute on COSINE_SCALE-quantized integer vectors: exact integer
   sums make the threshold gate bit-deterministic across engines
-  (float GEMMs only DISCOVER candidates at threshold−ε).
-* embedding_cosine_pairs_blocked — the REGISTERED exact path: block
+  (float GEMMs only DISCOVER candidates at threshold−ε). Block
   the vectors into G buckets, enumerate the G(G+1)/2 unordered block
   pairs as join tasks, and compute each block-pair's cosine matrix with
   one vectorized numpy GEMM inside applyInPandas. Same O(n²·d) FLOPS
@@ -117,10 +116,9 @@ def shingle_jaccard_pairs(
     This is the ORACLE/POC form: cost grows with co-occurring shingle
     pairs — measured 19.8× on 100× data (SCALE.md r9), the steepest
     curve in the dedup family, with MinHash-LSH + exact verification
-    2.2× faster at 500k docs and pulling away. Above
-    ``JACCARD_LSH_CROSSOVER_DOCS`` use ``minhash_lsh_pairs`` (same
-    exact-precision contract) — ``jaccard_pairs_auto`` encodes the
-    routing.
+    2.2× faster at 500k docs and pulling away. Above ~50k docs (the
+    measured crossover) use ``minhash_lsh_pairs`` (same
+    exact-precision contract).
     """
     # Verification here counts co-occurrences (join on shingle →
     # groupBy pair) rather than carrying collect_set shingle sets as
@@ -157,92 +155,6 @@ def shingle_jaccard_pairs(
             F.col("id_b").cast("long"),
             F.round("jaccard", 4).alias("jaccard"),
         )
-    )
-
-
-# Measured exact-jaccard vs LSH crossover (SCALE.md r9 sixth entry,
-# disjoint-replica corpus, local[16]): at 50k docs the two are within
-# noise (6.25 s vs 5.46 s); at 500k docs LSH is 2.2× faster (15.4 s vs
-# 34.3 s) and the gap widens with corpus size because the exact join
-# grows with co-occurring shingle PAIRS while banded candidates grow
-# linearly. 50k is therefore the routing boundary: below it the exact
-# join's lower constant wins, above it the asymptotics do.
-JACCARD_LSH_CROSSOVER_DOCS = 50_000
-
-
-def jaccard_pairs_auto(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    max_shingle_df: int | None = None,
-    corpus_docs: int | None = None,
-    crossover_docs: int = JACCARD_LSH_CROSSOVER_DOCS,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket_size: int | None = 256,
-) -> DataFrame:
-    """Size-routed near-dup pairs (VERDICT r9 #4): the measured
-    jaccard/LSH crossover as an API guard, so callers cannot ride the
-    exact inverted-index join past the corpus size where it stops
-    being the fast plan. At or below ``crossover_docs`` documents the
-    exact ``shingle_jaccard_pairs`` runs (lower constant, zero recall
-    caveats); above it the call WARNS and routes to
-    ``minhash_lsh_pairs`` — same (id_a, id_b, jaccard) contract, same
-    exact-precision guarantee (every candidate is verified with the
-    true shingle jaccard), with recall governed by the banding
-    (bands=16/rows=4 captures ≥ the 0.8 default threshold with
-    near-certainty; the miss probability for a true 0.8-jaccard pair
-    is (1 − 0.8⁴)^16 ≈ 0.1%).
-
-    Pass ``corpus_docs`` when the size is already known (catalog
-    stats, a prior count) to skip the counting job; otherwise one
-    COUNT(*) over the id column runs — a footer-only/metadata
-    aggregate on parquet sources, negligible against either join.
-
-    Above the crossover the skew-guard VOCABULARY changes (ADVICE
-    r10): ``max_shingle_df`` is an exact-join concept (drop shingles
-    whose document frequency explodes the inverted-index self-join)
-    and does NOT apply to the LSH plan — there the equivalent
-    degenerate-mass guard is the ``max_bucket_size`` hot-bucket
-    ceiling, forwarded here along with the ``num_hashes``/``bands``
-    recall tuning, so a caller who tuned the exact path keeps
-    equivalent (not silently dropped) controls on the routed path.
-    The warning names the semantic shifts: exact → banded recall
-    (≈ 99.9% at the default 0.8 threshold) and DF-prune → bucket
-    ceiling."""
-    n_docs = corpus_docs if corpus_docs is not None else docs.count()
-    if n_docs <= crossover_docs:
-        return shingle_jaccard_pairs(
-            docs, id_col, text_col, n, threshold, max_shingle_df
-        )
-    import warnings
-
-    df_note = (
-        " max_shingle_df does not apply on this path; the hot-bucket "
-        f"ceiling (max_bucket_size={max_bucket_size}) is the "
-        "equivalent degenerate-mass guard."
-        if max_shingle_df is not None
-        else ""
-    )
-    warnings.warn(
-        f"jaccard_pairs_auto: corpus of {n_docs} docs exceeds the "
-        f"measured exact-join crossover ({crossover_docs}); routing to "
-        "minhash_lsh_pairs + exact verification (SCALE.md r9: 2.2x "
-        "faster at 500k docs and widening). Recall shifts from exact "
-        f"to banded (~99.9% at threshold 0.8).{df_note}",
-        stacklevel=2,
-    )
-    return minhash_lsh_pairs(
-        docs,
-        id_col,
-        text_col,
-        n,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-        max_bucket_size=max_bucket_size,
     )
 
 
@@ -387,7 +299,7 @@ def minhash_lsh_pairs(
     represent (mutually near-identical docs: all members verify against
     the pivot, so the component stays connected). Small buckets are
     unaffected, so below the ceiling results are bit-identical to the
-    unguarded plan; audit oversized buckets with ``lsh_hot_buckets``.
+    unguarded plan.
     ``None`` disables the guard AND switches candidate generation to
     the distributed band equi-self-join: the map-side pair-array plan
     squares a bucket inside one row pre-explode, which only the ceiling
@@ -539,51 +451,6 @@ def minhash_lsh_pairs(
             F.col("id_b").cast("long"),
             F.round("jaccard", 4).alias("jaccard"),
         )
-    )
-
-
-def lsh_hot_buckets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    max_bucket_size: int = 256,
-) -> DataFrame:
-    """Audit companion to ``minhash_lsh_pairs``: the (band, bucket)
-    cells whose size exceeds ``max_bucket_size`` — i.e. exactly the
-    buckets the star fallback fired on — with their sizes, descending.
-    Run this when the ceiling triggers to see what boilerplate cluster
-    caused it (at scale: feed the members to exact_dedup, which handles
-    identical content in one hash-agg without any pair explosion)."""
-    rows_per_band = num_hashes // bands
-    sh = word_shingles(docs, id_col, text_col, n).select(
-        "_id", F.xxhash64("shingle").alias("_hs")
-    )
-    mins = [
-        F.min(F.xxhash64(F.lit(seed + i), F.col("_hs"))).alias(f"_h{i}")
-        for i in range(num_hashes)
-    ]
-    agg = sh.groupBy("_id").agg(*mins)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"_h{b * rows_per_band + r}") for r in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return (
-        agg.select("_id", F.explode(band_structs).alias("bb"))
-        .groupBy(F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        .agg(F.count("*").alias("bucket_size"))
-        .where(F.col("bucket_size") > max_bucket_size)
-        .orderBy(F.desc("bucket_size"))
     )
 
 
@@ -1069,55 +936,6 @@ def _exact_cos(a_int, b_int, saa_f, sbb_f):
     return dots / np.sqrt(saa_f * sbb_f)
 
 
-def embedding_cosine_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.45,
-) -> DataFrame:
-    """Exact pairwise cosine ≥ threshold (baseline; O(n²) — the scale
-    path is similarity.lsh_bucketed_topk). JVM-side fold, no UDF.
-    Returns (id_a, id_b, cos_sim rounded 4).
-
-    Cosines are computed on COSINE_SCALE-quantized integer vectors
-    (see _quantized): integer dot/norm sums are exact and
-    order-independent, so the threshold gate compares bit-identical
-    doubles on every engine — a pair within an ulp of the threshold
-    can never flip between Spark and a SQL oracle (the failure class
-    ADVICE r5 flagged for q11; float-summed cosines reintroduce it
-    because summation order differs across engines)."""
-    v = emb.select(
-        F.col(id_col).alias("_id"), _quantized(vec_col).alias("_q")
-    ).withColumn(
-        "_saa",
-        F.aggregate(
-            "_q", F.lit(0).cast("long"), lambda acc, x: acc + x * x
-        ).cast("double"),
-    )
-    a = v.select(
-        F.col("_id").alias("id_a"), F.col("_q").alias("_qa"), F.col("_saa").alias("_na")
-    )
-    b = v.select(
-        F.col("_id").alias("id_b"), F.col("_q").alias("_qb"), F.col("_saa").alias("_nb")
-    )
-    dot = F.aggregate(
-        F.zip_with("_qa", "_qb", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    ).cast("double")
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", dot / F.sqrt(F.col("_na") * F.col("_nb")))
-        .where(F.col("cos_sim") >= threshold)
-        .select(
-            F.col("id_a").cast("long"),
-            F.col("id_b").cast("long"),
-            F.round("cos_sim", 4).alias("cos_sim"),
-        )
-    )
-
-
 def embedding_cosine_pairs_blocked(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -1126,7 +944,8 @@ def embedding_cosine_pairs_blocked(
     n_blocks: int = 8,
 ) -> DataFrame:
     """Exact pairwise cosine ≥ threshold, reducer-blocked (the scale
-    plan; same results as ``embedding_cosine_pairs``).
+    plan; same results as the single-crossJoin baseline in
+    tests/oracles.py).
 
     Vectors hash into ``n_blocks`` blocks; every unordered block pair
     (ga ≤ gb) is one task key, each vector is replicated to exactly the
@@ -1499,9 +1318,8 @@ def incremental_near_dedup(
 
     Scale shape — the whole point at 100 TB: the CORPUS side is never
     self-joined, never pair-exploded, and its per-doc signature row is
-    exactly ``minhash_state`` — precompute/store it once (the streaming
-    form, ``streaming/corpus.run_near_dedup_ingest``, does exactly
-    this) and this function's corpus stage becomes a table scan. The
+    exactly ``minhash_state`` — precompute/store it once and this
+    function's corpus stage becomes a table scan. The
     batch side (bands AND verification sets) rides broadcast joins, so
     the only corpus-sized work is one banded scan plus verification of
     actual collisions. Within-batch duplicates are deliberately NOT

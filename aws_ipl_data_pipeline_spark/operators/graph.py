@@ -179,55 +179,6 @@ def pagerank_fixed_int(
     return r.select("v", F.col("r").cast("long").alias("rank_scaled"))
 
 
-def pagerank_fixed_int_reference(
-    node_ids: list[int],
-    weighted_edges: list[tuple[int, int, int]],
-    iters: int = 3,
-    damp_num: int = DAMP_NUM,
-    damp_den: int = DAMP_DEN,
-    seed_ids: list[int] | None = None,
-) -> dict[int, int]:
-    """Pure-Python single-process replica of ``pagerank_fixed_int`` —
-    the test oracle (same role numpy parity plays for kmeans). Every
-    operation mirrors the distributed form exactly: integer division,
-    exact integer sums."""
-    n = len(node_ids)
-    if n == 0:
-        return {}
-    out_w: dict[int, int] = {}
-    for src, _dst, w in weighted_edges:
-        out_w[src] = out_w.get(src, 0) + w
-    pe = [
-        (src, dst, (w * EDGE_PROB_SCALE) // out_w[src])
-        for src, dst, w in weighted_edges
-    ]
-    teleport_mass = RANK_SCALE - (RANK_SCALE * damp_num) // damp_den
-    if seed_ids is None:
-        base = {v: teleport_mass // n for v in node_ids}
-        r = {v: RANK_SCALE // n for v in node_ids}
-    else:
-        seeds = set(seed_ids)  # dedupe exactly as the operator does
-        ns = len(seeds)
-        if ns == 0:
-            return {v: 0 for v in node_ids}
-        base = {
-            v: (teleport_mass // ns if v in seeds else 0) for v in node_ids
-        }
-        r = {v: (RANK_SCALE // ns if v in seeds else 0) for v in node_ids}
-    for _ in range(iters):
-        infl: dict[int, int] = {}
-        for src, dst, p in pe:
-            rs = r.get(src)
-            if rs is None:  # src outside node_ids: the distributed
-                continue  # form's inner join drops it the same way
-            infl[dst] = infl.get(dst, 0) + (rs * p) // EDGE_PROB_SCALE
-        r = {
-            v: base[v] + (damp_num * infl.get(v, 0)) // damp_den
-            for v in node_ids
-        }
-    return r
-
-
 def top_out_edges(edges: DataFrame, m: int = 2) -> DataFrame:
     """k-NN graph sparsification: keep each node's ``m`` strongest
     out-edges (by weight desc, dst asc as the deterministic tiebreak).

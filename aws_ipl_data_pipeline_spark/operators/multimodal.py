@@ -2,15 +2,14 @@
 columns with typed metadata, processed via Arrow-batched mapInPandas.
 
 The Spark-side contract is real and tested — schema, partition-aware
-batching, UDF signatures — while the codec step itself is stubbed
-behind ``DECODERS`` (the decode libraries aren't in this container; a
-deterministic fake produces stable "features" so the distributed
-plumbing is verifiable end-to-end).
+batching, UDF signatures — while the codec step itself is stubbed (no
+decode library is a dependency; a deterministic fake produces stable
+"features" so the distributed plumbing is verifiable end-to-end).
 
 Design for 100 TB of media:
 * binary payloads stay opaque until the last possible operator (column
   pruning means metadata-only queries never deserialize payloads);
-* decode/resize/feature-extract run inside mapInPandas so the payload
+* decode/feature-extract run inside mapInPandas so the payload
   never crosses the driver and batches amortize Python overhead;
 * maxRecordsPerBatch should be lowered for large blobs (Arrow batch
   size is rows, not bytes).
@@ -24,16 +23,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("mime", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -82,106 +71,20 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-try:  # real decoder if available (not in this container)
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except Exception:  # pragma: no cover
-    HAVE_PIL = False
-
-
-def resize_images(
-    media: DataFrame, max_side: int = 256, use_real_codec: bool = False
-) -> DataFrame:
-    """Resize image payloads to fit within ``max_side``, preserving
-    aspect ratio from meta['w']/meta['h'].
-
-    ``use_real_codec=True`` requires pillow and raises
-    NotImplementedError without it (the decode libraries are not in
-    this container). The default path is the deterministic fake: the
-    scale factor is computed from the REAL metadata, the output payload
-    is a content-derived downsample (every ceil(1/scale²)-th byte), and
-    meta carries the new dimensions — so schema, batching, partition
-    behavior and size accounting are all faithfully exercised."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if use_real_codec and not HAVE_PIL:
-            raise NotImplementedError("image resize requires pillow")
-        rows = []
-        for pdf in it:
-            rows = []
-            for mid, payload, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"]
-            ):
-                meta = dict(meta or {})
-                w = int(meta.get("w", "0") or 0)
-                h = int(meta.get("h", "0") or 0)
-                side = max(w, h)
-                scale = (max_side / side) if side > max_side else 1.0
-                nw, nh = max(int(w * scale), 1), max(int(h * scale), 1)
-                payload = payload or b""
-                if scale < 1.0:
-                    step = max(int(1.0 / (scale * scale)), 1)
-                    payload = payload[::step]
-                meta.update({"w": str(nw), "h": str(nh), "resized": "1"})
-                rows.append((mid, payload, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "payload", "meta"])
-
-    return media.where(media.kind == "image").mapInPandas(
-        batches, schema=RESIZED_SCHEMA
-    )
-
-
-def frame_sample(media: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
-    """'Frame sampling' plumbing: emits one row per sampled offset of
-    each video payload (UDTF-shaped 1→N mapInPandas). The decode is the
-    deterministic fake; the explode/batch shape is the real contract."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_no", T.LongType()),
-            T.StructField("frame_sha", T.StringType()),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = payload or b""
-                for fno, off in enumerate(range(0, max(len(payload), 1), every_n_bytes)):
-                    chunk = payload[off : off + every_n_bytes]
-                    rows.append(
-                        (mid, fno, hashlib.sha256(chunk).hexdigest())
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_no", "frame_sha"])
-
-    return media.where(media.kind == "video").mapInPandas(batches, schema=out_schema)
-
-
 def frame_fingerprints(
     media: DataFrame,
     frame_bytes: int = 64,
     id_col: str = "media_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Fixed-offset frame fingerprints as PURE column expressions —
-    the relational (JVM/codegen, zero-Python) twin of ``frame_sample``
-    for when the fingerprint does not need a real codec: the payload's
-    hex encoding is sliced at fixed byte offsets (2 hex chars per byte)
-    and each slice is sha256'd. hex() and sha256-of-VARCHAR have
-    bit-identical cross-engine semantics, which makes downstream
-    overlap joins fully oracle-provable — and at 100 TB this form
-    scans, explodes, and hashes entirely inside whole-stage codegen
-    (no Arrow hop, no Python worker).
+    """Fixed-offset frame fingerprints as PURE column expressions
+    (JVM/codegen, zero-Python), for when the fingerprint does not need
+    a real codec: the payload's hex encoding is sliced at fixed byte
+    offsets (2 hex chars per byte) and each slice is sha256'd. hex()
+    and sha256-of-VARCHAR have bit-identical cross-engine semantics,
+    which makes downstream overlap joins fully oracle-provable — and at
+    100 TB this form scans, explodes, and hashes entirely inside
+    whole-stage codegen (no Arrow hop, no Python worker).
 
     Returns (media_id, frame_no, frame_sha); empty payloads yield no
     frames. The trailing frame is the remainder slice."""

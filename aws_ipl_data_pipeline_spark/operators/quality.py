@@ -125,23 +125,6 @@ def robust_outlier_stats(
     )
 
 
-def with_observed_metrics(df: DataFrame, name: str, metrics: dict[str, Column]):
-    """Attach zero-cost telemetry to a DataFrame: the named aggregate
-    metrics are computed DURING whatever action materializes ``df`` (a
-    write, a count) — no second job, no second scan. This is how a
-    100 TB pipeline stage reports rows-in/rows-dropped/null-rates
-    without paying for a validation pass: `expectation_report` is the
-    standalone audit; this is the always-on inline variant.
-
-    Returns (observed_df, observation); read ``observation.get`` AFTER
-    an action has run. Metrics must be aggregate expressions.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *[c.alias(n) for n, c in metrics.items()]), obs
-
-
 def psi_drift(
     old: DataFrame,
     new: DataFrame,

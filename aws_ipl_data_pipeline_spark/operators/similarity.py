@@ -16,8 +16,8 @@
   one pass (n_cells JVM-side dots per row) and the cell id is the
   natural partition/cluster key for the stored index, so a probe is a
   partition-pruned scan of n_probe/n_cells of the data.
-* pairwise cosine (dedup.embedding_cosine_pairs) covers the join-shaped
-  variant.
+* pairwise cosine (dedup.embedding_cosine_pairs_blocked) covers the
+  join-shaped variant.
 """
 
 from __future__ import annotations
@@ -147,11 +147,9 @@ def lsh_probe_buckets(
     probe_hamming: int = 1,
 ) -> set[int]:
     """The query's LSH bucket plus every bucket within
-    ``probe_hamming`` bit flips — THE probe-set rule, shared by the
-    in-memory (lsh_bucketed_topk) and materialized (probe_lsh_index)
-    forms so the answer-affecting probe set cannot drift between
-    them. Signs come from exact integer dots (quantized query ×
-    quantized planes), the add_lsh_bucket determinism contract."""
+    ``probe_hamming`` bit flips — THE probe-set rule. Signs come from
+    exact integer dots (quantized query × quantized planes), the
+    add_lsh_bucket determinism contract."""
     bits = len(planes)
     qq = _quantize_list(query_vec)
     q_bucket = 0
@@ -167,94 +165,6 @@ def lsh_probe_buckets(
             for j in range(i + 1, bits):
                 probes.add(q_bucket ^ (1 << i) ^ (1 << j))
     return probes
-
-
-def write_lsh_index(
-    emb: DataFrame,
-    path: str,
-    bits: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> list[list[float]]:
-    """Materialize the LSH bucket table AS A PARTITIONED TABLE —
-    the write_ivf_index pattern for the hyperplane family: buckets
-    assigned once, ``partitionBy(bucket)`` (≤ 2^bits directories),
-    so a probe is storage-level PARTITION PRUNING over the ~(1+bits)
-    probed buckets instead of a runtime filter. Returns the planes
-    (derive them anywhere from (dim, bits, seed) — random_hyperplanes
-    is seeded — but persisting beside the index documents the index's
-    parameters). Pass ``dim`` to skip the 1-row dimension probe (one
-    Spark job) — required anyway when the input may be empty."""
-    if dim is None:
-        head = emb.select(vec_col).head()  # 1-row bounded read
-        if head is None or head[0] is None:
-            raise ValueError(
-                "write_lsh_index: cannot infer the vector dimension from "
-                f"an empty corpus (or a NULL leading {vec_col!r}); pass "
-                "dim= explicitly"
-            )
-        dim = len(head[0])
-    planes = random_hyperplanes(dim, bits, seed)
-    add_lsh_bucket(emb, planes, vec_col).write.partitionBy("bucket").mode(
-        "overwrite"
-    ).parquet(path)
-    return planes
-
-
-def probe_lsh_index(
-    spark,
-    path: str,
-    planes: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    probe_hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Query a materialized LSH index: probe buckets computed
-    driver-side (index metadata only), read ONLY those bucket
-    partitions (directory-level pruning), brute-force the survivors.
-    Same at-least-once posture as probe_ivf_index: candidates dedupe
-    by id so a retried ingest append can never seat one vector twice
-    in the k list."""
-    probes = lsh_probe_buckets(planes, query_vec, probe_hamming)
-    candidates = (
-        spark.read.parquet(path)
-        .where(F.col("bucket").isin(list(probes)))
-        .dropDuplicates([id_col])
-    )
-    return brute_force_topk(candidates, query_vec, k, id_col, vec_col, exclude_id)
-
-
-def compact_lsh_index(
-    spark,
-    path: str,
-    id_col: str = "vec_id",
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """COMPACTION for the materialized LSH index (VERDICT r11 item 5)
-    — the lifecycle step the IVF side already had: streaming appends
-    accumulate small per-bucket files, and an at-least-once retried
-    batch re-appends identical rows (probe_lsh_index dedupes them at
-    read time, so answers never change — but every probe pays the
-    duplicate I/O until they are removed at rest). Reuses
-    sources/maintenance.compact — partition-aware (the bucket=
-    directory layout survives byte-identically, so probe-time
-    partition pruning is untouched), atomic swap — with
-    dedupe_keys=(bucket, id): bucket assignment is deterministic from
-    (vector, planes), so a retried append can only duplicate a row
-    within its own bucket, and the at-rest dedupe is exactly the
-    probe-time rule. Returns the new file count."""
-    from aws_ipl_data_pipeline_spark.sources.maintenance import compact
-
-    return compact(
-        spark,
-        path,
-        target_file_bytes=target_file_bytes,
-        dedupe_keys=["bucket", id_col],
-    )
 
 
 def _unit(vec: list[float]) -> list[float]:
@@ -408,8 +318,7 @@ def ivf_topk(
 
     Pass ``centroids``/``celled`` (a prior ``select_centroids`` +
     ``add_ivf_cell`` build) to query a materialized index — the
-    production shape (see ``write_ivf_index``/``probe_ivf_index`` for
-    the on-disk partitioned form)."""
+    production shape."""
     if centroids is None:
         centroids = select_centroids(emb, n_cells, id_col, vec_col, seed)
     uq = _unit([float(x) for x in query_vec])
@@ -469,11 +378,10 @@ def filtered_ivf_topk(
     filtered scan).
 
     Scale posture: the stats pass reads ONLY (cell, predicate columns)
-    — a skinny column-pruned scan, never vectors; in the materialized
-    on-disk form (write_ivf_index partitions by cell) it is a
-    metadata/stats lookup. The collect is ≤ n_cells rows (bounded-
-    collect allowlist). The scoring scan then reads vectors from the
-    probed cells only, predicate pushed to the scan.
+    — a skinny column-pruned scan, never vectors. The collect is
+    ≤ n_cells rows (bounded-collect allowlist). The scoring scan then
+    reads vectors from the probed cells only, predicate pushed to the
+    scan.
 
     Determinism: probe order via ivf_probe_order (exact integer dots),
     counts are exact, so the probe SET — which the widening makes
@@ -500,13 +408,10 @@ def _widened_probes(
     n_probe: int,
     min_candidates: int,
 ) -> list[int]:
-    """THE starvation-aware widening cut, shared by the in-memory
-    (filtered_ivf_topk) and materialized (filtered_probe_ivf_index)
-    filtered probes so the answer-affecting probe SET can never drift
-    between the two forms: cumulative filtered count along the
-    nearest-first order, stop at the first rank covering
-    ``min_candidates`` (all cells when the corpus can't), floor at
-    ``n_probe``."""
+    """THE starvation-aware widening cut of ``filtered_ivf_topk``:
+    cumulative filtered count along the nearest-first order, stop at
+    the first rank covering ``min_candidates`` (all cells when the
+    corpus can't), floor at ``n_probe``."""
     cum, stop = 0, len(order)
     for rank, cell in enumerate(order, start=1):
         cum += counts.get(cell, 0)
@@ -701,187 +606,3 @@ def batch_ivf_topk(
         .withColumn("rk", F.row_number().over(w).cast("long"))
         .where(F.col("rk") <= k)
     )
-
-
-IVF_STATS_SUFFIX = "__stats"
-
-
-def write_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    stats_cols: list[str] | None = None,
-) -> list[list[float]]:
-    """Materialize the IVF index AS A PARTITIONED TABLE: assign cells
-    once and write ``partitionBy(cell)`` so each cell is its own
-    directory. Probing then becomes PARTITION PRUNING — the storage
-    layer skips non-probed cells entirely (directory listing, zero
-    bytes read), which is the 100 TB payoff of IVF: a 4-of-16-probe
-    query does 25% of the I/O with no runtime filtering at all.
-    Returns the centroids (persist them beside the index; they are the
-    index metadata).
-
-    ``stats_cols`` (VERDICT r10 item 2) additionally materializes
-    per-cell PREDICATE-COUNT stats at ``{path}__stats``: one row per
-    (cell, *stats_cols) with its vector count — index METADATA sized
-    O(n_cells × |value combos|), never O(corpus). The filtered probe
-    (filtered_probe_ivf_index) computes its starvation-aware widening
-    cut from this table instead of scanning the corpus, retiring the
-    one linear-scan caveat of the in-memory form: at 100 TB the stats
-    pass is a lookup in a table that fits in a broadcast, not a pass
-    over the vectors. Stats are build-time metadata — the streaming
-    maintenance path must refresh them when it compacts appended
-    vectors into the index (stale stats only mis-size the widening;
-    candidate CORRECTNESS never depends on them)."""
-    centroids = select_centroids(emb, n_cells, id_col, vec_col, seed)
-    celled = add_ivf_cell(emb, centroids, vec_col)
-    celled.write.partitionBy("cell").mode("overwrite").parquet(path)
-    if stats_cols:
-        refresh_ivf_stats(emb.sparkSession, path, stats_cols)
-    return centroids
-
-
-def refresh_ivf_stats(
-    spark,
-    path: str,
-    stats_cols: list[str],
-    stats_path: str | None = None,
-) -> None:
-    """Recompute the per-cell predicate-count stats from the WRITTEN
-    index — the bytes probes will actually read — and overwrite the
-    stats table. This is the authoritative stats write: it runs at
-    index build (write_ivf_index) and belongs in the COMPACTION step
-    of a streamed index. The ingest stream appends PARTIAL stats rows
-    per batch (batch-local aggregate, no index scan), which the probe
-    sums exactly; an at-least-once retried batch can overcount those
-    partials — duplicated vectors dedupe at probe time, their stats
-    rows do not — and overcounted stats make the widening cut stop
-    early (a recall, never a precision, hazard). Running this after
-    per-cell compaction (which removes the physical duplicates)
-    restores exact counts."""
-    (
-        spark.read.parquet(path)
-        .groupBy("cell", *stats_cols)
-        .agg(F.count("*").alias("cnt"))
-        .write.mode("overwrite")
-        .parquet(stats_path or path + IVF_STATS_SUFFIX)
-    )
-
-
-def compact_ivf_index(
-    spark,
-    path: str,
-    id_col: str = "vec_id",
-    stats_cols: list[str] | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """The packaged IVF compaction step (the lifecycle previously
-    described in prose and exercised as a test stand-in): per-cell
-    file re-pack + at-rest removal of at-least-once duplicate rows
-    (dedupe by (cell, id) — cell assignment is frozen metadata, a
-    retried append duplicates only within its cell), then
-    ``refresh_ivf_stats`` so the filtered probe's widening cut sees
-    exact counts again (the ingest stream's partial stats rows over-
-    OR under-count after retries/crashes; this is the repair both
-    hazards share). Returns the new file count."""
-    from aws_ipl_data_pipeline_spark.sources.maintenance import compact
-
-    n = compact(
-        spark,
-        path,
-        target_file_bytes=target_file_bytes,
-        dedupe_keys=["cell", id_col],
-    )
-    if stats_cols:
-        refresh_ivf_stats(spark, path, stats_cols)
-    return n
-
-
-def probe_ivf_index(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Query a materialized IVF index: rank cells by centroid dot
-    product driver-side (k×dim floats — index metadata, not data),
-    read ONLY those partitions (cell IN (...) prunes at the directory
-    level), brute-force the survivors.
-
-    Candidates dedupe by id before ranking: the streaming maintenance
-    path (streaming/ann.run_ivf_index_ingest) is at-least-once — a
-    retried batch can append the same vectors twice — and without the
-    dedupe a duplicated near neighbor would occupy two of the k result
-    rows. The dedupe shuffles only the probed subset, and a periodic
-    per-cell compaction removes the physical duplicates."""
-    order = ivf_probe_order(centroids, query_vec)
-    probes = order[: min(n_probe, len(order))]
-    candidates = (
-        spark.read.parquet(path)
-        .where(F.col("cell").isin(probes))
-        .dropDuplicates([id_col])
-    )
-    return brute_force_topk(candidates, query_vec, k, id_col, vec_col, exclude_id)
-
-
-def filtered_probe_ivf_index(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    predicate: Column,
-    k: int = 10,
-    n_probe: int = 4,
-    min_candidates: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    stats_path: str | None = None,
-) -> DataFrame:
-    """Metadata-filtered search against a MATERIALIZED index — the
-    100 TB form of ``filtered_ivf_topk`` (VERDICT r10 item 2). Two
-    reads, neither a corpus scan:
-
-    1. the widening cut's per-cell filtered counts come from the
-       ``write_ivf_index(stats_cols=...)`` stats table (O(n_cells ×
-       value combos) rows — index metadata), NOT from scanning the
-       celled corpus; the collect is ≤ n_cells rows after the stats
-       aggregate. ``predicate`` must reference only stats columns.
-    2. the scoring read lists ONLY the probed cell directories —
-       ``cell IN (...)`` over the partition column is storage-level
-       partition pruning (zero bytes from non-probed cells), with the
-       metadata predicate pushed into the pruned scan.
-
-    Probe order, widening cut, and candidate scoring are shared code
-    with the in-memory form (ivf_probe_order / _widened_probes /
-    brute_force_topk), so the two forms return identical results on
-    identical data — pinned by tests. Same at-least-once posture as
-    probe_ivf_index: candidates dedupe by id (streaming appends can
-    duplicate vectors; duplicated rows carry identical metadata, so
-    predicate-then-dedupe is order-insensitive)."""
-    if min_candidates is None:
-        min_candidates = 3 * k
-    order = ivf_probe_order(centroids, query_vec)
-    stats = spark.read.parquet(stats_path or path + IVF_STATS_SUFFIX)
-    counts = {
-        r["_c"]: r["_n"]
-        for r in stats.where(predicate)
-        .groupBy(F.col("cell").alias("_c"))
-        .agg(F.sum("cnt").alias("_n"))
-        .collect()
-    }
-    probes = _widened_probes(order, counts, n_probe, min_candidates)
-    candidates = (
-        spark.read.parquet(path)
-        .where(F.col("cell").isin(probes))
-        .where(predicate)
-        .dropDuplicates([id_col])
-    )
-    return brute_force_topk(candidates, query_vec, k, id_col, vec_col)

@@ -1,21 +1,16 @@
-"""Skew mitigation primitives for hot-key aggregation and joins.
+"""Skew mitigation for hot-key aggregation.
 
 At 100 TB a handful of hot keys (one viral document source, one
-dominant event_type) can pin a whole stage on one reducer. Two classic
-rewrites, both pure DataFrame (AQE's skewedJoin handles *join* skew
-automatically when partitions exceed the skew threshold; these cover
-the aggregation case and the pre-AQE/bucketed paths):
+dominant event_type) can pin a whole stage on one reducer. AQE's
+skewedJoin handles *join* skew automatically when partitions exceed
+the skew threshold; the aggregation case needs a rewrite, pure
+DataFrame:
 
 * salted_aggregate — two-phase groupBy: partial-aggregate on
   (key, salt) so a hot key fans out over ``salt_buckets`` reducers,
   then final-aggregate on key. Correct for any algebraic aggregate
   (sum/count/min/max expressed as sum-of-partials); the result is
   bit-identical to the direct groupBy.
-* salted_broadcast_left — replicate a small right side ``salt_buckets``
-  times so a salted left can equi-join without a shuffle of the hot key
-  into one partition. (Only needed when the right side is too big for a
-  plain broadcast but the *left* is skewed; with a broadcastable right,
-  Spark already never shuffles the left.)
 
 Reference has no skew handling (single-process pandas,
 pipeline_2026/ex_match_sg.py) — this is the scale path the engine adds.
@@ -62,22 +57,3 @@ def salted_aggregate(
     return partial.groupBy(*keys).agg(
         *[F.sum(alias).alias(alias) for alias in sums]
     )
-
-
-def salted_broadcast_left(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Join a skewed left against a modest right by salting the left and
-    exploding the right across all salt values, so no single reducer
-    owns a hot key. Right side grows ×salt_buckets — use only when
-    |right| · salt_buckets still fits the shuffle comfortably."""
-    salted = with_salt(left, salt_buckets)
-    replicated = right.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    out = salted.join(replicated, [on, "_salt"], how)
-    return out.drop("_salt")

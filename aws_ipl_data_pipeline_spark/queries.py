@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_ipl_data_pipeline_spark.session import tune_session
+from aws_ipl_data_pipeline_spark.sources.readers import local_frame
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -86,6 +87,14 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def long_spine(spark: SparkSession, col: str, values) -> DataFrame:
+    """One bigint column over small ints (a sweep's levels), built in
+    the JVM: ``local_frame`` takes int columns, and the cast gives the
+    bigint the oracles expect."""
+    rows = [(int(v),) for v in values]
+    return local_frame(spark, f"{col} int", rows).select(F.col(col).cast("long"))
 
 
 # re-exported for the query battery; defined beside the other shared
@@ -1359,9 +1368,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("th")
         .agg(F.count("*").cast("long").alias("n_docs_flagged"))
     )
-    spine = spark.createDataFrame(
-        [(int(t),) for t in _DEDUP_CURVE_THS], "threshold_1e4 long"
-    )
+    spine = long_spine(spark, "threshold_1e4", _DEDUP_CURVE_THS)
     return (
         spine.join(
             n_pairs.withColumnRenamed("th", "threshold_1e4"),
@@ -1716,8 +1723,8 @@ _EMB_EXPAND_Q = """
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs: exact pairwise cosine ≥ 0.45 via the
     reducer-blocked GEMM plan (no CartesianProduct; one shuffle on the
-    block-pair task key). The single-cartesian baseline
-    (embedding_cosine_pairs) is kept as the cross-check; approximate
+    block-pair task key). The single-cartesian baseline in
+    tests/oracles.py is kept as the cross-check; approximate
     regimes use ann_lsh_topk / ann_ivf_topk."""
     from aws_ipl_data_pipeline_spark.operators.dedup import (
         embedding_cosine_pairs_blocked,
@@ -2208,7 +2215,7 @@ def ann_lsh_radius_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact on both engines) explodes onto the radii that admit
     it, scoring is shared across radii, ranking is one skinny
     windowed exchange. The query bucket comes from the SAME
-    lsh_probe_buckets sign rule as the in-memory/materialized probes,
+    lsh_probe_buckets sign rule as the in-memory probe (lsh_bucketed_topk),
     and the oracle re-derives buckets from the identical quantized
     plane literals."""
     from aws_ipl_data_pipeline_spark.operators.similarity import (
@@ -2275,9 +2282,7 @@ def ann_lsh_radius_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_found"),
         )
     )
-    levels = spark.createDataFrame(
-        [(r,) for r in _LSH_RADIUS_SWEEP], "radius long"
-    )
+    levels = long_spine(spark, "radius", _LSH_RADIUS_SWEEP)
     zero = F.lit(0).cast("long")
     return (
         levels.join(per_radius, "radius", "left")
@@ -3111,8 +3116,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    # materialized-index posture (write_ivf_index is the on-disk form):
-    # centroids + celled table session-memoized, queries only probe
+    # materialized-index posture: centroids + celled table
+    # session-memoized, queries only probe
     cents = session_memo(
         spark,
         ("ivf_centroids", sf_dir, 16),
@@ -5279,7 +5284,7 @@ def ann_dim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = per_q.groupBy("dim").agg(
         F.sum("n_found").alias("n_found"), F.sum("rr").alias("mrr_sum")
     )
-    levels = spark.createDataFrame([(d,) for d in _DIM_SWEEP], "dim long")
+    levels = long_spine(spark, "dim", _DIM_SWEEP)
     zero = F.lit(0).cast("long")
     return (
         levels.join(agg, "dim", "left")
@@ -5489,9 +5494,7 @@ def quality_score_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("n_chars_kept"),
     )
-    spine = spark.createDataFrame(
-        [(int(th),) for th in _QC_CURVE_THS], "threshold_1e2 long"
-    )
+    spine = long_spine(spark, "threshold_1e2", _QC_CURVE_THS)
     return (
         spine.join(
             ag.withColumn("threshold_1e2", F.col("th").cast("long")).drop("th"),
@@ -9942,9 +9945,8 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equality at all three sfs. ADVICE r12 #2: oracle parity is
     # proven at the TESTED sfs, where no band bucket exceeds 256;
     # above the cap a bucket degrades to pivot-star candidates, so at
-    # larger corpora audit with dedup.lsh_hot_buckets before trusting
-    # the near-dup stage's pair-level recall (cluster connectivity is
-    # preserved either way).
+    # larger corpora the near-dup stage's pair-level recall is not
+    # proven (cluster connectivity is preserved either way).
     nd = (
         minhash_lsh_pairs(s2, threshold=0.8)
         .select(F.col("id_b").cast("long").alias("doc_id"))
@@ -11257,9 +11259,7 @@ def ann_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = per_q.groupBy("n_probe").agg(
         F.sum("n_found").alias("n_found"), F.sum("rr").alias("mrr_sum")
     )
-    levels = spark.createDataFrame(
-        [(p,) for p in _PROBE_SWEEP], "n_probe long"
-    )
+    levels = long_spine(spark, "n_probe", _PROBE_SWEEP)
     zero = F.lit(0).cast("long")
     return (
         levels.join(agg, "n_probe", "left")
@@ -11328,8 +11328,7 @@ def media_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate: 100*common >= 50*least(na, nb), so no float threshold can
     flip a pair). Fingerprinting is the RELATIONAL form (hex slices +
     sha256, whole-stage codegen, no Python) — cross-engine-exact,
-    hence the full pair set is hash-proven; the mapInPandas
-    `frame_sample` remains the plumbing for real byte-level codecs.
+    hence the full pair set is hash-proven.
     containment is a ratio of integers (exact quotient both engines).
     64-byte frames here model per-frame/per-chunk digests; at real
     media scale the same plan runs over codec-emitted fingerprints."""

@@ -61,22 +61,6 @@ PLAYERS = T.StructType(
     ]
 )
 
-# A4. season schedule (reference ex_fixtures.py:89-109)
-FIXTURES = T.StructType(
-    [
-        T.StructField("match", T.StringType()),
-        T.StructField("location", T.StringType()),
-        T.StructField("stadium", T.StringType()),
-        T.StructField("home_team", T.StringType()),
-        T.StructField("away_team", T.StringType()),
-        T.StructField("match_short", T.StringType()),
-        T.StructField("dayofweek", T.StringType()),
-        T.StructField("date", T.StringType()),
-        T.StructField("time", T.StringType()),
-        T.StructField("link", T.StringType()),
-    ]
-)
-
 # A5. bronze parsed deliveries (reference ex_match_rb.py:103-120,127-154)
 BRONZE_DELIVERIES = T.StructType(
     [
@@ -125,40 +109,3 @@ SILVER_DELIVERIES = T.StructType(BRONZE_DELIVERIES.fields + SILVER_EXTRA_COLS.fi
 
 # Natural key of a delivery (reference ex_match_bs.py:347)
 DELIVERY_KEY = ["match", "innings", "over", "ball", "rebowl"]
-
-# Synthetic harness tables (TESTDATA.md) — declared so reads are
-# fail-fast and column-pruned even without parquet footer trust.
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def validate_frame(df, expected: T.StructType, where: str = "frame") -> None:
-    """Fail-fast schema contract: raise with a precise diff instead of
-    the reference's silent defensive skips ('over' not in columns →
-    skip file, ex_match_bs.py:429-431; 'rebowl' missing → synthesize,
-    :293-294). Checks names and types; nullability is advisory in
-    Spark and ignored here."""
-    got = {f.name: f.dataType for f in df.schema.fields}
-    want = {f.name: f.dataType for f in expected.fields}
-    missing = sorted(set(want) - set(got))
-    extra = sorted(set(got) - set(want))
-    wrong = sorted(
-        f"{n}: expected {want[n].simpleString()}, got {got[n].simpleString()}"
-        for n in set(want) & set(got)
-        if want[n] != got[n]
-    )
-    if missing or extra or wrong:
-        raise ValueError(
-            f"schema mismatch in {where}: "
-            f"missing={missing} extra={extra} wrong_types={wrong}"
-        )

@@ -213,17 +213,11 @@ def compact(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    dedupe_keys: list[str] | None = None,
 ) -> int:
     """Rewrite the parquet table at ``path`` into ~⌈bytes/target⌉
     evenly-sized files and atomically swap it in. Returns the new file
     count. Row-for-row identical content — only the file layout
-    changes — unless ``dedupe_keys`` is given, which additionally
-    drops physical duplicate rows by that key (the at-least-once ingest
-    repair for materialized index tables: a retried batch re-appends
-    identical rows, probes dedupe at read time, compaction removes
-    them at rest; see similarity.compact_lsh_index /
-    compact_ivf_index).
+    changes.
 
     PARTITION-AWARE (r8, hardened r9): a hive-partitioned table (e.g.
     the incremental-gold ``_partials_*`` tables, ``match=``-partitioned)
@@ -263,13 +257,6 @@ def compact(
             raise ValueError(
                 f"partition dirs name columns absent from the table: {missing}"
             )
-        if dedupe_keys:
-            absent = [c for c in dedupe_keys if c not in df.columns]
-            if absent:
-                raise ValueError(
-                    f"dedupe_keys name columns absent from the table: {absent}"
-                )
-            df = df.dropDuplicates(list(dedupe_keys))
         total = table_bytes(spark, path)
         n = max(1, math.ceil(total / target_file_bytes))
         if not pcols:

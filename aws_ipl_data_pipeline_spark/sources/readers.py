@@ -123,10 +123,6 @@ def read_json_object(
     return spark.read.schema(schema).option("multiLine", True).json(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_table(
     spark: SparkSession,
     path: str,
@@ -231,55 +227,3 @@ def local_frame(
         )
     jschema = jvm.org.apache.spark.sql.types.DataType.fromJson(schema.json())
     return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan (beyond the reference's formats — ships in-box with
-    Spark). Columnar like parquet: column pruning and predicate pushdown
-    reach the stripe reader, so the same 100 TB scan discipline holds."""
-    return spark.read.orc(path)
-
-
-def with_source_file(df: DataFrame, col: str = "source_file") -> DataFrame:
-    """P6-style provenance: the reference derives the match id from the
-    S3 key path (ex_match_rb.py:170); Spark exposes the same via
-    input_file_name()."""
-    return df.withColumn(col, F.input_file_name())
-
-
-def read_jsonl_robust(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """S2 hardened: JSONL scan that QUARANTINES malformed lines instead
-    of silently nulling them (PERMISSIVE + columnNameOfCorruptRecord).
-    Valid rows parse normally with NULL in ``corrupt_col``; a malformed
-    line yields one row whose ``corrupt_col`` holds the raw text and all
-    schema fields NULL. Callers split on ``corrupt_col IS NULL`` —
-    facts keep flowing, rejects go to a dead-letter sink with full
-    fidelity for replay. At 100 TB ingest you never want FAILFAST
-    (one bad line kills the job) or DROPMALFORMED (silent data loss).
-
-    The caller's schema is NOT mutated: StructType.add appends to self,
-    so building the quarantine schema with ``schema.add(...)`` would
-    permanently grow a shared schema constant (and a second call would
-    append a duplicate corrupt column). A fresh StructType is built
-    from the field list instead."""
-    full = T.StructType(list(schema.fields) + [T.StructField(corrupt_col, T.StringType())])
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    )
-
-
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """S5 hardened: parquet scan across schema generations
-    (mergeSchema=true) — files written before a column existed read it
-    as NULL; the unified schema is the union of all file footers.
-    Reserve for ingest boundaries: footer merging scans every file's
-    metadata, so steady-state tables should declare one schema."""
-    return spark.read.option("mergeSchema", True).parquet(path)

@@ -1,4 +1,4 @@
-"""Sinks (SURVEY §2.1 S6-S9): partition-predicate overwrite and friends.
+"""Sinks (SURVEY §2.1 S6-S7): partition-predicate overwrite and friends.
 
 The reference's idempotent per-match upsert is deltalake's
 ``write_deltalake(..., partition_by=["match","innings"],
@@ -264,79 +264,3 @@ def replace_matches(spark, df: DataFrame, path: str, matches: list[str]) -> None
     for m in matches:
         delete_path(spark, f"{path}/{partition_dir(spark, 'match', m)}")
     write_partitioned(df, path, ["match", "innings"], mode="overwrite")
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S9: JSON-lines sink (reference to_json(orient='records',
-    lines=True), ex_match_rb.py:210-221)."""
-    df.write.mode(mode).json(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (in-box columnar alternative to parquet; same
-    partitioned-write semantics apply via ``write_partitioned(...,
-    fmt='orc')``)."""
-    df.write.mode(mode).orc(path)
-
-
-def write_csv(
-    df: DataFrame, path: str, mode: str = "overwrite", single_file: bool = False
-) -> None:
-    """S8: CSV sink; ``single_file`` coalesces for the reference's
-    one-file-per-table parity (gld_match.py:317-319) — only for small
-    gold outputs, never fact tables."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode(mode).option("header", True).csv(path)
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Layout-optimized parquet write: range-repartition on the
-    clustering keys, then sort rows inside each partition, so every
-    output file covers a NARROW, (near-)disjoint key range and its
-    footer min/max statistics become effective — a point/range query on
-    the cluster key then skips whole files and row groups instead of
-    scanning everything (the poor man's Z-order; for one key it is
-    exactly optimal). At 100 TB this is the difference between a
-    date-range query reading ~1/365th of a year's table and reading all
-    of it. ``repartitionByRange`` samples the key distribution, so
-    skewed keys still yield evenly-sized files."""
-    out = (
-        df.repartitionByRange(n_files, *cluster_by)
-        if n_files
-        else df.repartitionByRange(*cluster_by)
-    )
-    out.sortWithinPartitions(*cluster_by).write.mode(mode).parquet(path)
-
-
-def write_observed(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    count_nulls_in: list[str] | None = None,
-):
-    """Parquet write instrumented with Spark's Observation API: row
-    count and per-column null counts are collected ON THE WRITE PASS
-    itself (zero extra jobs — a separate .count() would re-run the
-    whole plan, doubling a 100 TB pipeline). Returns the metrics dict.
-
-    This is the ingest-ledger primitive: every pipeline write records
-    how many rows and how many nulls it shipped, so volume anomalies
-    (a feed going dark, a schema drift nulling a column) surface in the
-    write ledger instead of a downstream consumer."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for c in count_nulls_in or []:
-        metrics.append(
-            F.sum(F.col(c).isNull().cast("long")).alias(f"n_null_{c}")
-        )
-    obs = Observation()
-    df.observe(obs, *metrics).write.mode(mode).parquet(path)
-    return dict(obs.get)

@@ -1,75 +1,13 @@
-"""Bucketed co-located join: the write-once shuffle removes all
-Exchanges from subsequent joins on the bucket key."""
+"""Bucketed co-located join: a digest table stored bucketed on the
+join key feeds the incremental-dedup anti-join without an Exchange."""
 
 from __future__ import annotations
 
 import re
 
-import pytest
-
-from aws_ipl_data_pipeline_spark.sources.bucketing import bucketed_join, write_bucketed
-
-SF = "/root/testdata/sf0.001"
-
 
 def _detail_nodes(plan: str, kind: str) -> int:
     return len(re.findall(rf"\(\d+\) {kind}", plan))
-
-
-@pytest.fixture()
-def bucketed_tables(spark):
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    o = spark.read.parquet(f"{SF}/orders.parquet")
-    write_bucketed(li, "b_lineitem", "l_orderkey", buckets=4)
-    write_bucketed(o, "b_orders", "o_orderkey", buckets=4)
-    yield
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-
-
-def test_bucketed_join_no_exchange(spark, bucketed_tables):
-    # force the SMJ path: a broadcast join would also be shuffle-free
-    # and prove nothing about bucketing
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "b_lineitem", "b_orders", "l_orderkey", "o_orderkey")
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        plan = joined._jdf.queryExecution().explainString(mode)
-        assert "SortMergeJoin" in plan
-        assert _detail_nodes(plan, "Exchange") == 0  # bucketing removed the shuffles
-        assert "SelectedBucketsCount" in plan
-
-        # and it's not just a pretty plan — results match the plain join
-        li = spark.read.parquet(f"{SF}/lineitem.parquet")
-        o = spark.read.parquet(f"{SF}/orders.parquet")
-        plain = li.join(o, li["l_orderkey"] == o["o_orderkey"]).count()
-        assert joined.count() == plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_bucket_pruning_on_key_filter(spark, bucketed_tables):
-    """Point lookups on the bucket key scan only that key's bucket.
-
-    autoBucketedScan turns bucketed reading off when no operator
-    *requires* the distribution (a bare filter doesn't), which also
-    forfeits bucket pruning — pin it on for the lookup."""
-    old = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try:
-        df = spark.table("b_lineitem").where("l_orderkey = 1")
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        plan = df._jdf.queryExecution().explainString(mode)
-        m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-        assert m, "bucket pruning metadata missing"
-        assert int(m.group(1)) == 1 and int(m.group(2)) == 4
-    finally:
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", old)
 
 
 def test_incremental_dedup_against_bucketed_digests(spark, tmp_path_factory):

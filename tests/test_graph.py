@@ -11,8 +11,8 @@ from aws_ipl_data_pipeline_spark.operators.graph import (
     RANK_SCALE,
     covisit_edges,
     pagerank_fixed_int,
-    pagerank_fixed_int_reference,
 )
+from tests.oracles import pagerank_fixed_int_reference
 
 
 def _ranks(df) -> dict[int, int]:
@@ -167,10 +167,6 @@ def test_triangle_counts_match_naive_reference(spark):
 
 
 def test_personalized_pagerank_matches_replica_and_zeroes_unreachable(spark):
-    from aws_ipl_data_pipeline_spark.operators.graph import (
-        pagerank_fixed_int_reference,
-    )
-
     nodes, edges = _random_graph(seed=23, n_nodes=14, n_edges=30)
     # isolate node 13 completely: unreachable from any seed -> exactly 0
     edges = [(u, v, w) for u, v, w in edges if 13 not in (u, v)]
@@ -192,10 +188,6 @@ def test_personalized_pagerank_matches_replica_and_zeroes_unreachable(spark):
 
 
 def test_personalized_pagerank_empty_and_duplicate_seeds(spark):
-    from aws_ipl_data_pipeline_spark.operators.graph import (
-        pagerank_fixed_int_reference,
-    )
-
     nodes, edges = _random_graph(seed=29, n_nodes=8, n_edges=16)
     nodes_df = spark.createDataFrame([Row(v=v) for v in nodes])
     edges_df = spark.createDataFrame(

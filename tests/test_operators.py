@@ -13,10 +13,7 @@ from aws_ipl_data_pipeline_spark.operators.dedup import (
     minhash_lsh_pairs,
     shingle_jaccard_pairs,
 )
-from aws_ipl_data_pipeline_spark.operators.multimodal import (
-    extract_features,
-    frame_sample,
-)
+from aws_ipl_data_pipeline_spark.operators.multimodal import extract_features
 from aws_ipl_data_pipeline_spark.operators.similarity import (
     brute_force_topk,
     lsh_bucketed_topk,
@@ -95,75 +92,6 @@ def test_minhash_recall_equals_exact(spark):
     assert lsh == exact  # precision exact by construction; recall on this corpus
 
 
-def test_jaccard_auto_routing_boundary(spark):
-    """jaccard_pairs_auto (VERDICT r9 #4): at or below the crossover
-    the exact inverted-index join runs with NO warning; above it the
-    call warns and routes to minhash_lsh_pairs — on this corpus the
-    two agree exactly (test_minhash_recall_equals_exact), so routing
-    must not change the answer. corpus_docs skips the count and
-    drives the routing alone (a 1e9 claim routes a 500-doc frame)."""
-    import warnings
-
-    from aws_ipl_data_pipeline_spark.operators.dedup import (
-        JACCARD_LSH_CROSSOVER_DOCS,
-        jaccard_pairs_auto,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    n = docs.count()
-    assert n <= JACCARD_LSH_CROSSOVER_DOCS  # fixture is below the boundary
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in shingle_jaccard_pairs(docs, threshold=0.8).collect()
-    }
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # below boundary must NOT warn
-        below = {
-            (r["id_a"], r["id_b"])
-            for r in jaccard_pairs_auto(docs, threshold=0.8).collect()
-        }
-    assert below == exact
-
-    # exact boundary value stays on the exact join (<=, not <)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        at = jaccard_pairs_auto(
-            docs, threshold=0.8, corpus_docs=n, crossover_docs=n
-        )
-        assert {(r["id_a"], r["id_b"]) for r in at.collect()} == exact
-
-    # one past the boundary warns and routes to LSH
-    with pytest.warns(UserWarning, match="routing to minhash_lsh_pairs"):
-        routed = jaccard_pairs_auto(
-            docs, threshold=0.8, corpus_docs=n + 1, crossover_docs=n
-        )
-    assert {(r["id_a"], r["id_b"]) for r in routed.collect()} == exact
-
-    # a claimed-huge corpus routes without running any count job
-    with pytest.warns(UserWarning):
-        huge = jaccard_pairs_auto(docs, threshold=0.8, corpus_docs=10**9)
-    assert {(r["id_a"], r["id_b"]) for r in huge.collect()} == exact
-
-    # ADVICE r10: a caller-requested exact-path skew guard is not
-    # silently dropped on the routed path — the warning names the
-    # equivalent hot-bucket ceiling and the recall shift, and the LSH
-    # tuning knobs forward (a bucket ceiling of 1 stars every bucket:
-    # pair-level recall may drop, precision stays exact — subset)
-    with pytest.warns(UserWarning, match="max_shingle_df does not apply"):
-        guarded = jaccard_pairs_auto(
-            docs,
-            threshold=0.8,
-            corpus_docs=10**9,
-            max_shingle_df=50,
-            max_bucket_size=1,
-        )
-    got = {(r["id_a"], r["id_b"]) for r in guarded.collect()}
-    assert got and got <= exact
-    with pytest.warns(UserWarning, match="Recall shifts from exact"):
-        jaccard_pairs_auto(docs, threshold=0.8, corpus_docs=10**9).collect()
-
-
 def test_minhash_hot_bucket_star_fallback(spark):
     """Degenerate corpus (1k boilerplate-identical docs): every band
     bucket blows past the ceiling, so candidates come from the O(b)
@@ -182,14 +110,7 @@ def test_minhash_hot_bucket_star_fallback(spark):
     assert got == {(0, i) for i in range(1, 1000)}
     assert all(r["jaccard"] == 1.0 for r in pairs)
 
-    from aws_ipl_data_pipeline_spark.operators.dedup import (
-        lsh_hot_buckets,
-        near_dup_groups,
-    )
-
-    # audit surface reports the oversized cells (one per band: 16)
-    hot = lsh_hot_buckets(docs, max_bucket_size=64).collect()
-    assert len(hot) == 16 and all(r["bucket_size"] == 1000 for r in hot)
+    from aws_ipl_data_pipeline_spark.operators.dedup import near_dup_groups
 
     # downstream clustering sees ONE component covering all 1000 dups
     groups = near_dup_groups(
@@ -226,10 +147,7 @@ def test_hot_bucket_ceiling_inert_below_threshold(spark):
     the guarded plan returns bit-identical pairs to the unguarded one
     (this is what keeps the SQL oracles exact); also pins that the
     driver corpus stays far from the ceiling."""
-    from aws_ipl_data_pipeline_spark.operators.dedup import (
-        lsh_hot_buckets,
-        simhash_pairs,
-    )
+    from aws_ipl_data_pipeline_spark.operators.dedup import simhash_pairs
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     guarded = {
@@ -243,8 +161,13 @@ def test_hot_bucket_ceiling_inert_below_threshold(spark):
     sg = {tuple(r) for r in simhash_pairs(docs).collect()}
     su = {tuple(r) for r in simhash_pairs(docs, max_bucket_size=None).collect()}
     assert sg == su
-    # margin check: biggest real bucket is nowhere near the 256 default
-    assert lsh_hot_buckets(docs, max_bucket_size=64).count() == 0
+    # margin check: biggest real bucket is nowhere near the 256 default,
+    # so a ceiling of 64 is inert too
+    at_64 = {
+        tuple(r)
+        for r in minhash_lsh_pairs(docs, threshold=0.8, max_bucket_size=64).collect()
+    }
+    assert at_64 == unguarded
 
 
 def test_lsh_ann_recall(spark):
@@ -279,11 +202,6 @@ def test_multimodal_plumbing(spark):
     feats2 = {r["media_id"]: r.asDict() for r in extract_features(media, dim=4).collect()}
     assert feats[2]["content_sha"] == feats2[2]["content_sha"]
     assert feats[1]["feature"] == feats2[1]["feature"]
-
-    frames = frame_sample(media, every_n_bytes=1024).collect()
-    # only the video row explodes: 6000 bytes / 1024 → 6 frames
-    assert {r["media_id"] for r in frames} == {2}
-    assert len(frames) == 6
 
 
 def test_fuzzy_scorer_cutoffs():
@@ -342,31 +260,6 @@ def test_fuzzy_banded_indel_exact_at_or_above_cutoff():
             assert abs(t - g) < 1e-9, (a, b, ms, t, g)
         else:
             assert g <= t + 1e-9, (a, b, ms, t, g)
-
-
-def test_multimodal_resize_plumbing(spark):
-    from aws_ipl_data_pipeline_spark.operators.multimodal import resize_images
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", "image/png", b"x" * 4096, {"w": "1024", "h": "512"}),
-            (2, "image", "image/png", b"y" * 100, {"w": "100", "h": "50"}),
-            (3, "video", "video/mp4", b"z" * 100, {"w": "1920", "h": "1080"}),
-        ],
-        "media_id long, kind string, mime string, payload binary, meta map<string,string>",
-    )
-    out = {r["media_id"]: r.asDict() for r in resize_images(media, max_side=256).collect()}
-    assert set(out) == {1, 2}  # only images
-    # aspect preserved, longest side capped
-    assert out[1]["meta"]["w"] == "256" and out[1]["meta"]["h"] == "128"
-    assert len(out[1]["payload"]) < 4096  # payload actually shrank
-    # under-threshold image untouched dimensionally
-    assert out[2]["meta"]["w"] == "100" and len(out[2]["payload"]) == 100
-    # real-codec path is gated, not silently faked
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        resize_images(media, use_real_codec=True).collect()
 
 
 def test_leakage_safe_split_invariants(spark):
@@ -562,10 +455,10 @@ def test_blocked_cosine_equals_exact(spark):
     the single-cartesian baseline, at several block counts (including
     n_blocks > distinct hash values, leaving some block pairs empty)."""
     from aws_ipl_data_pipeline_spark.operators.dedup import (
-        embedding_cosine_pairs,
         embedding_cosine_pairs_blocked,
     )
     from aws_ipl_data_pipeline_spark.queries import t
+    from tests.oracles import embedding_cosine_pairs
 
     emb = t(spark, "/root/testdata/sf0.001", "embeddings").limit(200)
     want = sorted(map(tuple, embedding_cosine_pairs(emb, threshold=0.4).collect()))
@@ -1129,33 +1022,6 @@ def test_segment_dedup_degenerate_boilerplate_corpus(spark):
     assert kept["n"] == 1000          # every doc surfaces
     assert kept["k"] == 2             # only doc 0's two segments survive
     assert elapsed < 30               # linear pass, not a pair blowup
-
-
-def test_observed_metrics_ride_the_action(spark, tmp_path_factory):
-    """Observation metrics come back from the SAME job that wrote the
-    output — pipeline telemetry with zero extra scans."""
-    from pyspark.sql import functions as F
-
-    from aws_ipl_data_pipeline_spark.operators.quality import (
-        with_observed_metrics,
-    )
-
-    out = str(tmp_path_factory.mktemp("obs")) + "/t"
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    observed, obs = with_observed_metrics(
-        docs.where(F.col("n_chars") > 50),
-        "ingest",
-        {
-            "rows": F.count(F.lit(1)),
-            "null_text": F.sum(F.col("text").isNull().cast("long")),
-            "avg_chars": F.avg("n_chars"),
-        },
-    )
-    observed.write.mode("overwrite").parquet(out)
-    got = obs.get
-    assert got["rows"] == spark.read.parquet(out).count()
-    assert got["null_text"] == 0
-    assert got["avg_chars"] > 50
 
 
 def test_stat_surface_freqitems_sampleby_crosstab(spark):

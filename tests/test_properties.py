@@ -311,9 +311,9 @@ def test_blocked_cosine_matches_exact_random(vecs, n_blocks):
     import math
 
     from aws_ipl_data_pipeline_spark.operators.dedup import (
-        embedding_cosine_pairs,
         embedding_cosine_pairs_blocked,
     )
+    from tests.oracles import embedding_cosine_pairs
 
     vecs = [(i, v) for i, v in vecs if math.sqrt(sum(x * x for x in v)) > 1e-6]
     if len(vecs) < 2:
@@ -756,10 +756,8 @@ def test_pagerank_distributed_equals_reference(graph):
     including dangling nodes, isolated nodes, and empty edge sets."""
     from pyspark.sql import Row
 
-    from aws_ipl_data_pipeline_spark.operators.graph import (
-        pagerank_fixed_int,
-        pagerank_fixed_int_reference,
-    )
+    from aws_ipl_data_pipeline_spark.operators.graph import pagerank_fixed_int
+    from tests.oracles import pagerank_fixed_int_reference
 
     nodes, edges = graph
     spark = _get_spark()

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import functions as F
 
 from aws_ipl_data_pipeline_spark.queries import t
@@ -13,11 +11,7 @@ from aws_ipl_data_pipeline_spark.operators.similarity import (
     ivf_topk,
     select_centroids,
 )
-from aws_ipl_data_pipeline_spark.operators.skew import (
-    salted_aggregate,
-    salted_broadcast_left,
-    with_salt,
-)
+from aws_ipl_data_pipeline_spark.operators.skew import salted_aggregate, with_salt
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,20 +43,6 @@ def test_salt_fans_out_hot_key(spark):
         .head()[0]
     )
     assert n_salts == 8  # every key spreads over all buckets
-
-
-def test_salted_broadcast_left_matches_plain_join(spark):
-    e = t(spark, SF, "events").select("event_id", "user_id")
-    dim = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(0, 200)], "user_id long, uname string"
-    )
-    plain = e.join(dim, "user_id").count()
-    salted = salted_broadcast_left(e, dim, on="user_id", salt_buckets=4).count()
-    assert salted == plain
-    # left-outer variant keeps unmatched left rows exactly once
-    plain_l = e.join(dim, "user_id", "left").count()
-    salted_l = salted_broadcast_left(e, dim, on="user_id", salt_buckets=4, how="left").count()
-    assert salted_l == plain_l == e.count()
 
 
 def test_ivf_cells_partition_all_rows(spark):
@@ -160,38 +140,6 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_ivf_index_partition_pruning(spark, tmp_path):
-    """The materialized IVF index must prune at the PARTITION level:
-    the probe scan's plan carries a cell partition filter (zero rows
-    read from non-probed cells — directory skip, not runtime filter),
-    and probing every cell reproduces the exact brute-force ranking."""
-    from aws_ipl_data_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        probe_ivf_index,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    path = str(tmp_path / "ivf_index")
-    centroids = write_ivf_index(emb, path, n_cells=8)
-
-    q = [float(x) for x in emb.first()["embedding"]]
-    probed = probe_ivf_index(spark, path, centroids, q, k=5, n_probe=2)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = probed._jdf.queryExecution().explainString(mode)
-    assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters", 1)[1][:120]
-    probed.collect()  # runs
-
-    # full probe == exact scan (modulo the known n_probe recall knob)
-    full = probe_ivf_index(spark, path, centroids, q, k=5, n_probe=8)
-    exact = brute_force_topk(emb, q, k=5)
-    assert [r["vec_id"] for r in full.collect()] == [
-        r["vec_id"] for r in exact.collect()
-    ]
 
 
 def test_recall_eval_full_probe_is_perfect(spark):
@@ -299,77 +247,6 @@ def test_filtered_ivf_widening_boundaries(spark):
     assert all(labs[i] == qlabel for i in ids) and 0 not in ids
 
 
-def test_filtered_probe_ivf_index_stats_path(spark, tmp_path):
-    """VERDICT r10 item 2 — the materialized filtered probe:
-
-    1. write_ivf_index(stats_cols=['label']) persists per-(cell,
-       label) counts as index metadata sized n_cells × labels, never
-       corpus-sized;
-    2. filtered_probe_ivf_index returns EXACTLY the in-memory
-       filtered_ivf_topk result on the same data/predicate (shared
-       probe order + widening cut + scoring);
-    3. the scoring scan is PARTITION-PRUNED: its plan carries a cell
-       partition filter whose IN-list is widened past n_probe but
-       strictly smaller than n_cells (no full-corpus scan), with the
-       label predicate pushed into the pruned scan — and the returned
-       plan never touches the stats table (stats feed the driver-side
-       cut only)."""
-    from aws_ipl_data_pipeline_spark.operators.similarity import (
-        filtered_ivf_topk,
-        filtered_probe_ivf_index,
-        select_centroids,
-        add_ivf_cell,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    path = str(tmp_path / "ivf_index")
-    centroids = write_ivf_index(emb, path, n_cells=16, stats_cols=["label"])
-
-    stats = spark.read.parquet(path + "__stats")
-    n_labels = emb.select("label").distinct().count()
-    assert stats.count() <= 16 * n_labels
-    assert stats.columns == ["cell", "label", "cnt"]
-    # stats describe the written table exactly
-    assert stats.agg(F.sum("cnt")).head()[0] == emb.count()
-
-    q = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
-    qlabel = emb.where(F.col("vec_id") == 0).head()["label"]
-    # stats-expressible predicate ONLY (the function's contract): the
-    # widening counts come from (cell, label) metadata, so id-level
-    # exclusions belong post-scoring, not in the probe predicate
-    pred = F.col("label") == F.lit(qlabel)
-
-    probed = filtered_probe_ivf_index(
-        spark, path, centroids, q, pred, k=10, n_probe=4, min_candidates=30
-    )
-    mem = filtered_ivf_topk(
-        add_ivf_cell(emb, centroids),
-        centroids,
-        q,
-        pred,
-        k=10,
-        n_probe=4,
-        min_candidates=30,
-    )
-    assert [tuple(r) for r in probed.collect()] == [
-        tuple(r) for r in mem.collect()
-    ]
-
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = probed._jdf.queryExecution().explainString(mode)
-    assert "__stats" not in plan  # stats are driver-side cut input only
-    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert pf and "cell" in pf.group(1), plan
-    inlist = re.search(r"cell#\d+ IN \(([\d,]+)\)", pf.group(1))
-    assert inlist, pf.group(1)
-    probes = inlist.group(1).split(",")
-    assert 4 < len(probes) < 16, probes  # widened, still pruned
-    assert re.search(r"PushedFilters: \[[^\]]*EqualTo\(label", plan), plan
-
-
 def test_probe_recall_curve_monotone_and_closes(spark):
     """ann_probe_recall_curve invariants beyond the oracle hash: the
     operating curve is NON-DECREASING in the probe budget (more cells
@@ -422,57 +299,6 @@ def test_hard_negative_mining_is_cross_label(spark):
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in by_q.values())
 
 
-def test_lsh_index_partition_pruning(spark, tmp_path):
-    """write_lsh_index/probe_lsh_index (r11 — the materialized-LSH
-    twin of the IVF index): the probe scan's plan carries a bucket
-    partition filter over the ~(1+bits) probed buckets, the result
-    equals the in-memory lsh_bucketed_topk with identical params
-    (shared lsh_probe_buckets rule), and a duplicated append (the
-    at-least-once retry shape) is absorbed by the id dedupe."""
-    from aws_ipl_data_pipeline_spark.operators.similarity import (
-        add_lsh_bucket,
-        lsh_bucketed_topk,
-        probe_lsh_index,
-        write_lsh_index,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    path = str(tmp_path / "lsh_index")
-    planes = write_lsh_index(emb, path, bits=8)
-    q = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
-
-    probed = probe_lsh_index(spark, path, planes, q, k=5, exclude_id=0)
-    # lsh_bucketed_topk has no exclude_id param; pre-filter instead
-    mem_rows = [
-        tuple(r)
-        for r in lsh_bucketed_topk(
-            emb.where(F.col("vec_id") != 0), q, k=5, bits=8
-        ).collect()
-    ]
-    assert [tuple(r) for r in probed.collect()] == mem_rows
-
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = probed._jdf.queryExecution().explainString(mode)
-    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert pf and "bucket" in pf.group(1), plan
-
-    # duplicated append (at-least-once retry) absorbed by the id dedupe
-    from aws_ipl_data_pipeline_spark.operators.similarity import (
-        random_hyperplanes,
-    )
-
-    spark.read.parquet(path).write.partitionBy("bucket").mode(
-        "append"
-    ).parquet(path + "2")
-    add_lsh_bucket(emb, random_hyperplanes(len(q), 8)).write.partitionBy(
-        "bucket"
-    ).mode("append").parquet(path + "2")
-    dup = probe_lsh_index(spark, path + "2", planes, q, k=5, exclude_id=0)
-    assert [tuple(r) for r in dup.collect()] == mem_rows
-
-
 def test_lsh_radius_curve_monotone(spark):
     """ann_lsh_radius_curve: candidate count and recall are both
     NON-DECREASING in the probe radius (each radius admits a superset
@@ -488,107 +314,3 @@ def test_lsh_radius_curve_monotone(spark):
     recalls = [r["recall_1e4"] for r in rows]
     assert ncs == sorted(ncs) and ncs[-1] > ncs[0]
     assert recalls == sorted(recalls)
-
-
-def test_lsh_index_compaction_lifecycle(spark, tmp_path):
-    """compact_lsh_index (VERDICT r11 item 5 — the LSH side of the
-    index lifecycle): after duplicated at-least-once appends the
-    compaction (a) removes the physical duplicate rows at rest, (b)
-    reduces the file count, (c) preserves the bucket= directory layout
-    so probe-time partition pruning is untouched, and (d) leaves probe
-    results bit-identical."""
-    from aws_ipl_data_pipeline_spark.operators.similarity import (
-        compact_lsh_index,
-        probe_lsh_index,
-        write_lsh_index,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    path = str(tmp_path / "lsh_index")
-    planes = write_lsh_index(emb.repartition(8), path, bits=8)
-    # at-least-once retry shape: the same celled rows appended again,
-    # in many small files
-    spark.read.parquet(path).repartition(16).write.partitionBy(
-        "bucket"
-    ).mode("append").parquet(path)
-
-    qs = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.where(F.col("vec_id") < 3).orderBy("vec_id").collect()
-    ]
-    before = [
-        [tuple(r) for r in probe_lsh_index(spark, path, planes, q, k=5).collect()]
-        for q in qs
-    ]
-    raw = spark.read.parquet(path)
-    n_rows_before = raw.count()
-    assert n_rows_before == 2 * emb.count()  # duplicates really on disk
-
-    def _files():
-        return len(
-            [f for f in spark.read.parquet(path).inputFiles() if "bucket=" in f]
-        )
-
-    files_before = _files()
-    compact_lsh_index(spark, path)
-    files_after = _files()
-    after_tbl = spark.read.parquet(path)
-
-    assert after_tbl.count() == emb.count()  # duplicates gone at rest
-    assert files_after < files_before
-    assert set(after_tbl.columns) == set(raw.columns)  # layout preserved
-    after = [
-        [tuple(r) for r in probe_lsh_index(spark, path, planes, q, k=5).collect()]
-        for q in qs
-    ]
-    assert after == before  # probe equality across the lifecycle step
-
-
-def test_ivf_index_compaction_packaged(spark, tmp_path):
-    """compact_ivf_index packages the lifecycle step the streaming test
-    exercised as a stand-in: dedupe at rest by (cell, id), re-pack the
-    cell= layout, refresh the stats table to exact counts."""
-    from aws_ipl_data_pipeline_spark.operators.similarity import (
-        IVF_STATS_SUFFIX,
-        compact_ivf_index,
-        probe_ivf_index,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").withColumn(
-        "label", (F.col("vec_id") % 3).cast("int")
-    )
-    path = str(tmp_path / "ivf_index")
-    cents = write_ivf_index(emb, path, n_cells=4, stats_cols=["label"])
-    spark.read.parquet(path).repartition(16).write.partitionBy(
-        "cell"
-    ).mode("append").parquet(path)
-    # stale partials: duplicate stats rows too (the retry overcount)
-    stats_path = path + IVF_STATS_SUFFIX
-    spark.read.parquet(stats_path).write.mode("append").parquet(stats_path)
-
-    q = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
-    before = [
-        tuple(r)
-        for r in probe_ivf_index(spark, path, cents, q, k=5, exclude_id=0).collect()
-    ]
-    compact_ivf_index(spark, path, stats_cols=["label"])
-    after_tbl = spark.read.parquet(path)
-    assert after_tbl.count() == emb.count()
-    after = [
-        tuple(r)
-        for r in probe_ivf_index(spark, path, cents, q, k=5, exclude_id=0).collect()
-    ]
-    assert after == before
-    # stats exact again: sums equal the true per-(cell,label) counts
-    truth = {
-        (r["cell"], r["label"]): r["n"]
-        for r in after_tbl.groupBy("cell", "label")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    stats = {
-        (r["cell"], r["label"]): r["cnt"]
-        for r in spark.read.parquet(stats_path).collect()
-    }
-    assert stats == truth

@@ -1,5 +1,5 @@
 """Sources (SURVEY §2.1): schema-enforced readers, JSONL/CSV round
-trips, partition-predicate overwrite semantics, file provenance."""
+trips, partition-predicate overwrite semantics."""
 
 from __future__ import annotations
 
@@ -8,22 +8,18 @@ import os
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from aws_ipl_data_pipeline_spark.schemas import MATCH_META, PLAYERS, RAW_DELIVERIES
 from aws_ipl_data_pipeline_spark.sources import (
     read_csv,
     read_json_object,
     read_jsonl,
-    write_jsonl,
     write_partitioned,
 )
-from aws_ipl_data_pipeline_spark.sources.readers import with_source_file
 from tests.fixtures_ipl import META_ROWS, PLAYERS_ROWS, raw_deliveries
 
 
 def test_csv_round_trip_with_schema(spark, tmp_path):
-    """S1/S8: header CSV writes and schema-enforced reads are lossless."""
+    """S1: header CSV writes and schema-enforced reads are lossless."""
     raw = raw_deliveries(spark)
     path = str(tmp_path / "raw_csv")
     raw.write.option("header", True).mode("overwrite").csv(path)
@@ -33,13 +29,13 @@ def test_csv_round_trip_with_schema(spark, tmp_path):
 
 
 def test_jsonl_round_trip(spark, tmp_path):
-    """S2/S9: bronze-style JSONL (one record per line)."""
+    """S2: bronze-style JSONL (one record per line)."""
     players = spark.createDataFrame(
         [(n, t, "India", "Batter", False, None, None, None) for n, t in PLAYERS_ROWS],
         schema=PLAYERS,
     )
     path = str(tmp_path / "players_jsonl")
-    write_jsonl(players, path)
+    players.write.mode("overwrite").json(path)
     back = read_jsonl(spark, path, PLAYERS)
     assert back.count() == len(PLAYERS_ROWS)
     assert {r["Name"] for r in back.collect()} == {n for n, _ in PLAYERS_ROWS}
@@ -84,18 +80,6 @@ def test_partition_predicate_overwrite(spark, tmp_path):
     assert got[("M1", 1)] == 99 and got[("M2", 1)] == 30
 
 
-def test_input_file_provenance(spark, tmp_path):
-    """S10/P6: match id from the source path (reference derives it from
-    the S3 key, ex_match_rb.py:170)."""
-    raw = raw_deliveries(spark).where(F.col("match") == "01_AAvsBB")
-    path = str(tmp_path / "files" / "01_AAvsBB")
-    raw.coalesce(1).write.option("header", True).mode("overwrite").csv(path)
-    back = with_source_file(read_csv(spark, path, RAW_DELIVERIES))
-    match_from_path = F.element_at(F.split(F.col("source_file"), "/"), -2)
-    [r] = back.select(match_from_path.alias("m")).distinct().collect()
-    assert r["m"] == "01_AAvsBB"
-
-
 def test_upsert_by_key_newest_wins(spark, tmp_path_factory):
     from aws_ipl_data_pipeline_spark.sources.writers import upsert_by_key
 
@@ -136,30 +120,6 @@ def test_upsert_dedupes_duplicate_source_keys(spark, tmp_path_factory):
     got = {(r["k"]): (r["name"], r["v"]) for r in spark.read.parquet(path).collect()}
     # k=2: greatest (name, v) tuple is ("y", 2); k=1: incoming ("z", None) wins
     assert got == {2: ("y", 2), 1: ("z", None)}
-
-
-def test_validate_frame_reports_precise_diff(spark):
-    from pyspark.sql import types as T
-
-    from aws_ipl_data_pipeline_spark.schemas import validate_frame
-
-    expected = T.StructType(
-        [
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.StringType()),
-        ]
-    )
-    ok = spark.createDataFrame([(1, "x")], "a long, b string")
-    validate_frame(ok, expected)  # no raise
-
-    bad = spark.createDataFrame([(1, 2, 3.0)], "a long, b long, c double")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError) as e:
-        validate_frame(bad, expected, where="bronze")
-    msg = str(e.value)
-    assert "bronze" in msg and "extra=['c']" in msg
-    assert "b: expected string, got bigint" in msg
 
 
 def test_compaction_preserves_rows_and_shrinks_files(spark, tmp_path_factory):
@@ -281,33 +241,9 @@ def test_zorder_write_narrows_stats_on_both_dims(spark, tmp_path_factory):
     assert sorted(spark.read.parquet(f"{base}/z").columns) == ["payload", "x", "y"]
 
 
-def test_orc_round_trip_and_pushdown(spark, tmp_path):
-    """ORC sink/scan round-trips losslessly and pushes filters and
-    column pruning to the stripe reader like parquet does."""
-    from aws_ipl_data_pipeline_spark.sources.readers import read_orc
-    from aws_ipl_data_pipeline_spark.sources.writers import write_orc
-
-    src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    path = str(tmp_path / "orders_orc")
-    write_orc(src, path)
-    back = read_orc(spark, path)
-    assert back.schema == src.schema
-    assert back.count() == src.count()
-    assert (
-        back.agg(F.sum("o_totalprice")).first()[0]
-        == src.agg(F.sum("o_totalprice")).first()[0]
-    )
-    filtered = back.where(F.col("o_orderkey") == 1).select("o_orderkey")
-    explained = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "EqualTo(o_orderkey,1)" in explained  # pushed to the scan
-    assert "ReadSchema: struct<o_orderkey:bigint>" in explained  # pruned
-
-
 def test_orc_partitioned_dynamic_overwrite(spark, tmp_path):
     """write_partitioned(fmt='orc') keeps the replaceWhere-equivalent
     semantics: rewriting one partition leaves the others intact."""
-    from aws_ipl_data_pipeline_spark.sources.readers import read_orc
-
     df = spark.createDataFrame(
         [(1, "m1", "a"), (2, "m1", "b"), (3, "m2", "c")],
         "id INT, match STRING, v STRING",
@@ -317,7 +253,7 @@ def test_orc_partitioned_dynamic_overwrite(spark, tmp_path):
     upd = spark.createDataFrame([(9, "m2", "z")], "id INT, match STRING, v STRING")
     write_partitioned(upd, path, partition_by=["match"], fmt="orc", mode="overwrite")
     got = sorted(
-        map(tuple, read_orc(spark, path).select("id", "match", "v").collect())
+        map(tuple, spark.read.orc(path).select("id", "match", "v").collect())
     )
     assert got == [(1, "m1", "a"), (2, "m1", "b"), (9, "m2", "z")]
 
@@ -432,148 +368,6 @@ def test_writer_stays_live_after_pre_flip_crash(spark, tmp_path):
     assert write_snapshot(spark.range(7).withColumnRenamed("id", "k"), path) == 3
     assert current_version(spark, path) == 3
     assert read_snapshot(spark, path).count() == 7
-
-
-def test_write_clustered_produces_skippable_files(spark, tmp_path):
-    """write_clustered must yield files with narrow, (near-)disjoint
-    cluster-key ranges — verified from the parquet footers directly —
-    and reads with a key predicate must stay correct."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from aws_ipl_data_pipeline_spark.sources.writers import write_clustered
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    out = str(tmp_path / "li_clustered")
-    write_clustered(li, out, cluster_by=["l_shipdate"], n_files=8)
-
-    files = sorted(glob.glob(f"{out}/*.parquet"))
-    assert len(files) >= 4  # range partitioner actually spread the data
-    spans = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        names = [md.schema.column(i).name for i in range(len(md.schema))]
-        col_idx = names.index("l_shipdate")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx).statistics
-            assert st is not None and st.has_min_max
-            mins.append(st.min)
-            maxs.append(st.max)
-        spans.append((min(mins), max(maxs)))
-
-    # files are (near-)disjoint: sorted by min, each file's range must
-    # not reach past the next file's start (range partitioning puts a
-    # key in exactly one file, so overlap can only be the boundary key)
-    spans.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2, f"file ranges overlap: {hi1} > {lo2}"
-
-    # each file covers a small fraction of the global span: the whole
-    # point of clustering (8 files -> each ~1/8th; allow 3x slack)
-    glo = min(s[0] for s in spans)
-    ghi = max(s[1] for s in spans)
-    total = (ghi - glo).total_seconds()
-    for lo, hi in spans:
-        assert (hi - lo).total_seconds() <= total * 3 / len(files)
-
-    # read-back correctness under a pushed range predicate
-    from pyspark.sql import functions as F
-
-    got = (
-        spark.read.parquet(out)
-        .where(F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp_ntz"))
-        .count()
-    )
-    want = li.where(
-        F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp_ntz")
-    ).count()
-    assert got == want
-
-
-def test_read_jsonl_robust_quarantines_corrupt_lines(spark, tmp_path):
-    """Malformed JSONL lines must surface in the corrupt column with
-    the raw text preserved — never dropped, never fatal."""
-    from pyspark.sql import types as T
-
-    from aws_ipl_data_pipeline_spark.sources.readers import read_jsonl_robust
-
-    p = tmp_path / "in.jsonl"
-    p.write_text(
-        '{"id": 1, "v": "ok"}\n'
-        "{this is not json}\n"
-        '{"id": 3, "v": "also ok"}\n'
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    df = read_jsonl_robust(spark, str(p), schema).cache()
-    good = df.where(df["_corrupt_record"].isNull())
-    bad = df.where(df["_corrupt_record"].isNotNull())
-    assert sorted(r["id"] for r in good.collect()) == [1, 3]
-    rejects = bad.collect()
-    assert len(rejects) == 1
-    assert rejects[0]["_corrupt_record"] == "{this is not json}"
-    assert rejects[0]["id"] is None
-    df.unpersist()
-
-
-def test_read_jsonl_robust_does_not_mutate_caller_schema(spark, tmp_path):
-    """StructType.add mutates in place; the reader must build a copy so
-    a shared schema constant survives repeated calls unchanged (the
-    schemas.py contract pattern — a second call on a mutated schema
-    would append a duplicate corrupt column and break the read)."""
-    from pyspark.sql import types as T
-
-    from aws_ipl_data_pipeline_spark.sources.readers import read_jsonl_robust
-
-    p = tmp_path / "in.jsonl"
-    p.write_text('{"id": 1, "v": "ok"}\nnot json\n')
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    before = schema.jsonValue()
-    for _ in range(2):  # same shared schema object, called twice
-        df = read_jsonl_robust(spark, str(p), schema).cache()
-        assert df.columns == ["id", "v", "_corrupt_record"]
-        assert df.where(df["_corrupt_record"].isNotNull()).count() == 1
-        df.unpersist()
-    assert schema.jsonValue() == before
-
-
-def test_read_parquet_evolving_merges_schema_generations(spark, tmp_path):
-    """Files written before a column existed must read as NULL for it;
-    the merged schema is the union across file footers."""
-    from aws_ipl_data_pipeline_spark.sources.readers import read_parquet_evolving
-
-    out = str(tmp_path / "tbl")
-    spark.createDataFrame([(1, "a")], "id long, v string").write.parquet(out)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, v string, score double"
-    ).write.mode("append").parquet(out)
-
-    df = read_parquet_evolving(spark, out)
-    assert set(df.columns) == {"id", "v", "score"}
-    rows = {r["id"]: r for r in df.collect()}
-    assert rows[1]["score"] is None
-    assert rows[2]["score"] == 9.5
-
-
-def test_write_observed_collects_metrics_on_the_write_pass(spark, tmp_path):
-    """write_observed returns row and null counts gathered during the
-    write itself (Observation API) and the written data is intact."""
-    from aws_ipl_data_pipeline_spark.sources.writers import write_observed
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "c"), (4, None)],
-        "id long, v string",
-    )
-    out = str(tmp_path / "obs")
-    m = write_observed(df, out, count_nulls_in=["v"])
-    assert m["n_rows"] == 4
-    assert m["n_null_v"] == 2
-    assert spark.read.parquet(out).count() == 4
 
 
 def test_versioned_snapshots_compose_with_corpus_diff(spark, tmp_path):

@@ -1,32 +1,15 @@
-"""Stream-static enrichment and watermarked stream-stream joins:
-each must produce the identical result driven as file micro-batches or
-as one batch frame."""
+"""The batch sessionization and Spark's native streaming
+session_window must agree when the same events arrive as file
+micro-batches."""
 
 from __future__ import annotations
 
 import json
 import os
-from datetime import datetime
 
 import pytest
 
-from aws_ipl_data_pipeline_spark.streaming import (
-    attribute_purchases,
-    enrich_stream_with_dim,
-)
-
 EV_SCHEMA = "event_id long, ts timestamp, user_id long, value double"
-
-EV_ROWS = [
-    [
-        (1, "2024-03-01 10:05:00", 100, 1.0),
-        (2, "2024-03-01 10:10:00", 200, 2.0),
-    ],
-    [
-        (3, "2024-03-01 10:20:00", 100, 4.0),
-        (4, "2024-03-01 10:25:00", 999, 8.0),  # no dim row: must survive
-    ],
-]
 
 
 def _write_jsonl(dirname: str, i: int, rows, cols) -> None:
@@ -34,192 +17,6 @@ def _write_jsonl(dirname: str, i: int, rows, cols) -> None:
     with open(f"{dirname}/f{i}.json", "w") as f:
         for row in rows:
             f.write(json.dumps(dict(zip(cols, row))) + "\n")
-
-
-def _canon(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-@pytest.mark.slow
-def test_stream_static_enrichment_equals_batch(spark, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("enrich"))
-    src = f"{base}/src"
-    cols = ["event_id", "ts", "user_id", "value"]
-    for i, rows in enumerate(EV_ROWS):
-        _write_jsonl(src, i, rows, cols)
-
-    dim = spark.createDataFrame(
-        [(100, "gold"), (200, "silver"), (300, "bronze")],
-        "user_id long, tier string",
-    )
-
-    stream = (
-        spark.readStream.schema(EV_SCHEMA).option("maxFilesPerTrigger", 1).json(src)
-    )
-    q = (
-        enrich_stream_with_dim(stream, dim, on="user_id")
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    batch_df = spark.createDataFrame(
-        [
-            (e, datetime.fromisoformat(ts), u, v)
-            for rows in EV_ROWS
-            for e, ts, u, v in rows
-        ],
-        EV_SCHEMA,
-    )
-    batch = enrich_stream_with_dim(batch_df, dim, on="user_id")
-    streamed = spark.table("enriched").select(*batch.columns)
-    assert _canon(streamed) == _canon(batch)
-    # left join: the dim-less user survives with a NULL tier
-    orphan = [r for r in streamed.collect() if r["user_id"] == 999]
-    assert len(orphan) == 1 and orphan[0]["tier"] is None
-
-
-VIEW_SCHEMA = "user_id long, view_id long, view_ts timestamp"
-PUR_SCHEMA = "user_id long, purchase_id long, purchase_ts timestamp, amount double"
-
-VIEWS = [
-    [
-        (1, 10, "2024-03-01 10:00:00"),
-        (2, 11, "2024-03-01 10:05:00"),
-    ],
-    [
-        (1, 12, "2024-03-01 11:30:00"),
-    ],
-]
-PURCHASES = [
-    [
-        (1, 900, "2024-03-01 10:30:00", 9.99),  # within 1h of view 10
-    ],
-    [
-        (2, 901, "2024-03-01 11:45:00", 5.00),  # >1h after view 11: no match
-        (1, 902, "2024-03-01 11:50:00", 7.50),  # within 1h of view 12 only
-    ],
-]
-
-
-@pytest.mark.slow
-def test_stream_stream_attribution_equals_batch(spark, tmp_path_factory):
-    base = str(tmp_path_factory.mktemp("attr"))
-    vsrc, psrc = f"{base}/views", f"{base}/purchases"
-    for i, rows in enumerate(VIEWS):
-        _write_jsonl(vsrc, i, rows, ["user_id", "view_id", "view_ts"])
-    for i, rows in enumerate(PURCHASES):
-        _write_jsonl(
-            psrc, i, rows, ["user_id", "purchase_id", "purchase_ts", "amount"]
-        )
-
-    vstream = (
-        spark.readStream.schema(VIEW_SCHEMA).option("maxFilesPerTrigger", 1).json(vsrc)
-    )
-    pstream = (
-        spark.readStream.schema(PUR_SCHEMA).option("maxFilesPerTrigger", 1).json(psrc)
-    )
-    q = (
-        attribute_purchases(vstream, pstream, horizon="1 hour")
-        .writeStream.format("memory")
-        .queryName("attributed")
-        .outputMode("append")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    vbatch = spark.createDataFrame(
-        [
-            (u, vid, datetime.fromisoformat(ts))
-            for rows in VIEWS
-            for u, vid, ts in rows
-        ],
-        VIEW_SCHEMA,
-    )
-    pbatch = spark.createDataFrame(
-        [
-            (u, pid, datetime.fromisoformat(ts), a)
-            for rows in PURCHASES
-            for u, pid, ts, a in rows
-        ],
-        PUR_SCHEMA,
-    )
-    batch = attribute_purchases(vbatch, pbatch, horizon="1 hour")
-    streamed = spark.table("attributed").select(*batch.columns)
-    assert _canon(streamed) == _canon(batch)
-    # exactly the two in-horizon attributions; the 11→901 pair (105 min
-    # apart) must NOT match
-    pairs = sorted((r["view_id"], r["purchase_id"]) for r in streamed.collect())
-    assert pairs == [(10, 900), (12, 902)]
-
-
-@pytest.mark.slow
-def test_enrichment_chains_into_windowed_agg(spark, tmp_path_factory):
-    """Operators compose inside ONE streaming query: stream-static
-    enrichment feeding a watermarked tumbling-window aggregation keyed
-    by the ENRICHED column — proving the broadcast join and the
-    stateful window run in the same micro-batch plan, equal to batch."""
-    from pyspark.sql import functions as F
-
-    from aws_ipl_data_pipeline_spark.streaming import (
-        enrich_stream_with_dim,
-        windowed_event_counts,
-    )
-
-    base = str(tmp_path_factory.mktemp("chain"))
-    src = f"{base}/src"
-    cols = ["event_id", "ts", "user_id", "value"]
-    rows = [
-        [(1, "2024-03-01 10:05:00", 100, 1.0), (2, "2024-03-01 10:20:00", 200, 2.0)],
-        [(3, "2024-03-01 11:10:00", 100, 4.0), (4, "2024-03-01 10:40:00", 200, 8.0)],
-    ]
-    for i, batch in enumerate(rows):
-        _write_jsonl(src, i, batch, cols)
-    dim = spark.createDataFrame(
-        [(100, "gold"), (200, "silver")], "user_id long, tier string"
-    )
-
-    def pipe(df):
-        enriched = enrich_stream_with_dim(df, dim, on="user_id").withColumn(
-            "event_type", F.col("tier")  # window agg keys on the enriched col
-        )
-        return windowed_event_counts(enriched, window="1 hour", watermark="2 hours")
-
-    stream = (
-        spark.readStream.schema(EV_SCHEMA).option("maxFilesPerTrigger", 1).json(src)
-    )
-    q = (
-        pipe(stream)
-        .writeStream.format("memory")
-        .queryName("chained")
-        .outputMode("complete")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    from datetime import datetime
-
-    batch_df = spark.createDataFrame(
-        [
-            (e, datetime.fromisoformat(ts), u, v)
-            for b in rows
-            for e, ts, u, v in b
-        ],
-        EV_SCHEMA,
-    )
-    batch = pipe(batch_df)
-    streamed = spark.table("chained").select(*batch.columns)
-    assert _canon(streamed) == _canon(batch)
-    tiers = {r["event_type"] for r in streamed.collect()}
-    assert tiers == {"gold", "silver"}  # the enriched column drove the agg key
 
 
 @pytest.mark.slow

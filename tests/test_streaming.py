@@ -193,185 +193,6 @@ def test_corpus_ingest_stream_dedupes_across_batches(spark, tmp_path_factory):
 
 
 @pytest.mark.slow
-def test_near_dedup_ingest_rejects_across_and_within_batches(spark, tmp_path_factory):
-    """Streaming near-dup admission: a later-batch paraphrase of an
-    admitted doc is rejected via the SIGNATURE state (admitted text is
-    never rescanned); within a batch the smaller id wins; novel docs
-    admit; reruns with no new files change nothing."""
-    from aws_ipl_data_pipeline_spark.streaming.corpus import run_near_dedup_ingest
-
-    base = str(tmp_path_factory.mktemp("neardedup"))
-    docs_dir = f"{base}/drop"
-    schema = "doc_id long, text string"
-    s1 = "the quick brown fox jumps over the lazy dog near the river bank"
-    s1_para = "the quick brown fox jumps over the lazy cat near the river bank"
-    s2 = "completely different second document about spark query planning today"
-    b1 = spark.createDataFrame(
-        # 3 ~ 1 within-batch → reject 3; 4 is TOO SHORT to shingle
-        # (no signature row) and must still admit — rejection is an
-        # explicit near-dup hit, never an absent-signature accident
-        [(1, s1), (2, s2), (3, s1_para), (4, "tiny doc")],
-        schema,
-    )
-    b1.write.parquet(f"{docs_dir}/f1.parquet")
-    kwargs = dict(
-        docs_dir=f"{docs_dir}/*",
-        out_path=f"{base}/admitted",
-        checkpoint_dir=f"{base}/ckpt",
-        schema=b1.schema,
-        threshold=0.5,
-    )
-    run_near_dedup_ingest(spark, **kwargs).awaitTermination(300)
-    got1 = {r["doc_id"] for r in spark.read.parquet(f"{base}/admitted").collect()}
-    assert got1 == {1, 2, 4}
-    sigs = spark.read.parquet(f"{base}/admitted_sigs")
-    assert {r["doc_id"] for r in sigs.collect()} == {1, 2}  # 4: no shingles
-    assert "text" not in sigs.columns  # state is signatures, not text
-
-    s3 = "a genuinely novel third document discussing window functions and joins"
-    spark.createDataFrame(
-        [(10, s1_para), (11, s3), (12, s3)],  # 10 ~ admitted 1; 12 = copy of 11
-        schema,
-    ).write.parquet(f"{docs_dir}/f2.parquet")
-    run_near_dedup_ingest(spark, **kwargs).awaitTermination(300)
-    got2 = {r["doc_id"] for r in spark.read.parquet(f"{base}/admitted").collect()}
-    assert got2 == {1, 2, 4, 11}
-
-    run_near_dedup_ingest(spark, **kwargs).awaitTermination(300)
-    got3 = {r["doc_id"] for r in spark.read.parquet(f"{base}/admitted").collect()}
-    assert got3 == got2
-    assert {
-        r["doc_id"] for r in spark.read.parquet(f"{base}/admitted_sigs").collect()
-    } == got2 - {4}
-
-
-def test_ivf_index_ingest_stream_equals_batch_build(spark, tmp_path_factory):
-    """Streamed IVF index maintenance: after two micro-batches of new
-    vectors append to the partitioned index (frozen centroids), probing
-    the live index must return exactly what probing a one-shot batch
-    build over the full corpus returns — and a full-cell probe must
-    equal brute force over everything ingested."""
-    from aws_ipl_data_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        probe_ivf_index,
-        select_centroids,
-        write_ivf_index,
-    )
-    from aws_ipl_data_pipeline_spark.streaming.ann import run_ivf_index_ingest
-    from pyspark.sql import functions as F
-
-    base = str(tmp_path_factory.mktemp("ivfstream"))
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    first = emb.where(F.col("vec_id") < 300)
-    late1 = emb.where((F.col("vec_id") >= 300) & (F.col("vec_id") < 400))
-    late2 = emb.where(F.col("vec_id") >= 400)
-
-    # initial build freezes the quantizer on the day-one corpus
-    cents = write_ivf_index(first, f"{base}/index", n_cells=8)
-    assert cents == select_centroids(first, 8)
-
-    drop = f"{base}/drop"
-    late1.write.parquet(f"{drop}/f1.parquet")
-    late2.write.parquet(f"{drop}/f2.parquet")
-    kwargs = dict(
-        emb_dir=f"{drop}/*",
-        index_path=f"{base}/index",
-        checkpoint_dir=f"{base}/ckpt",
-        schema=emb.schema,
-        centroids=cents,
-    )
-    run_ivf_index_ingest(spark, **kwargs).awaitTermination(300)
-    # rerun with no new files: index unchanged (checkpoint exactly-once)
-    run_ivf_index_ingest(spark, **kwargs).awaitTermination(300)
-    assert spark.read.parquet(f"{base}/index").count() == emb.count()
-
-    q = [float(x) for x in emb.where(F.col("vec_id") == 7).head()["embedding"]]
-    live = probe_ivf_index(
-        spark, f"{base}/index", cents, q, k=10, n_probe=4, exclude_id=7
-    ).collect()
-    # batch twin: one-shot assignment of the FULL corpus with the same
-    # frozen centroids (rebuild path) — must probe identically
-    from aws_ipl_data_pipeline_spark.operators.similarity import add_ivf_cell
-
-    add_ivf_cell(emb, cents).write.partitionBy("cell").mode("overwrite").parquet(
-        f"{base}/index_batch"
-    )
-    batch = probe_ivf_index(
-        spark, f"{base}/index_batch", cents, q, k=10, n_probe=4, exclude_id=7
-    ).collect()
-    assert [tuple(r) for r in live] == [tuple(r) for r in batch]
-
-    # full probe degrades to exact: equals brute force over everything
-    full = probe_ivf_index(
-        spark, f"{base}/index", cents, q, k=10, n_probe=8, exclude_id=7
-    ).collect()
-    exact = brute_force_topk(emb, q, k=10, exclude_id=7).collect()
-    assert [tuple(r) for r in full] == [tuple(r) for r in exact]
-
-    # retry simulation: re-ingest the SAME files under a fresh
-    # checkpoint (= the crash-between-append-and-commit case) — the
-    # index now holds duplicate vector rows, and the probe's
-    # dedup-by-id must absorb them (identical results, no vec_id twice)
-    run_ivf_index_ingest(
-        spark, **{**kwargs, "checkpoint_dir": f"{base}/ckpt_retry"}
-    ).awaitTermination(300)
-    assert spark.read.parquet(f"{base}/index").count() > emb.count()
-    retried = probe_ivf_index(
-        spark, f"{base}/index", cents, q, k=10, n_probe=8, exclude_id=7
-    ).collect()
-    assert [tuple(r) for r in retried] == [tuple(r) for r in exact]
-
-
-def test_segment_dedup_stream_equals_batch(spark, tmp_path_factory):
-    """Two files arriving as separate micro-batches must excise exactly
-    the segments the one-shot batch operator would excise over the
-    concatenated corpus (files arrive in doc_id order)."""
-    from aws_ipl_data_pipeline_spark.operators.dedup import segment_dedup
-    from aws_ipl_data_pipeline_spark.streaming.corpus import (
-        run_segment_dedup_ingest,
-    )
-
-    base = str(tmp_path_factory.mktemp("segdedup"))
-    docs_dir = f"{base}/drop"
-    schema = "doc_id long, text string"
-    boiler = "b1 b2 b3 b4"
-    rows1 = [(1, f"{boiler} u1 u2 u3 u4"), (2, boiler)]
-    rows2 = [(10, f"{boiler} n1 n2 n3 n4"), (11, "v1 v2 v3 v4")]
-    b1 = spark.createDataFrame(rows1, schema)
-    b1.write.parquet(f"{docs_dir}/f1.parquet")
-    kwargs = dict(
-        docs_dir=f"{docs_dir}/*",
-        out_path=f"{base}/out",
-        checkpoint_dir=f"{base}/ckpt",
-        schema=b1.schema,
-        seg_tokens=4,
-    )
-    run_segment_dedup_ingest(spark, **kwargs).awaitTermination(300)
-    spark.createDataFrame(rows2, schema).write.parquet(f"{docs_dir}/f2.parquet")
-    run_segment_dedup_ingest(spark, **kwargs).awaitTermination(300)
-
-    got = {
-        r["doc_id"]: (r["text_kept"], r["n_segments_kept"], r["n_tokens_kept"])
-        for r in spark.read.parquet(f"{base}/out").collect()
-    }
-    want_df = segment_dedup(
-        spark.createDataFrame(rows1 + rows2, schema), seg_tokens=4
-    )
-    want = {
-        r["doc_id"]: (r["text_kept"], r["n_segments_kept"], r["n_tokens_kept"])
-        for r in want_df.collect()
-    }
-    assert got == want
-    # sanity on the semantics themselves, not just equivalence
-    assert got[2][0] == "" and got[10][0] == "n1 n2 n3 n4"
-
-    # idempotent rerun with no new files
-    run_segment_dedup_ingest(spark, **kwargs).awaitTermination(300)
-    n = spark.read.parquet(f"{base}/out").count()
-    assert n == 4
-
-
-@pytest.mark.slow
 def test_file_sink_manifest_excludes_orphan_files(spark, tmp_path_factory):
     """The streaming parquet sink's exactly-once story: committed
     batches are listed in _spark_metadata, and a read of the output
@@ -473,203 +294,3 @@ def test_restart_from_checkpoint_is_exactly_once_per_file(
         *[f"cast({c} as {dict(batch.dtypes)[c]}) as {c}" for c in batch.columns]
     )
     assert _canon(streamed) == _canon(batch)
-
-
-@pytest.mark.slow
-def test_covisit_edge_ingest_stream_equals_batch(spark, tmp_path_factory):
-    """Streaming co-visitation edge maintenance: intra-batch transitions
-    plus the tail-stitched boundary transition reproduce the batch
-    operator's edge set exactly; a replayed batch cannot inflate
-    weights (delta idempotence key); a rerun with no new files changes
-    nothing."""
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    from aws_ipl_data_pipeline_spark.operators.graph import covisit_edges
-    from aws_ipl_data_pipeline_spark.streaming.graph import (
-        read_covisit_edges,
-        run_covisit_edge_ingest,
-    )
-
-    base = str(tmp_path_factory.mktemp("covisit"))
-    events_dir = f"{base}/drop"
-    schema = "event_id long, ts timestamp, user_id long, props string"
-    ts = lambda s: datetime.fromisoformat(s)  # noqa: E731
-    b1 = spark.createDataFrame(
-        [
-            (1, ts("2024-01-01 10:00:00"), 1, '{"k": 10}'),
-            (2, ts("2024-01-01 10:01:00"), 1, '{"k": 20}'),
-            (3, ts("2024-01-01 10:00:30"), 2, '{"k": 5}'),
-            (4, ts("2024-01-01 10:02:00"), 2, '{"k": 5}'),  # self: no edge
-        ],
-        schema,
-    )
-    b1.write.parquet(f"{events_dir}/f1.parquet")
-    kwargs = dict(
-        events_dir=f"{events_dir}/*",
-        out_path=f"{base}/edges",
-        checkpoint_dir=f"{base}/ckpt",
-        schema=b1.schema,
-    )
-    run_covisit_edge_ingest(spark, **kwargs).awaitTermination(300)
-    got1 = {
-        (r["src"], r["dst"]): r["w"]
-        for r in read_covisit_edges(spark, f"{base}/edges").collect()
-    }
-    assert got1 == {(10, 20): 1}
-
-    b2 = spark.createDataFrame(
-        [
-            # user 1 boundary: tail 20 -> 30; user 2 boundary 5 -> 5
-            # is a self-transition and must NOT stitch an edge
-            (5, ts("2024-01-01 11:00:00"), 1, '{"k": 30}'),
-            (6, ts("2024-01-01 11:00:30"), 2, '{"k": 5}'),
-            (7, ts("2024-01-01 11:01:00"), 2, '{"k": 7}'),
-            (8, ts("2024-01-01 11:02:00"), 1, '{"k": 10}'),  # 30 -> 10
-            (9, ts("2024-01-01 11:00:00"), 3, '{"k": 1}'),  # lone event
-        ],
-        schema,
-    )
-    b2.write.parquet(f"{events_dir}/f2.parquet")
-    run_covisit_edge_ingest(spark, **kwargs).awaitTermination(300)
-    streamed = {
-        (r["src"], r["dst"]): r["w"]
-        for r in read_covisit_edges(spark, f"{base}/edges").collect()
-    }
-    batch = {
-        (r["src"], r["dst"]): r["w"]
-        for r in covisit_edges(
-            b1.unionByName(b2),
-            F.get_json_object("props", "$.k").cast("long"),
-        ).collect()
-    }
-    assert streamed == batch == {
-        (10, 20): 1,
-        (20, 30): 1,
-        (30, 10): 1,
-        (5, 7): 1,
-    }
-
-    # no new files -> no change
-    run_covisit_edge_ingest(spark, **kwargs).awaitTermination(300)
-    again = {
-        (r["src"], r["dst"]): r["w"]
-        for r in read_covisit_edges(spark, f"{base}/edges").collect()
-    }
-    assert again == streamed
-
-    # at-least-once replay: re-appending a batch's identical delta rows
-    # must not inflate weights (the (batch_id, src, dst) key dedupes)
-    deltas = spark.read.parquet(f"{base}/edges")
-    deltas.write.mode("append").parquet(f"{base}/edges")
-    replayed = {
-        (r["src"], r["dst"]): r["w"]
-        for r in read_covisit_edges(spark, f"{base}/edges").collect()
-    }
-    assert replayed == streamed
-
-    # TRUE foreachBatch replay: re-running a batch whose first attempt
-    # already appended deltas AND tails must not stitch phantom
-    # boundary edges — the batch_id visibility filter hides the
-    # attempt's own tail rows, so it recomputes identical deltas
-    from aws_ipl_data_pipeline_spark.streaming.graph import (
-        compact_covisit_tails,
-        process_covisit_batch,
-    )
-
-    process_covisit_batch(spark, b2, 1, f"{base}/edges", f"{base}/edges_tail")
-    after_replay = {
-        (r["src"], r["dst"]): r["w"]
-        for r in read_covisit_edges(spark, f"{base}/edges").collect()
-    }
-    assert after_replay == streamed
-
-    # tail compaction preserves the stitch view for future batches
-    compact_covisit_tails(spark, f"{base}/edges_tail")
-    tails = spark.read.parquet(f"{base}/edges_tail")
-    assert tails.groupBy("user_id").count().agg(
-        F.max("count")
-    ).collect()[0][0] == 1
-    b3 = spark.createDataFrame(
-        [(20, ts("2024-01-01 12:00:00"), 1, '{"k": 20}')], schema
-    )
-    process_covisit_batch(spark, b3, 2, f"{base}/edges", f"{base}/edges_tail")
-    final = {
-        (r["src"], r["dst"]): r["w"]
-        for r in read_covisit_edges(spark, f"{base}/edges").collect()
-    }
-    assert final == {**streamed, (10, 20): 2}  # tail 10 -> 20 stitched
-
-
-def test_ivf_stats_stay_current_under_streaming(spark, tmp_path_factory):
-    """The filtered-probe stats table under streaming maintenance
-    (r11): the initial build writes authoritative stats; each ingest
-    batch appends PARTIAL stats rows (no index scan), so summed counts
-    stay exact under clean delivery — the materialized filtered probe
-    over the LIVE index equals the in-memory filtered_ivf_topk over
-    everything ingested. After an at-least-once retry the stats
-    overcount (documented recall-side bias) and refresh_ivf_stats run
-    post-compaction restores exact counts."""
-    from pyspark.sql import functions as F
-
-    from aws_ipl_data_pipeline_spark.operators.similarity import (
-        add_ivf_cell,
-        filtered_ivf_topk,
-        filtered_probe_ivf_index,
-        refresh_ivf_stats,
-        write_ivf_index,
-    )
-    from aws_ipl_data_pipeline_spark.streaming.ann import run_ivf_index_ingest
-
-    base = str(tmp_path_factory.mktemp("ivfstats"))
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    first = emb.where(F.col("vec_id") < 300)
-    late = emb.where(F.col("vec_id") >= 300)
-
-    cents = write_ivf_index(
-        first, f"{base}/index", n_cells=8, stats_cols=["label"]
-    )
-    drop = f"{base}/drop"
-    late.write.parquet(f"{drop}/f1.parquet")
-    kwargs = dict(
-        emb_dir=f"{drop}/*",
-        index_path=f"{base}/index",
-        checkpoint_dir=f"{base}/ckpt",
-        schema=emb.schema,
-        centroids=cents,
-        stats_cols=["label"],
-    )
-    run_ivf_index_ingest(spark, **kwargs).awaitTermination(300)
-
-    stats = spark.read.parquet(f"{base}/index__stats")
-    assert stats.agg(F.sum("cnt")).head()[0] == emb.count()
-
-    qrow = emb.where(F.col("vec_id") == 0).head()
-    q = [float(x) for x in qrow["embedding"]]
-    pred = F.col("label") == F.lit(qrow["label"])
-    live = filtered_probe_ivf_index(
-        spark, f"{base}/index", cents, q, pred, k=10, n_probe=2,
-        min_candidates=30,
-    ).collect()
-    mem = filtered_ivf_topk(
-        add_ivf_cell(emb, cents), cents, q, pred, k=10, n_probe=2,
-        min_candidates=30,
-    ).collect()
-    assert [tuple(r) for r in live] == [tuple(r) for r in mem]
-
-    # at-least-once retry: stats overcount until the compaction-time
-    # refresh recomputes them from the physical index
-    run_ivf_index_ingest(
-        spark, **{**kwargs, "checkpoint_dir": f"{base}/ckpt_retry"}
-    ).awaitTermination(300)
-    over = spark.read.parquet(f"{base}/index__stats").agg(F.sum("cnt")).head()[0]
-    assert over == emb.count() + late.count()  # exact overcount shape
-    # compaction stand-in: physical dedupe rewrite, then stats refresh
-    deduped = spark.read.parquet(f"{base}/index").dropDuplicates(["vec_id"])
-    deduped.write.partitionBy("cell").mode("overwrite").parquet(
-        f"{base}/index_compacted"
-    )
-    refresh_ivf_stats(spark, f"{base}/index_compacted", ["label"])
-    fresh = spark.read.parquet(f"{base}/index_compacted__stats")
-    assert fresh.agg(F.sum("cnt")).head()[0] == emb.count()
